@@ -180,10 +180,10 @@ def _as_str_array(xs) -> np.ndarray:
     return out
 
 
-def _default_chunk() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_KERNEL_CHUNK", "8192"))
+# pairs per kernel chunk: 8192 measured best (smaller chunks push the
+# per-position scan into Python-interpreter overhead, larger ones exceed
+# the Arrow batch anyway)
+_KERNEL_CHUNK = 8192
 
 
 import sys as _sys
@@ -229,11 +229,9 @@ def _pair_chunks(a: np.ndarray, b: np.ndarray, chunk: int):
 def jaro_similarity(a, b, chunk: int | None = None) -> np.ndarray:
     """Vectorized Jaro similarity over paired string batches.
 
-    ``chunk`` bounds the (chunk, La, Lb) match tensors; 8192 measured best
-    on this box (smaller chunks push the per-position scan into Python-
-    interpreter overhead, larger ones exceed the Arrow batch anyway).
-    Override via SPARK_GRAFT_KERNEL_CHUNK."""
-    chunk = chunk or _default_chunk()
+    ``chunk`` bounds the (chunk, La, Lb) match tensors; default
+    ``_KERNEL_CHUNK``."""
+    chunk = chunk or _KERNEL_CHUNK
     a = _as_str_array(a)
     b = _as_str_array(b)
     # batch-level similarity cache: score_pairs runs BOTH jaro_distance and
@@ -277,14 +275,7 @@ def _jaro_chunk(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
     # match window: floor(max(la,lb)/2) - 1, clamped at 0
     win = np.maximum(np.maximum(la, lb) // 2 - 1, 0)  # (n,)
-    if Lb <= 64 and A.dtype == np.uint8 and _JARO_PM_TABLE and _LITTLE_ENDIAN:
-        # (endian gate: _greedy_packed's used-bit unpack views uint64 words
-        # as little-endian bytes, same assumption as the packed path)
-        # experiment path (env SPARK_GRAFT_JARO_PM=1): ~25% less DRAM
-        # traffic per chunk, a bit more single-core time — for probing the
-        # bandwidth-bound 32-core cell
-        match_a, used_b = _assign_matches_pm(A, B, win)
-    elif Lb <= 64 and _LITTLE_ENDIAN:
+    if Lb <= 64 and _LITTLE_ENDIAN:
         eq = A[:, :, None] == B[:, None, :]  # (n, La, Lb)
         match_a, used_b = _assign_matches_packed(eq, win)
     else:
@@ -342,11 +333,6 @@ def _assign_matches_bool(eq: np.ndarray, win: np.ndarray):
     return match_a, used_b
 
 
-import os as _os
-
-_JARO_PM_TABLE = _os.environ.get("SPARK_GRAFT_JARO_PM", "0") == "1"
-
-
 def _window_table(win: np.ndarray, La: int) -> np.ndarray:
     """(wmax+1, La) uint64 LUT of bit-range window masks |i-j| <= w; gather
     rows with ``wtab[win]``. Masks depend only on (w, i) and w is a small
@@ -383,34 +369,6 @@ def _greedy_packed(packed: np.ndarray, Lb: int):
     # transposition pass consumes (one cheap pass, not per-position)
     ub = np.unpackbits(used.view(np.uint8).reshape(n, 8), axis=1, bitorder="little")
     return match_a, ub[:, :Lb].astype(bool)
-
-
-def _assign_matches_pm(A: np.ndarray, B: np.ndarray, win: np.ndarray):
-    """Candidate masks via a Myers-style pattern-mask table instead of the
-    (n, La, Lb) eq tensor: PM[row, c] = bitmask of positions j with
-    B[row, j] == c, over the chunk's DENSE alphabet (LUT byte→id, id 0
-    reserved for absent/pads). packed[row, i] = PM[row, id(A[row, i])].
-    O(n·(La+Lb)) gather/scatter and ~25% less DRAM traffic than
-    eq+packbits, at slightly more single-core time — the experiment path
-    for the bandwidth-bound 32-core cell (SPARK_GRAFT_JARO_PM=1)."""
-    n, La = A.shape
-    Lb = B.shape[1]
-    one = np.uint64(1)
-    rows = np.arange(n)
-    present = np.zeros(256, dtype=bool)
-    present[B.ravel()] = True
-    present[_U8_PAD[-2]] = False  # B pads never match anything
-    lut = np.zeros(256, dtype=np.int64)
-    ids = np.flatnonzero(present)
-    lut[ids] = np.arange(1, len(ids) + 1)
-    PM = np.zeros((n, len(ids) + 1), dtype=np.uint64)
-    Bm = lut[B]
-    for j in range(Lb):
-        PM[rows, Bm[:, j]] |= one << np.uint64(j)
-    PM[:, 0] = 0  # absent/pad slot: A pads (0xFF, never in B) land here
-    packed = PM[rows[:, None], lut[A]]
-    packed &= _window_table(win, La)[win]
-    return _greedy_packed(packed, Lb)
 
 
 def _assign_matches_packed(eq: np.ndarray, win: np.ndarray):
@@ -483,7 +441,7 @@ def qgram_cosine_distance(a, b, q: int = 1, chunk: int | None = None) -> np.ndar
     distance = 1 - cos(counts_a, counts_b) over q-gram count vectors.
     Strings shorter than q (incl. empty) yield NaN like stringdist.
     """
-    chunk = chunk or _default_chunk()
+    chunk = chunk or _KERNEL_CHUNK
     a = _as_str_array(a)
     b = _as_str_array(b)
     n = len(a)

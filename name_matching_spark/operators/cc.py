@@ -83,8 +83,8 @@ def _checksum(e: DataFrame) -> tuple[int, int]:
 # instead of name strings: the id mapping costs ~4 fixed jobs (range
 # repartition + offset collect + edge relabel + final join-back), which the
 # per-round shuffle savings only repay once the edge set is large. Below it
-# (contract queries, small fixtures) strings are net faster. Env-overridable
-# so tests can force either path on small graphs.
+# (contract queries, small fixtures) strings are net faster. Tests force
+# either path on small graphs through the ``int_ids`` argument.
 CC_INT_ID_THRESHOLD = 1_000_000
 
 
@@ -100,8 +100,6 @@ def connected_components(
 
     ``int_ids``: None (default) auto-selects by edge count — the count is
     free, the first convergence checksum computes it anyway."""
-    import os
-
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u").isNotNull() & F.col("v").isNotNull()
     )
@@ -117,11 +115,7 @@ def connected_components(
     e = materialize(e, eager=True)
     prev = _checksum(e)
     if int_ids is None:
-        forced = os.environ.get("SPARK_GRAFT_CC_INT_IDS")
-        if forced is not None:
-            int_ids = forced == "1"
-        else:
-            int_ids = prev[0] >= CC_INT_ID_THRESHOLD
+        int_ids = prev[0] >= CC_INT_ID_THRESHOLD
     mapping = None
     if int_ids:
         # names → rank-ordered dense int64 ids (order-isomorphic: min(id)

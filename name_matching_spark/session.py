@@ -15,8 +15,37 @@ unchanged on a multi-executor cluster:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# Default driver heap: a quarter of the host's MemTotal, capped at the 48g
+# the engine was tuned with on large hosts. The rest of the host is left to
+# the JVM's off-heap memory, one Python worker per core and the page cache:
+# a fixed 48g let the local-mode JVM grow to ~12 GB RSS on a 15 GB host
+# until the kernel killed it. Without a MemTotal line (non-Linux hosts) the
+# heap falls back to 4g.
+_HEAP_SHARE = 4
+_HEAP_CAP_MB = 48 * 1024
+_HEAP_FALLBACK = "4g"
+
+
+def default_driver_memory(meminfo: str) -> str:
+    """``spark.driver.memory`` for a host whose ``/proc/meminfo`` reads
+    ``meminfo``: MemTotal / 4 in MiB, at most 48g, at least 1g."""
+    m = re.search(r"^MemTotal:\s+(\d+)\s*kB", meminfo, re.MULTILINE)
+    if m is None:
+        return _HEAP_FALLBACK
+    mb = int(m.group(1)) // 1024 // _HEAP_SHARE
+    return f"{max(1024, min(mb, _HEAP_CAP_MB))}m"
+
+
+def _host_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return default_driver_memory(f.read())
+    except OSError:
+        return _HEAP_FALLBACK
 
 
 def get_spark(
@@ -27,18 +56,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count — at cluster
-    scale this is overridden to ~2-3x total cores via ``extra_conf`` or
-    left to AQE coalescing.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    host's core count). The driver heap is ``$SPARK_DRIVER_MEM`` (default:
+    ``default_driver_memory`` of this host). ``shuffle_partitions``
+    defaults to the local core count — at cluster scale this is overridden
+    to ~2-3x total cores via ``extra_conf`` or left to AQE coalescing.
     """
-    # must precede JVM launch: driver-side streaming python runners
-    # (transformWithState pre-init) read PYTHONPATH from the JVM env
-    from .vendor import ensure_worker_pythonpath
-
-    ensure_worker_pythonpath()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N; local[*] → cpu count
@@ -62,11 +87,11 @@ def get_spark(
         # measured best at both local[8] and local[32] (the kernels chunk
         # internally at 8192, so bigger batches only cut per-batch JVM/Python
         # dispatch overhead — 10k/20k/50k sweep, bench.py --score-job).
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "20000"),
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _host_driver_memory(),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

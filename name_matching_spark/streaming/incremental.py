@@ -1,7 +1,7 @@
 """Incremental entity assignment — a custom stateful streaming operator.
 
 The batch pipeline resolves the whole corpus at once (match → screen →
-CC). A continuously-fed table wants the streaming twin for the append-only
+CC). A continuously-fed table wants a streaming path for the append-only
 path: as documents land, each NEW name is assigned to an existing entity
 cluster immediately, and only periodic batch re-resolves reconcile drift
 (the lambda shape the reference's re-runnable makefile implies).
@@ -22,14 +22,11 @@ O(#names): assigned names are NOT retained. Kill the query and restart
 with the same checkpoint and the representative table is restored exactly
 (tests/test_streaming.py).
 
-Two interchangeable implementations share the assignment core
-(``_assign_names``): ``start_incremental_assign`` on
-``applyInPandasWithState`` (runs on any state store provider), and
-``start_incremental_assign_tws`` on Spark 4's
-``transformWithStateInPandas`` (RocksDB-only), whose ``initialState``
-hook seeds a restarted query's state from the assignment log — including
-reps created by the batch ``reconcile_overflow`` — so reconciled entities
-are matchable in-stream immediately after a restart."""
+One implementation, ``start_incremental_assign``, runs on any state store
+provider. Its ``initial_reps`` seed (typically ``rep_state(...)``) lets a
+restart on a fresh checkpoint start from the assignment log's rep universe
+— including reps created by the batch ``reconcile_overflow`` — so
+reconciled entities are matchable in-stream immediately after a restart."""
 
 from __future__ import annotations
 
@@ -80,16 +77,16 @@ def _assign_names(
     jaro_threshold: float,
     max_reps_per_key: int,
 ) -> list[dict[str, Any]]:
-    """The assignment core shared by both stateful implementations: score
-    each new name against the key's representatives with the batch Jaro
-    kernel; join the closest within threshold, else become a new rep (if
-    the rep set has room) or route to the overflow side-output. Mutates
-    ``reps`` in place so the caller can persist the updated state.
+    """The assignment core of the stateful assigner: score each new name
+    against the key's representatives with the batch Jaro kernel; join the
+    closest within threshold, else become a new rep (if the rep set has
+    room) or route to the overflow side-output. Mutates ``reps`` in place
+    so the caller can persist the updated state.
 
     ``max_reps_per_key`` caps GROWTH only: a state seeded above the cap
-    (restart with reconciled singletons folded in — see
-    ``start_incremental_assign_tws``) keeps matching against every seeded
-    rep; it just admits no further new ones."""
+    (restart with reconciled singletons folded in through
+    ``initial_reps``) keeps matching against every seeded rep; it just
+    admits no further new ones."""
     import numpy as np
 
     from ..functions.strings import jaro_distance
@@ -191,12 +188,10 @@ def start_incremental_assign(
     folding reconciled reps back in so near-duplicates of reconciled
     entities match in-stream. applyInPandasWithState has no initial-state
     hook, so the seed travels as a BROADCAST map consulted the first time
-    each key appears — fine for rep universes that fit in executor memory
-    (reps are capped per key; ~10⁷ reps ≈ hundreds of MB). Beyond that,
-    use ``start_incremental_assign_tws``: Spark 4's transformWithState
-    distributes the seed through the state store itself (needs the
-    ``protobuf`` package). A seeded key may exceed ``max_reps_per_key``
-    (cap + reconciled singletons); the cap still blocks further growth."""
+    each key appears; the rep universe must fit in executor memory
+    (reps are capped per key; ~10⁷ reps ≈ hundreds of MB). A seeded key
+    may exceed ``max_reps_per_key`` (cap + reconciled singletons); the cap
+    still blocks further growth."""
     seed_bc = None
     if initial_reps is not None:
         # the seed is consulted only when state.exists is False, so on a
@@ -210,9 +205,8 @@ def start_incremental_assign(
             warnings.warn(
                 "start_incremental_assign: initial_reps was passed with an "
                 "existing non-empty checkpoint_dir — the seed applies only "
-                "to keys with no prior state. Use a fresh checkpoint (or "
-                "start_incremental_assign_tws, whose initial state merges "
-                "through the state store) to seed every key.",
+                "to keys with no prior state. Restart on a fresh "
+                "checkpoint_dir to seed every key.",
                 RuntimeWarning,
                 stacklevel=2,
             )
@@ -230,9 +224,21 @@ def start_incremental_assign(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _start_assign_writer(
-        assigned, table_dir, checkpoint_dir, trigger_available_now
+    out_dir = os.path.join(table_dir, "assignments")
+
+    def _sink(batch: DataFrame, batch_id: int) -> None:
+        batch.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch_id={batch_id}")
+        )
+
+    writer = (
+        assigned.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
     )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def _blocked_name_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -264,75 +270,6 @@ def _blocked_name_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
-def _start_assign_writer(
-    assigned: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool,
-):
-    out_dir = os.path.join(table_dir, "assignments")
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    writer = (
-        assigned.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _make_assign_processor(jaro_threshold: float, max_reps_per_key: int):
-    """Build the StatefulProcessor for ``transformWithStateInPandas`` —
-    the Spark-4 stateful API whose ``initialState`` lets a RESTARTED query
-    seed its per-key rep state from the assignment log (including reps
-    created by ``reconcile_overflow``), closing the re-overflow loop the
-    applyInPandasWithState path can only converge through repeated
-    reconciles. A factory (class defined inside) because the base-class
-    import requires pyspark ≥ 4.0."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class P(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._reps = handle.getValueState("reps", _STATE_SCHEMA)
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            reps = sorted(set(initialState["rep"].dropna().tolist()))
-            if reps:
-                self._reps.update((_REP_SEP.join(reps),))
-
-        def handleInputRows(self, key, rows, timerValues):
-            (block_key,) = key
-            reps: list[str] = []
-            if self._reps.exists():
-                (packed,) = self._reps.get()
-                if packed:
-                    reps = packed.split(_REP_SEP)
-            names: list[str] = []
-            for pdf in rows:
-                names.extend(pdf["name"].tolist())
-            out_rows = _assign_names(
-                block_key, names, reps, jaro_threshold, max_reps_per_key
-            )
-            self._reps.update((_REP_SEP.join(reps),))
-            yield pd.DataFrame(
-                out_rows, columns=[f.name for f in ASSIGN_SCHEMA.fields]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return P()
-
-
 def rep_state(spark: SparkSession, table_dir: str) -> DataFrame:
     """(block_key, rep) — the current representative universe from the
     assignment log, the seed for a state-carrying restart.
@@ -350,88 +287,6 @@ def rep_state(spark: SparkSession, table_dir: str) -> DataFrame:
         .select("block_key", F.col("cluster_rep").alias("rep"))
         .distinct()
     )
-
-
-def start_incremental_assign_tws(
-    spark: SparkSession,
-    source_dir: str,
-    table_dir: str,
-    checkpoint_dir: str,
-    jaro_threshold: float = 0.15,
-    trigger_available_now: bool = True,
-    max_reps_per_key: int = 512,
-    initial_reps: DataFrame | None = None,
-    ship_pbshim_to_executors: bool | None = None,
-):
-    """``transformWithStateInPandas`` twin of ``start_incremental_assign``.
-
-    Same assignment semantics (shared ``_assign_names`` core), plus
-    ``initial_reps``: a (block_key, rep) DataFrame — typically
-    ``rep_state(spark, table_dir)`` — folded into per-key state when the
-    query starts on a FRESH checkpoint. This closes the documented
-    applyInPandasWithState caveat: after a reconcile, restart with
-    ``initial_reps=rep_state(...)`` and arrivals near a reconciled
-    singleton match it IN the stream instead of deterministically
-    re-overflowing until the next batch reconcile.
-
-    A seeded key may hold more than ``max_reps_per_key`` reps (cap +
-    reconciled singletons); the cap still blocks further GROWTH, so state
-    stays bounded by cap + #reconciles. Unlike the broadcast seed on the
-    applyInPandasWithState path, the seed here is distributed through the
-    state store itself — no driver-side materialization — making this the
-    at-scale restart path.
-
-    Requires the RocksDB state store (transformWithState does not run on
-    the HDFS-backed provider) and a ``google.protobuf`` runtime (the
-    transformWithState state protocol is protobuf-encoded). Environments
-    without the protobuf package fall back to the vendored minimal
-    clean-room runtime (``name_matching_spark.vendor.ensure_protobuf``),
-    which is shipped to executor Python workers via ``addPyFile`` — so
-    this path runs everywhere and is the documented default for rep
-    universes beyond the broadcast-seed bound of
-    ``start_incremental_assign``. On a heterogeneous cluster whose
-    DRIVER has protobuf but whose executor images lack it, pass
-    ``ship_pbshim_to_executors=True`` (the auto default only ships when
-    the driver itself needed the shim — see ``ensure_protobuf``).
-
-    Side effect, deliberate and documented: the state-store provider is a
-    SESSION conf (Spark has no per-query override), so this sets it to
-    RocksDB and leaves it set while the query runs — restoring it
-    mid-query would hand later micro-batch replans a different provider.
-    If ``start()`` fails, the previous value IS restored, so a failed
-    attempt never contaminates unrelated queries."""
-    from ..vendor import ensure_protobuf
-
-    ensure_protobuf(spark, ship_to_executors=ship_pbshim_to_executors)
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        names = _blocked_name_stream(spark, source_dir)
-        init = (
-            initial_reps.groupBy("block_key") if initial_reps is not None else None
-        )
-        assigned = names.groupBy("block_key").transformWithStateInPandas(
-            statefulProcessor=_make_assign_processor(
-                jaro_threshold, max_reps_per_key
-            ),
-            outputStructType=ASSIGN_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-            initialState=init,
-        )
-        return _start_assign_writer(
-            assigned, table_dir, checkpoint_dir, trigger_available_now
-        )
-    except Exception:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-        raise
 
 
 def read_assignments(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -494,9 +349,10 @@ def reconcile_overflow(
     ``is_new_cluster=True`` and are therefore part of the rep universe
     this pass scores against. Eventually consistent, never silent
     (tests/test_streaming.py::test_reconcile_reoverflow_converges). The
-    strong variant: restart via ``start_incremental_assign_tws`` with
-    ``initial_reps=rep_state(...)`` and the reconciled reps re-enter state
-    directly, so the near-duplicate matches in-stream.
+    strong variant: restart via ``start_incremental_assign(...,
+    initial_reps=rep_state(...))`` on a fresh checkpoint and the
+    reconciled reps re-enter state directly, so the near-duplicate matches
+    in-stream.
 
     Returns the number of names reconciled. Scale shape: one blocked
     equi-join (overflow ⋈ reps on block_key) + mapInPandas scoring — the

@@ -367,13 +367,12 @@ def test_reconcile_reoverflow_converges(spark, tmp_path):
     assert reconcile_overflow(spark, table) == 0
 
 
-def _seeded_restart_closes_reoverflow(spark, tmp_path, restart):
+def test_seeded_restart_closes_reoverflow(spark, tmp_path):
     # A restart seeded with rep_state() folds reconciled singleton reps
     # back into per-key state, so a near-duplicate of a reconciled rep
     # matches IN the stream (overflow=False) instead of deterministically
     # re-overflowing until the next batch reconcile (VERDICT r3 item 4,
-    # strong variant). ``restart(spark, src, table, ckpt, initial_reps)``
-    # starts the seeded query — broadcast-seed or TWS flavor.
+    # strong variant).
     from name_matching_spark.streaming.incremental import (
         read_assignments,
         reconcile_overflow,
@@ -399,7 +398,9 @@ def _seeded_restart_closes_reoverflow(spark, tmp_path, restart):
     t2 = str(tmp_path / "t2")
     c2 = str(tmp_path / "c2")
     _write_docs(spark, src, [("d3", [_span("KYUTO PETROLEUM")])])
-    q2 = restart(spark, src, t2, c2, rep_state(spark, t1))
+    q2 = start_incremental_assign(
+        spark, src, t2, c2, max_reps_per_key=2, initial_reps=rep_state(spark, t1)
+    )
     q2.awaitTermination(180)
     rows = {r["name"]: r for r in read_assignments(spark, t2).collect()}
     ky = rows["KYUTO"]
@@ -415,17 +416,6 @@ def _seeded_restart_closes_reoverflow(spark, tmp_path, restart):
     # is_new_cluster filter would lose the universe at generation 3)
     gen2_reps = {r["rep"] for r in rep_state(spark, t2).collect()}
     assert {"KATO", "KETO", "KUTO"} <= gen2_reps
-
-
-def test_seeded_restart_closes_reoverflow(spark, tmp_path):
-    from name_matching_spark.streaming.incremental import start_incremental_assign
-
-    _seeded_restart_closes_reoverflow(
-        spark, tmp_path,
-        lambda s, src, t, c, seed: start_incremental_assign(
-            s, src, t, c, max_reps_per_key=2, initial_reps=seed
-        ),
-    )
 
 
 def test_seed_with_existing_checkpoint_warns(spark, tmp_path):
@@ -450,24 +440,6 @@ def test_seed_with_existing_checkpoint_warns(spark, tmp_path):
             spark, src, table, ckpt, initial_reps=rep_state(spark, table)
         )
     q2.awaitTermination(120)
-
-
-def test_tws_seeded_restart_closes_reoverflow(spark, tmp_path):
-    # same semantics through Spark 4's transformWithStateInPandas, whose
-    # initialState hook distributes the seed via the state store itself —
-    # the at-scale restart path. The protobuf-encoded state protocol runs
-    # on the vendored minimal runtime where the protobuf package is
-    # absent (name_matching_spark/vendor/pbshim), so this no longer skips
-    from name_matching_spark.streaming.incremental import (
-        start_incremental_assign_tws,
-    )
-
-    _seeded_restart_closes_reoverflow(
-        spark, tmp_path,
-        lambda s, src, t, c, seed: start_incremental_assign_tws(
-            s, src, t, c, max_reps_per_key=2, initial_reps=seed
-        ),
-    )
 
 
 def test_compaction_replay_and_crash_safety(spark, tmp_path):

@@ -206,44 +206,6 @@ def test_packed_and_bool_assignment_paths_agree():
     assert np.array_equal(got, want)
 
 
-def test_pm_table_path_agrees_with_packed():
-    # the Myers-style pattern-mask candidate build (SPARK_GRAFT_JARO_PM=1,
-    # the lower-DRAM-traffic experiment path for the bandwidth-bound
-    # 32-core cell) must agree exactly with the default eq-tensor +
-    # packbits path, including pads (A pads 0xFF land in the reserved
-    # absent slot, B pads 0xFE are excluded from the dense alphabet) and
-    # the length-bucketed chunk scatter.
-    import name_matching_spark.functions.strings as S
-
-    rng = random.Random(23)
-    alph = string.ascii_uppercase + " -0123456789"
-    pairs = []
-    for _ in range(3000):
-        la = rng.choice([1, 2, 5, 12, 30, 63, 64])
-        a = "".join(rng.choice(alph) for _ in range(la))
-        if rng.random() < 0.6:
-            b = list(a)
-            for _ in range(rng.randint(0, 8)):
-                if b and rng.random() < 0.5:
-                    b[rng.randrange(len(b))] = rng.choice(alph)
-                else:
-                    b.insert(rng.randint(0, len(b)), rng.choice(alph))
-            b = "".join(b)
-        else:
-            b = "".join(rng.choice(alph) for _ in range(rng.randint(0, 60)))
-        pairs.append((a, b))
-    a = np.array([x for x, _ in pairs], dtype=object)
-    b = np.array([y for _, y in pairs], dtype=object)
-    want = S.jaro_similarity(a, b, chunk=1 << 20)
-    prev = S._JARO_PM_TABLE
-    S._JARO_PM_TABLE = True
-    try:
-        got = S.jaro_similarity(a, b, chunk=256)  # bucketed, scattered
-    finally:
-        S._JARO_PM_TABLE = prev
-    assert np.array_equal(got, want)
-
-
 def test_jaro_winkler_boost_threshold():
     # standard Winkler rule: no prefix bonus unless base jaro > 0.7 —
     # matches DuckDB bit-for-bit (divergent pre-round-4: the bonus was
