@@ -51,8 +51,6 @@ def main(argv: list[str]) -> int:
     from name_matching_spark.checkpoint import resolve_entities_checkpointed
 
     if args.fixtures:
-        import os
-
         from name_matching_spark.datagen import ensure_fixtures
 
         fx = ensure_fixtures(args.fixtures)

@@ -307,8 +307,11 @@ def resolve_entities_checkpointed(
     corpus_fingerprint: object = None,
     **match_kwargs,
 ):
-    """The resolve_entities pipeline staged through a CheckpointManager —
-    kill it after any stage and a re-run resumes from the next one.
+    """The resolve driver: documents(doc_id, spans) → entity clusters, as
+    the reference makefile DAG (makefile:33-152) staged through one
+    CheckpointManager — kill it after any stage and a re-run resumes from
+    the next one. Returns ``(mgr, clusters)``; each stage's output is
+    ``mgr.results[stage].df``.
 
     ``corpus_fingerprint`` identifies the input data (e.g. a snapshot id or
     path+mtime); it seeds the first stage's fingerprint chain.
@@ -316,7 +319,7 @@ def resolve_entities_checkpointed(
     from .operators.address import match_addresses
     from .operators.cc import name_clusters
     from .operators.extract import extract_names
-    from .operators.prescreen import pre_screen
+    from .operators.prescreen import APPROX_PERCENTILE_THRESHOLD, pre_screen
     from .pipeline import match_names
 
     spark = documents.sparkSession
@@ -347,10 +350,6 @@ def resolve_entities_checkpointed(
         bucket_by=["name", "match"],
         sort_by=["name", "match"],
     )
-    # the stage just wrote master to parquet (or skipped — list empty), so
-    # the run's pinned weights/parse tables are releasable now
-    for res in _mn_results:
-        res.release()
     addr_pairs = (
         mgr.stage(
             "match_addresses",
@@ -360,6 +359,12 @@ def resolve_entities_checkpointed(
         if addresses is not None
         else None
     )
+    # the name count for the percentile switch is the extract stage's own
+    # row count (write or manifest): no Spark job, no fingerprint change
+    exact_pct = mgr.results["extract_names"].rows <= APPROX_PERCENTILE_THRESHOLD
+    # a fresh match run hands its persisted parse to the cross-surname
+    # screen; a resume that skipped match_names passes None (re-parse)
+    name_parts = _mn_results[0].name_parts if _mn_results else None
     screened = mgr.stage(
         "pre_screen",
         lambda: pre_screen(
@@ -369,6 +374,8 @@ def resolve_entities_checkpointed(
             labeled_pairs=labels,
             num_trees=num_trees,
             auto_accept=auto_accept,
+            exact_percentiles=exact_pct,
+            name_parts=name_parts,
         ),
         depends_on=["match_names"]
         + (["match_addresses"] if addresses is not None else []),
@@ -377,6 +384,10 @@ def resolve_entities_checkpointed(
         bucket_by=["name", "match"],
         sort_by=["name", "match"],
     )
+    # pre_screen has written its output (or skipped), so the match run's
+    # pinned weights/parse tables are releasable now
+    for res in _mn_results:
+        res.release()
     clusters = mgr.stage(
         "cluster",
         lambda: name_clusters(screened),

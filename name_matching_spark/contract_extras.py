@@ -1373,11 +1373,11 @@ def _q_incremental(spark: SparkSession, sf_dir: str, member_sample_k: int) -> Da
 
     def shared_only_match(universe, **kw):
         u = prepare_names(universe)
-        scored, dropped = shared_word_pairs(u, "bag_shared", max_block=1_000_000)
+        scored, _ = shared_word_pairs(u, "bag_shared", max_block=1_000_000)
         master = scored.withColumn(
             "jw_distance", F.lit(None).cast("double")
         ).withColumn("cosine_similarity", F.lit(None).cast("double"))
-        return MatchNamesResult(master=master, dropped_blocks=dropped)
+        return MatchNamesResult(master=master)
 
     prior_mm = shared_only_match(prior_names)
     prior = name_clusters(

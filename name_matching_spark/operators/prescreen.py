@@ -102,7 +102,7 @@ def importance_distance_udf(max_thr: float, min_thr: float, ratio: float):
     return pandas_udf(_dist, DoubleType())
 
 
-# above this many names, resolve_entities switches the p70/p90 computation
+# above this many names, the resolve driver switches the p70/p90 computation
 # to approx_percentile: exact percentile buffers every value in a single
 # aggregation state, which is a memory bomb at 10^9+ distinct names, while
 # the sketch is O(accuracy) memory with ±1e-4 rank error — far inside the
@@ -336,11 +336,6 @@ def rf_thresholds(
     )
     scored.unpersist()
     return cutoff, max(accept, cutoff)
-
-
-def rf_cutoff(train: DataFrame, num_trees: int = 500, seed: int = 42) -> float:
-    """The reviewer-routing cutoff alone (see rf_thresholds)."""
-    return rf_thresholds(train, num_trees=num_trees, seed=seed)[0]
 
 
 # ---------------------------------------------------------------------------

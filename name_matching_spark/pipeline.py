@@ -46,7 +46,6 @@ from .operators.tfidf import paired_cosine, tfidf_cosine_pairs, token_weights
 @dataclass
 class MatchNamesResult:
     master: DataFrame          # the candidate-pair table with all scores
-    dropped_blocks: DataFrame  # hot block keys excluded from pair joins (lineage)
     name_parts: DataFrame | None = None  # human-channel parse (persisted),
     # reused by pre_screen's cross-surname rule instead of re-parsing
     caches: list = field(default_factory=list)  # tables this run persisted
@@ -171,12 +170,12 @@ def match_names(
     block_caches: list = []
 
     # --- channel 3: shared word (match_names.R:643-654)
-    shared, dropped_shared = shared_word_pairs(
+    shared, _ = shared_word_pairs(
         prepped, "bag_shared", max_block=max_block, registry=block_caches
     )
 
     # --- channel 4: Jaro on cleaned names (match_names.R:660-674)
-    cand, dropped_jaro = jaro_candidates(
+    cand, _ = jaro_candidates(
         prepped, max_block, lsh_hashes, lsh_bands, registry=block_caches
     )
     cand = (
@@ -197,14 +196,8 @@ def match_names(
     master = merge_score_channels(
         cosine, shared, jaro, human, prepped, weights, block_caches=block_caches
     )
-    dropped = dropped_shared.withColumn("channel", F.lit("shared_word")).unionByName(
-        dropped_jaro.withColumnsRenamed({"bkey": "token"}).withColumn(
-            "channel", F.lit("jaro")
-        )
-    )
     return MatchNamesResult(
-        master=master, dropped_blocks=dropped, name_parts=name_parts,
-        caches=[weights, name_parts],
+        master=master, name_parts=name_parts, caches=[weights, name_parts]
     )
 
 
@@ -395,78 +388,3 @@ def incremental_resolve(
     ).select("name", "match")
     prior_edges = prior_clusters.select("name", F.col("group_name").alias("match"))
     return name_clusters(accepted.unionByName(prior_edges))
-
-
-@dataclass
-class ResolutionResult:
-    names: DataFrame        # (name, n)
-    master: DataFrame       # scored candidate pairs
-    screened: DataFrame     # master + keep / rf_prob / importance_dist
-    clusters: DataFrame     # (name, cluster, group_name)
-    dropped_blocks: DataFrame
-    caches: list = field(default_factory=list)  # this run's pinned tables
-
-    def release(self) -> None:
-        """Unpersist this run's pinned tables (names + match_names' weights
-        and human parse) once the outputs have been materialized — for
-        long-lived sessions that resolve repeatedly (see
-        MatchNamesResult.release)."""
-        for df in self.caches:
-            df.unpersist()
-        self.caches.clear()
-
-
-def resolve_entities(
-    documents: DataFrame,
-    addresses: DataFrame | None = None,
-    labels: DataFrame | None = None,
-    reviewed: DataFrame | None = None,
-    prior_clusters: DataFrame | None = None,
-    num_trees: int = 100,
-    auto_accept: bool = True,
-    **match_kwargs,
-) -> ResolutionResult:
-    """Full pipeline: documents(doc_id, spans) → entity clusters.
-
-    Mirrors the reference makefile DAG (makefile:33-152): match →
-    address-match → pre-screen → group. ``labels`` (name, match, keep) plays
-    the hand-labeled training sample; with ``auto_accept`` the RF decides
-    pairs the reference would send to human review.
-    """
-    from .operators.address import match_addresses
-    from .operators.cc import name_clusters
-    from .operators.extract import extract_names
-    from .operators.prescreen import pre_screen
-
-    from .operators.prescreen import APPROX_PERCENTILE_THRESHOLD
-
-    names = extract_names(documents).cache()
-    # exact percentiles buffer all values in one aggregation state; above
-    # the threshold switch to the bounded-memory sketch (the count is free:
-    # `names` is cached and re-used by every downstream stage)
-    exact_pct = names.count() <= APPROX_PERCENTILE_THRESHOLD
-    mm = match_names(names.select("name"), **match_kwargs)
-    master = materialize(mm.master, eager=False)
-    addr_pairs = match_addresses(addresses) if addresses is not None else None
-    screened = pre_screen(
-        master,
-        addr_pairs,
-        names,
-        labeled_pairs=labels,
-        reviewed=reviewed,
-        prior_clusters=prior_clusters,
-        num_trees=num_trees,
-        auto_accept=auto_accept,
-        exact_percentiles=exact_pct,
-        name_parts=mm.name_parts,
-    )
-    screened = materialize(screened, eager=False)
-    clusters = name_clusters(screened)
-    return ResolutionResult(
-        names=names,
-        master=master,
-        screened=screened,
-        clusters=clusters,
-        dropped_blocks=mm.dropped_blocks,
-        caches=[names, *mm.caches],
-    )

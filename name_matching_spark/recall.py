@@ -536,7 +536,7 @@ def recall_jaro_channel(
         for r in mres.master.select("name", "match").collect()
     }
     mres.release()
-    # ... plus the address channel resolve_entities adds (shared coded
+    # ... plus the address channel the resolve driver adds (shared coded
     # address) — labeled_pairs are EXCLUDED: they are review output over
     # already-surfaced candidates, so counting them as blocking recall
     # would be circular

@@ -77,3 +77,35 @@ def test_match_first_name_excludes_companies(spark):
     )
     rows = match_first_name(df).collect()
     assert rows == []
+
+
+def test_cross_surname_screen_same_with_and_without_parts(spark):
+    # the resolve driver passes the human parse on a fresh run and lets the
+    # screen re-parse on a resume: both paths must give the same rows
+    from name_matching_spark.operators.prescreen import cross_surname_screen
+
+    pairs = spark.createDataFrame(
+        [
+            ("JASON NELSON", "JASON NGUYEN", None),  # in-dictionary surnames
+            ("A J SUMKUP", "A J WUKBI", None),  # out-of-dictionary, same initials
+            ("MARY JOHNSON", "MARY JOHNSTON", None),  # typo kept by Levenshtein
+            ("ÉMILE ZORVAK", "EMILE QUINTAB", None),
+            ("ACME PIPELINE CORP", "ACME PIPELINE LLC", None),  # companies
+            ("JOHN SMITH", "JOHN WILSON", 1.0),  # already labeled
+        ],
+        "name string, match string, keep double",
+    )
+    names = pairs.select("name").unionByName(pairs.select(F.col("match").alias("name")))
+    _, parts = match_first_name(names, return_parts=True)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("name", "match", "keep").collect())
+
+    with_parts = rows(cross_surname_screen(pairs, name_parts=parts))
+    assert with_parts == rows(cross_surname_screen(pairs))
+    keep = {(n, m): k for n, m, k in with_parts}
+    assert keep[("JASON NELSON", "JASON NGUYEN")] == 0.0
+    assert keep[("A J SUMKUP", "A J WUKBI")] == 0.0
+    assert keep[("MARY JOHNSON", "MARY JOHNSTON")] is None
+    assert keep[("ACME PIPELINE CORP", "ACME PIPELINE LLC")] is None
+    assert keep[("JOHN SMITH", "JOHN WILSON")] == 1.0

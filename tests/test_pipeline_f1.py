@@ -2,21 +2,23 @@
 
 import os
 
+from name_matching_spark.checkpoint import resolve_entities_checkpointed
 from name_matching_spark.datagen import ensure_fixtures
 from name_matching_spark.evaluate import cluster_pairs, pairwise_f1, truth_pairs
-from name_matching_spark.pipeline import resolve_entities
 
 
-def test_pipeline_f1_gate(spark):
+def test_pipeline_f1_gate(spark, tmp_path):
     fx = ensure_fixtures("sf0.001")
     docs = spark.read.parquet(os.path.join(fx, "documents_spans.parquet"))
     addr = spark.read.parquet(os.path.join(fx, "addresses.parquet"))
     labels = spark.read.parquet(os.path.join(fx, "labeled_pairs.parquet"))
     truth = spark.read.parquet(os.path.join(fx, "truth_clusters.parquet"))
-    res = resolve_entities(
-        docs, addresses=addr, labels=labels, num_trees=50, auto_accept=True
+    mgr, clusters = resolve_entities_checkpointed(
+        docs, str(tmp_path / "ckpt"), addresses=addr, labels=labels,
+        num_trees=50, auto_accept=True,
     )
-    r = pairwise_f1(cluster_pairs(res.clusters), truth_pairs(truth), blocked=res.master)
+    master = mgr.results["match_names"].df
+    r = pairwise_f1(cluster_pairs(clusters), truth_pairs(truth), blocked=master)
     assert r.f1 >= 0.99, (r.f1, r.precision, r.recall, r.tp, r.fp, r.fn)
     # predicted side is unrestricted now: outside-surface false merges count
     # as FP, and the fully unrestricted F1 is reported alongside (ADVICE r1)

@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from name_matching_spark.operators.prescreen import (
     _RF_FEATURES,
-    rf_cutoff,
     rf_predict,
+    rf_thresholds,
     train_rf,
 )
 
@@ -69,7 +69,7 @@ def test_rf_monotonic_and_separating(spark):
     assert scored["good"] > scored["mid"] > scored["bad"]
     assert scored["good"] > 0.8 and scored["bad"] < 0.2
     # the depth-1 cutoff tree lands between the two classes
-    cutoff = rf_cutoff(train, num_trees=50, seed=42)
+    cutoff, _ = rf_thresholds(train, num_trees=50, seed=42)
     assert scored["bad"] < cutoff < scored["good"]
 
 
