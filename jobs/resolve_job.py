@@ -14,7 +14,7 @@ Local smoke (what tests/CI run)::
         --checkpoint /tmp/ckpt
 
 The job is a thin shell: read inputs → ``resolve_entities_checkpointed``
-(resumable; per-stage lineage under <checkpoint>/_lineage) → write the
+(resumable; per-stage metrics in <checkpoint>/manifest.jsonl) → write the
 cluster table. All logic lives in the package so the same code runs on
 local[N] and a multi-executor cluster unchanged.
 """
@@ -73,10 +73,13 @@ def main(argv: list[str]) -> int:
         corpus_fingerprint=corpus_fp,
     )
     clusters.write.mode("overwrite").parquet(args.output)
+    # the written output is the cluster stage's table: no re-count
     summary = {
-        "clusters_rows": spark.read.parquet(args.output).count(),
+        "clusters_rows": mgr.results["cluster"].rows,
         "stages": {
-            k: {"rows": v.rows, "skipped": v.skipped} for k, v in mgr.results.items()
+            k: {"rows": v.rows, "skipped": v.skipped, "files": len(v.files),
+                "hist": v.hist}
+            for k, v in mgr.results.items()
         },
     }
     print(json.dumps(summary))

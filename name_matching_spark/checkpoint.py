@@ -1,4 +1,4 @@
-"""Per-stage checkpointing with lineage metrics and mid-run resume.
+"""Per-stage checkpointing with write-time metrics and mid-run resume.
 
 The Spark analogue of the reference's make-timestamp DAG (makefile:33-152)
 and its append-only label caches (pre_screen_names.R:220-228,
@@ -8,8 +8,10 @@ match_addresses.R:151-175), upgraded per the north rule:
   manifest line with an **input fingerprint** (hash of upstream stage
   fingerprints + parameters — the content-addressed version of make's
   timestamps);
-- per-partition lineage metrics ``(stage, partition_id, rows)`` and a
-  10-bin histogram per score column go to ``<root>/_lineage/``;
+- the stage's metrics come back with its one write and live in that
+  manifest line: a 10-bin histogram per score column, observed by the write
+  job itself (``DataFrame.observe``), and per-file row counts read from the
+  committed parquet footers on the driver (no Spark job);
 - a re-run calls the same ``stage(...)`` sequence; any stage whose
   fingerprint matches the manifest is **skipped** (output read back from
   parquet), so a killed run resumes at the first stage whose inputs
@@ -21,6 +23,7 @@ snapshot property; the sandbox uses plain parquet + a JSON-lines manifest.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -28,7 +31,8 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -70,6 +74,8 @@ class StageResult:
     skipped: bool
     rows: int
     wall_ms: float
+    files: dict[str, int] = field(default_factory=dict)  # file name -> rows
+    hist: dict[str, list[int]] = field(default_factory=dict)  # score -> bins 0..9
 
 
 @dataclass
@@ -202,12 +208,28 @@ class CheckpointManager:
                 df = self._register_bucketed(entry, out_dir)
             else:
                 df = self.spark.read.parquet(out_dir)
-            res = StageResult(name, df, fp, True, entry["rows"], 0.0)
+            res = StageResult(
+                name, df, fp, True, entry["rows"], 0.0,
+                entry.get("files", {}), entry.get("hist", {}),
+            )
             self.results[name] = res
             return df
 
         t0 = time.time()
         df = fn()
+        # the score histograms ride the write: the write job itself counts
+        # the bins (observed before write_bucketed's repartition, so both
+        # paths carry it); a null score falls in no bin
+        cols = [c for c in score_cols or [] if c in df.columns]
+        obs = Observation()
+        if cols:
+            bins = {
+                c: F.least(F.floor(F.col(c).cast("double") * 10), F.lit(9)) for c in cols
+            }
+            df = df.observe(obs, *[
+                F.count_if(F.col(c).isNotNull() & (bins[c] == b)).alias(f"{c}#{b}")
+                for c in cols for b in range(10)
+            ])
         if bucket_by:
             from .io import write_bucketed
 
@@ -220,54 +242,33 @@ class CheckpointManager:
             out = self.spark.table(tbl)
         else:
             df.write.mode("overwrite").parquet(out_dir)
-            out = self.spark.read.parquet(out_dir)
+            # the schema is known: reading it back infers nothing (no job)
+            out = self.spark.read.schema(df.schema).parquet(out_dir)
         wall_ms = (time.time() - t0) * 1000
 
-        # lineage: per-partition row counts of the materialized output —
-        # collected once (one scan) and written back from the driver, which
-        # also serves the manifest row total without a second full scan
-        part_rows = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        )
-        lineage_dir = os.path.join(self.root, "_lineage", name)
-        self.spark.createDataFrame(
-            [(name, r["partition_id"], r["rows"]) for r in part_rows],
-            "stage string, partition_id int, rows bigint",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(lineage_dir, "partitions")
-        )
+        # per-file row counts from the committed footers, read on the
+        # driver: exactly what is on disk, even after a task retry
+        files = {
+            os.path.basename(p): pq.read_metadata(p).num_rows
+            for p in sorted(glob.glob(os.path.join(out_dir, "*.parquet")))
+        }
+        rows = sum(files.values())
+        # an empty bucketed write may never run the observed plan: an empty
+        # output's histogram is all zeros without asking for it
+        got = obs.get if cols and rows else {}
+        hist = {c: [got.get(f"{c}#{b}", 0) for b in range(10)] for c in cols}
 
-        # score-distribution metrics: 10-bin histogram per score column
-        for col in score_cols or []:
-            if col not in out.columns:
-                continue
-            hist = (
-                out.where(F.col(col).isNotNull())
-                .select(
-                    F.least(F.floor(F.col(col).cast("double") * 10), F.lit(9)).alias("bin")
-                )
-                .groupBy("bin")
-                .agg(F.count("*").alias("n"))
-                .withColumn("stage", F.lit(name))
-                .withColumn("score", F.lit(col))
-                .select("stage", "score", "bin", "n")
-            )
-            hist.write.mode("overwrite").parquet(
-                os.path.join(lineage_dir, f"hist_{col}")
-            )
-
-        rows = int(sum(r["rows"] for r in part_rows))
-        # the stage commit point: data + lineage + metrics are all on disk;
-        # the _FINGERPRINT file makes the directory self-describing (see
-        # docstring) and the manifest line makes the hit findable
+        # the stage commit point: the data is on disk; the _FINGERPRINT file
+        # makes the directory self-describing (see docstring) and the
+        # manifest line, which carries the metrics, makes the hit findable
         with open(fp_file, "w") as f:
             f.write(fp)
         mentry = {
             "stage": name,
             "fingerprint": fp,
             "rows": rows,
+            "files": files,
+            "hist": hist,
             "wall_ms": round(wall_ms, 1),
             "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
@@ -287,14 +288,9 @@ class CheckpointManager:
                 }
             )
         self._append_manifest(mentry)
-        res = StageResult(name, out, fp, False, rows, wall_ms)
+        res = StageResult(name, out, fp, False, rows, wall_ms, files, hist)
         self.results[name] = res
         return out
-
-    def lineage(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.root, "_lineage", name, "partitions")
-        )
 
 
 def resolve_entities_checkpointed(

@@ -7,7 +7,7 @@ checkpoint.py and streaming/ingest.py). This module adds the pieces a
 
 - ``read_documents``: schema-pinned scan of the interleaved span table
   (bad files fail fast instead of silently widening the schema).
-- ``write_bucketed`` / ``read_table``: persist a pair/cluster table
+- ``write_bucketed``: persist a pair/cluster table
   BUCKETED by its join key. Two tables bucketed the same way join with
   ZERO exchanges — the shuffle happens once at write time and every
   downstream join reuses the layout (verified by plan assertion in
@@ -75,10 +75,6 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
 """Resume semantics: kill after stage k → re-run skips ≤ k, output identical."""
 
+import json
 import os
 
 import pytest
@@ -44,17 +45,90 @@ def test_stage_skip_and_recompute(spark, tmp_path):
 
 def test_lineage_metrics(spark, tmp_path):
     root = str(tmp_path / "ckpt")
+
+    def build():
+        return spark.range(100).withColumn(
+            "s", F.when(F.col("id") < 95, (F.col("id") % 10) / 10.0)
+        )
+
     mgr = CheckpointManager(root, spark)
-    mgr.stage(
-        "scores",
-        lambda: spark.range(100).withColumn("s", (F.col("id") % 10) / 10.0),
-        score_cols=["s"],
-    )
-    lin = mgr.lineage("scores")
-    assert lin.agg(F.sum("rows")).collect()[0][0] == 100
-    hist = spark.read.parquet(os.path.join(root, "_lineage", "scores", "hist_s"))
-    rows = {r["bin"]: r["n"] for r in hist.collect()}
-    assert sum(rows.values()) == 100 and rows[0] == 10
+    mgr.stage("scores", build, score_cols=["s", "absent"])
+    res = mgr.results["scores"]
+    with open(os.path.join(root, "manifest.jsonl")) as f:
+        line = json.loads(f.read().splitlines()[-1])
+
+    # a fresh manager hits the checkpoint and reads the same metrics back
+    # from the manifest line
+    hit = CheckpointManager(root, spark)
+    hit.stage("scores", build, score_cols=["s", "absent"])
+    assert hit.results["scores"].skipped
+
+    for files, hist, rows in [
+        (res.files, res.hist, res.rows),
+        (line["files"], line["hist"], line["rows"]),
+        (hit.results["scores"].files, hit.results["scores"].hist,
+         hit.results["scores"].rows),
+    ]:
+        # per-file row counts are the written files, and sum to the rows
+        assert set(files) == {
+            n for n in os.listdir(os.path.join(root, "scores"))
+            if n.endswith(".parquet")
+        }
+        assert sum(files.values()) == rows == 100
+        # only present score columns get a histogram; nulls fall in no bin
+        assert set(hist) == {"s"}
+        assert len(hist["s"]) == 10 and hist["s"][0] == 10
+        assert sum(hist["s"]) == 95  # the non-null count of s
+
+    # an empty bucketed write may write no file and never run the observed
+    # plan: zero rows, all-zero bins
+    mgr.stage("empty", lambda: build().where("id < 0"), score_cols=["s"],
+              bucket_by=["id"])
+    assert mgr.results["empty"].rows == 0
+    assert mgr.results["empty"].hist == {"s": [0] * 10}
+
+
+def test_stage_runs_no_job_beyond_its_write(spark, tmp_path):
+    """A stage's metrics come back with its write: the stage runs exactly
+    the jobs of the same write done by hand, and no re-scan."""
+    from name_matching_spark.io import write_bucketed
+
+    sc = spark.sparkContext
+
+    def fn():
+        return spark.range(100).withColumn("s", (F.col("id") % 10) / 10.0)
+
+    def jobs_in_group(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for tag, bucket_by in [("plain", None), ("bucketed", ["id"])]:
+        mgr = CheckpointManager(str(tmp_path / f"ckpt_{tag}"), spark)
+        staged = jobs_in_group(
+            f"stage_{tag}",
+            lambda: mgr.stage("s", fn, score_cols=["s"], bucket_by=bucket_by),
+        )
+        by_hand_dir = str(tmp_path / f"by_hand_{tag}")
+
+        def write():
+            if bucket_by:
+                write_bucketed(fn(), "t_by_hand", bucket_by, mgr.num_buckets,
+                               path=by_hand_dir)
+            else:
+                fn().write.mode("overwrite").parquet(by_hand_dir)
+
+        try:
+            by_hand = jobs_in_group(f"by_hand_{tag}", write)
+        finally:
+            spark.sql("DROP TABLE IF EXISTS t_by_hand")
+        assert by_hand > 0
+        assert staged == by_hand, (tag, staged, by_hand)
+        res = mgr.results["s"]
+        assert res.rows == 100 and res.hist["s"] == [10] * 10
 
 
 def test_pipeline_resume_identical(spark, tmp_path):

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from name_matching_spark.io import read_table, write_bucketed
+from name_matching_spark.io import write_bucketed
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -22,9 +22,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     # bucketed-on-the-same-key join: the shuffle happened at write time
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = read_table(spark, "t_counts").join(
-            read_table(spark, "t_scores"), "name"
-        )
+        joined = spark.table("t_counts").join(spark.table("t_scores"), "name")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert joined.count() == 2000

@@ -73,3 +73,23 @@ def test_all_brackets_valid_passthrough(tmp_path):
     merged = json.loads(out.read_text())
     assert merged["n_valid_envelope_brackets"] == 2
     assert merged["median_algorithmic_efficiency_8_to_32"] == 0.84
+
+
+def test_no_valid_bracket_still_writes_artifact(tmp_path):
+    # every bracket is physically impossible: the artifact is still
+    # written, with null envelope medians and the envelope gate unmet
+    runs = [
+        _run(0.80, 0.51, (18, 44, 32), 0.18, 2.82),
+        _run(0.80, 0.59, (17, 14, 90), 1.62, 0.37),
+    ]
+    src = tmp_path / "in.json"
+    src.write_text(json.dumps({"runs": runs}))
+    out = tmp_path / "out.json"
+    assert merge_main([str(out), str(src)]) == 0
+    merged = json.loads(out.read_text())
+    assert merged["n_runs"] == 2
+    assert merged["n_valid_envelope_brackets"] == 0
+    assert merged["median_dram_envelope_8_to_32"] is None
+    assert merged["median_algorithmic_efficiency_8_to_32"] is None
+    assert merged["gate"]["met_8_to_32_vs_envelope"] is False
+    assert merged["median_efficiency_2_to_8"] == 0.8

@@ -38,7 +38,11 @@ def main(argv: list[str]) -> int:
         )
 
     valid = [r for r in runs if _bracket_ok(r)]
-    med_v = lambda k: round(statistics.median(r[k] for r in valid), 3)  # noqa: E731
+    # no valid bracket: the envelope medians are unknown (null), and the
+    # envelope gate is not met
+    med_v = lambda k: (  # noqa: E731
+        round(statistics.median(r[k] for r in valid), 3) if valid else None
+    )
     merged = {
         "metric": "scaling_efficiency_8_to_32_median",
         "value": med("efficiency_8_to_32"),
@@ -58,8 +62,8 @@ def main(argv: list[str]) -> int:
             "threshold": 0.8,
             "met_2_to_8": med("efficiency_2_to_8") >= 0.8,
             "met_8_to_32": med("efficiency_8_to_32") >= 0.8,
-            "met_8_to_32_vs_envelope": med_v("algorithmic_efficiency_8_to_32")
-            >= 0.8,
+            "met_8_to_32_vs_envelope": bool(valid)
+            and med_v("algorithmic_efficiency_8_to_32") >= 0.8,
         },
         "runs": runs,
         "note": (
