@@ -5,7 +5,11 @@ Cluster usage (north-rule deployment shape)::
     zip -r nm_spark.zip name_matching_spark
     spark-submit --py-files nm_spark.zip jobs/resolve_job.py \
         --documents s3://bucket/docs --output s3://bucket/out \
-        --checkpoint s3://bucket/ckpt [--addresses ...] [--labels ...]
+        --checkpoint /mnt/ckpt [--addresses ...] [--labels ...]
+
+``--checkpoint`` is a filesystem path that the driver and every executor
+see (a shared mount on a cluster): the manifest and stage markers are
+written with plain file I/O, so a URI is refused.
 
 Local smoke (what tests/CI run)::
 

@@ -27,6 +27,7 @@ import glob
 import hashlib
 import json
 import os
+import re
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -92,6 +93,17 @@ class CheckpointManager:
     spark: SparkSession
     num_buckets: int = 32
     results: dict[str, StageResult] = field(default_factory=dict)
+
+    def __post_init__(self) -> None:
+        # the manifest, the _FINGERPRINT markers and the footer reads go
+        # through the local filesystem, so a URI root (s3://, file://)
+        # would get its data written by Spark and then fail on its first
+        # marker: refuse it before any Spark job runs
+        if re.match(r"[A-Za-z][A-Za-z0-9+.-]+:", self.root):
+            raise ValueError(
+                f"checkpoint root {self.root!r} is a URI; give a local or "
+                "mounted filesystem path"
+            )
 
     def _manifest_path(self) -> str:
         return os.path.join(self.root, "manifest.jsonl")

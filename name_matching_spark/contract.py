@@ -299,7 +299,7 @@ def q_shared_word_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.blocking import shared_word_pairs
 
     prepped = _spark_prepped(spark, sf_dir)
-    scored, _ = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
+    scored = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
     return scored.select(
         "name", "match", F.col("shared_words").cast("bigint").alias("shared_words")
     )
@@ -314,8 +314,7 @@ def q_shared_word_pairs_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.blocking import shared_word_pairs
 
     prepped = _spark_prepped(spark, sf_dir)
-    scored, dropped = shared_word_pairs(prepped, "bag_shared", max_block=50)
-    # dropped must be empty by construction (nothing is hard-dropped)
+    scored = shared_word_pairs(prepped, "bag_shared", max_block=50)
     return scored.select(
         "name", "match", F.col("shared_words").cast("bigint").alias("shared_words")
     )
@@ -385,7 +384,7 @@ def q_jaro_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prepped = _spark_prepped(spark, sf_dir).where(F.col("clean_name") != "")
     idx = first_token_key(prepped, "bag_clean", out="bkey").select("name", "bkey")
-    pairs, _ = pairs_from_index(idx, "bkey", max_block=1_000_000)
+    pairs = pairs_from_index(idx, "bkey", max_block=1_000_000)
     cand = (
         pairs.select("name", "match")
         .distinct()
@@ -543,7 +542,7 @@ def q_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.cc import name_clusters
 
     prepped = _spark_prepped(spark, sf_dir)
-    scored, _ = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
+    scored = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
     edges = scored.where(F.col("shared_words") >= 2)
     return name_clusters(edges.select("name", "match")).select(
         "name", F.col("cluster").cast("bigint").alias("cluster"), "group_name"

@@ -672,7 +672,7 @@ def q_token_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pairs import token_set_similarity
 
     prepped = _spark_prepped(spark, sf_dir)
-    pairs, _ = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
+    pairs = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
     out = token_set_similarity(
         pairs.select("name", "match"),
         prepped.select("name", F.col("bag_clean").alias("bag")),
@@ -887,7 +887,7 @@ def q_group_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import prepare_names
 
     prepped = _spark_prepped(spark, sf_dir)
-    scored, _ = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
+    scored = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
     clusters = name_clusters(
         scored.where(F.col("shared_words") >= 2).select("name", "match")
     ).localCheckpoint(eager=True)
@@ -1111,9 +1111,9 @@ def q_match_master(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cosine_similarity", F.round("cosine_similarity", 6))
         .where(F.col("cosine_similarity") >= 0.4)
     )
-    shared, _ = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
+    shared = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
     idx = first_token_key(nonempty, "bag_clean", out="bkey").select("name", "bkey")
-    ft_pairs, _dropped = pairs_from_index(idx, "bkey", max_block=1_000_000)
+    ft_pairs = pairs_from_index(idx, "bkey", max_block=1_000_000)
     cand = (
         ft_pairs.select("name", "match")
         .distinct()
@@ -1373,7 +1373,7 @@ def _q_incremental(spark: SparkSession, sf_dir: str, member_sample_k: int) -> Da
 
     def shared_only_match(universe, **kw):
         u = prepare_names(universe)
-        scored, _ = shared_word_pairs(u, "bag_shared", max_block=1_000_000)
+        scored = shared_word_pairs(u, "bag_shared", max_block=1_000_000)
         master = scored.withColumn(
             "jw_distance", F.lit(None).cast("double")
         ).withColumn("cosine_similarity", F.lit(None).cast("double"))

@@ -546,7 +546,7 @@ def q_importance_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _corpus_df(spark, sf_dir)
     prepped = prepare_names(corpus.select("name")).localCheckpoint(eager=True)
-    pairs, _ = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
+    pairs = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
     counts = corpus.select("name", "n")
     df = (
         pairs.join(counts.withColumnsRenamed({"n": "n_x"}), "name")

@@ -14,7 +14,7 @@ an equi-join on an explicit blocking key:
   no UDF.
 
 Skew: token frequencies are Zipf-distributed, so the inverted index has hot
-keys ("SMITH"). Three explicit mitigations, all logged (no silent caps):
+keys ("SMITH"). Two mitigations, neither of which drops a pair:
 
 1. **cap-and-split** (``split_oversized_blocks``, the default path inside
    ``pairs_from_index``): a block of size B > max_block is cut into
@@ -22,12 +22,7 @@ keys ("SMITH"). Three explicit mitigations, all logged (no silent caps):
    (gi ≤ gj) becomes its own task key, so all B·(B-1)/2 pairs are still
    produced but no single task sees more than ~max_block² of them. Nothing
    is dropped — recall is preserved at any skew.
-2. **optional hard drop** (``drop_above``): keys with more names than this
-   are excluded from the pair join and returned in a side DataFrame — the
-   distributed analogue of the reference dropping its 182 common words as
-   match evidence (match_names.R:36-63). Off by default; the stoplists in
-   normalization already play that role.
-3. AQE skew-join splitting handles residual imbalance inside the join
+2. AQE skew-join splitting handles residual imbalance inside the join
    (enabled in session.py).
 """
 
@@ -69,12 +64,6 @@ def release_block_caches(registry: list[DataFrame] | None = None) -> None:
             pass  # session torn down first — nothing to release
 
 
-def with_name_id(names: DataFrame, name_col: str = "name") -> DataFrame:
-    """Stable 64-bit id per name (xxhash64) — used for i<j upper-triangle
-    predicates without a global row_number (which would single-task)."""
-    return names.withColumn("_id", F.xxhash64(F.col(name_col)))
-
-
 def token_index(names: DataFrame, bag_col: str, name_col: str = "name") -> DataFrame:
     """(name, token) inverted index, distinct."""
     return (
@@ -84,42 +73,23 @@ def token_index(names: DataFrame, bag_col: str, name_col: str = "name") -> DataF
     )
 
 
-def hot_keys(index: DataFrame, key_col: str, max_block: int) -> DataFrame:
-    """Block keys exceeding the cap, with their sizes (for lineage logging)."""
-    return (
-        index.groupBy(key_col)
-        .agg(F.count("*").alias("block_size"))
-        .where(F.col("block_size") > max_block)
-    )
-
-
 def pairs_from_index(
     index: DataFrame,
     key_col: str,
     name_col: str = "name",
     max_block: int = 2000,
-    drop_above: int | None = None,
     registry: list[DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Self-join the (name, key) index into canonical candidate pairs.
-
-    Returns (pairs(name, match, key), dropped_keys(key, block_size)).
-    Pairs are canonical: name < match alphabetically (reference utils.R:5-9).
+) -> DataFrame:
+    """Self-join the (name, key) index into canonical candidate pairs
+    (name, match, key). Pairs are canonical: name < match alphabetically
+    (reference utils.R:5-9).
 
     Blocks larger than ``max_block`` are routed through
     ``split_oversized_blocks`` (cap-and-split with replicated boundary
     sub-groups), so the full within-block pair set is produced while no
-    single shuffle task enumerates more than ~max_block² pairs. Keys are
-    only *excluded* when ``drop_above`` is set (logged in ``dropped_keys``);
-    by default nothing is dropped.
+    single shuffle task enumerates more than ~max_block² pairs. No key is
+    dropped.
     """
-    if drop_above is not None:
-        dropped = hot_keys(index, key_col, drop_above)
-        index = index.join(F.broadcast(dropped.select(key_col)), key_col, "left_anti")
-    else:
-        # schema-stable empty lineage table (evaluated lazily; trivial agg)
-        dropped = hot_keys(index, key_col, (1 << 62))
-
     # Pay-as-you-go skew handling (VERDICT r2 item 1): find the oversized
     # block keys with one map-side-combinable aggregate over the persisted
     # index — the hot-key set is bounded by |index|/max_block rows (0.05%
@@ -155,7 +125,7 @@ def pairs_from_index(
                 F.col("_k").alias(key_col),
             )
         )
-        return pairs, dropped
+        return pairs
 
     small = idx.join(F.broadcast(hot.select(key_col)), key_col, "left_anti")
     # the hot join tags the oversized subset with its block size, which
@@ -210,7 +180,7 @@ def pairs_from_index(
             F.col("block_key").alias(key_col),
         )
     )
-    return pairs_small.unionByName(pairs_large), dropped
+    return pairs_small.unionByName(pairs_large)
 
 
 def shared_word_pairs(
@@ -219,7 +189,7 @@ def shared_word_pairs(
     name_col: str = "name",
     max_block: int = 2000,
     registry: list[DataFrame] | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Shared-word matcher (reference match_names.R:500-524): canonical pairs
     whose bags intersect, scored by the number of distinct shared tokens.
 
@@ -228,11 +198,10 @@ def shared_word_pairs(
     duplicate-free after normalization, and the value is only an RF feature.
     """
     idx = token_index(names, bag_col, name_col)
-    pairs, dropped = pairs_from_index(idx, "token", name_col, max_block, registry=registry)
-    scored = pairs.groupBy("name", "match").agg(
+    pairs = pairs_from_index(idx, "token", name_col, max_block, registry=registry)
+    return pairs.groupBy("name", "match").agg(
         F.countDistinct("token").alias("shared_words")
     )
-    return scored, dropped
 
 
 def first_token_key(names: DataFrame, bag_col: str, out: str = "block_key") -> DataFrame:
@@ -330,16 +299,6 @@ def char_shingle_band_keys(
     return minhash_band_keys(
         with_sh, "_csh", name_col, num_hashes=num_hashes, bands=bands, seed=seed
     )
-
-
-def union_candidate_pairs(*pair_dfs: DataFrame) -> DataFrame:
-    """Distinct canonical pair keys from any number of channels."""
-    out = None
-    for df in pair_dfs:
-        sel = df.select("name", "match")
-        out = sel if out is None else out.unionByName(sel)
-    assert out is not None
-    return out.distinct()
 
 
 def split_oversized_blocks(

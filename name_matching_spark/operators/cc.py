@@ -10,26 +10,22 @@ SoCC'14) alternating-star algorithm expressed as DataFrame joins:
   m = min(Γ≤(u) ∪ {u})
 
 converging in O(log n) rounds to a star from every node to its component
-minimum. Node ids are *rank-ordered dense int64s* (``dense_ids`` over the
-distinct node names — order-isomorphic with the names), so every star round
-shuffles 8-byte ints instead of full name strings; `min(id)` ≡ `min(name)`,
-which keeps the component label exactly the reference's group-name rule
-(group_matches.R:94-110) after the single name join-back at the end — with
-no hash-collision risk and deterministic tie-breaking for free. At sf0.1
-this cut the shuffle bytes of every round several-fold (VERDICT r2 item 2);
-at 100 TB, where names average ~25 bytes and rounds shuffle the full edge
-set, it is the difference between 3× and 1× network cost per round.
+minimum. The rounds run on the name strings themselves, so `min(name)` is
+the component label, exactly the reference's group-name rule
+(group_matches.R:94-110), with no id mapping to build or join back.
 
-Scale notes: each round is two shuffles on node keys; `localCheckpoint`
-truncates lineage each round (else the plan doubles per iteration);
-convergence is detected with a count+hash aggregate, not a collect of the
-edge set. Hub skew (one node with millions of neighbors) is bounded by the
-algorithm itself — large-star strictly reduces big-star neighborhoods.
+Scale notes: each round is two shuffles on node keys; an eager
+`localCheckpoint` truncates lineage each round (else the plan doubles per
+iteration). Convergence is observed by that checkpoint: an `Observation`
+on the round's plan yields a count + xor-of-edge-hashes checksum from the
+checkpoint's own job, so a round costs no aggregate or collect beyond it.
+Hub skew (one node with millions of neighbors) is bounded by the algorithm
+itself — large-star strictly reduces big-star neighborhoods.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..session import materialize
@@ -71,21 +67,20 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _checksum(e: DataFrame) -> tuple[int, int]:
-    row = e.agg(
-        F.count("*").alias("c"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["c"]), int(row["h"])
-
-
-# Above this many (distinct) edges the star rounds run on dense int64 ids
-# instead of name strings: the id mapping costs ~4 fixed jobs (range
-# repartition + offset collect + edge relabel + final join-back), which the
-# per-round shuffle savings only repay once the edge set is large. Below it
-# (contract queries, small fixtures) strings are net faster. Tests force
-# either path on small graphs through the ``int_ids`` argument.
-CC_INT_ID_THRESHOLD = 1_000_000
+def _observed_checkpoint(e: DataFrame) -> tuple[DataFrame, dict]:
+    """Eager checkpoint of ``e`` plus its {c: count, h: xor of edge hashes}
+    checksum, both from the checkpoint's own job: the aggregate rides the
+    plan as an ``Observation`` instead of re-scanning the checkpoint."""
+    ob = Observation()
+    e = materialize(
+        e.observe(
+            ob,
+            F.count(F.lit(1)).alias("c"),
+            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+        ),
+        eager=True,
+    )
+    return e, ob.get
 
 
 def connected_components(
@@ -93,13 +88,9 @@ def connected_components(
     src: str = "name",
     dst: str = "match",
     max_iter: int = 30,
-    int_ids: bool | None = None,
 ) -> DataFrame:
     """(name, component) for every node in ``edges``; component = min(name)
-    of the connected component (string ordering).
-
-    ``int_ids``: None (default) auto-selects by edge count — the count is
-    free, the first convergence checksum computes it anyway."""
+    of the connected component (string ordering)."""
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u").isNotNull() & F.col("v").isNotNull()
     )
@@ -109,33 +100,9 @@ def connected_components(
     selfies = (
         raw.where(F.col("u") == F.col("v")).select(F.col("u").alias("name")).distinct()
     )
-    e = raw.where(F.col("u") != F.col("v")).distinct()
-    # eager checkpoint per round: measured faster than lazy + checksum
-    # (lazy localCheckpoint recomputes under the aggregate-only action)
-    e = materialize(e, eager=True)
-    prev = _checksum(e)
-    if int_ids is None:
-        int_ids = prev[0] >= CC_INT_ID_THRESHOLD
-    mapping = None
-    if int_ids:
-        # names → rank-ordered dense int64 ids (order-isomorphic: min(id)
-        # picks the same node as min(name)); the star rounds then shuffle
-        # 8-byte ids instead of full name strings
-        nodes = e.select(F.col("u").alias("_n")).unionByName(
-            e.select(F.col("v").alias("_n"))
-        )
-        # mapping feeds two joins here and two at the join-back — pin it once
-        mapping = materialize(dense_ids(nodes, "_n", "_nid"), eager=True)
-        e = (
-            e.join(mapping.withColumnsRenamed({"_n": "u", "_nid": "_uid"}), "u")
-            .join(mapping.withColumnsRenamed({"_n": "v", "_nid": "_vid"}), "v")
-            .select(F.col("_uid").alias("u"), F.col("_vid").alias("v"))
-        )
-        e = materialize(e, eager=True)
-        prev = _checksum(e)
+    e, prev = _observed_checkpoint(raw.where(F.col("u") != F.col("v")).distinct())
     for _ in range(max_iter):
-        e = materialize(_small_star(_large_star(e)), eager=True)
-        cur = _checksum(e)
+        e, cur = _observed_checkpoint(_small_star(_large_star(e)))
         if cur == prev:
             break
         prev = cur
@@ -143,23 +110,11 @@ def connected_components(
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
     # converged: every edge is (node → component-min); roots map to themselves
-    members = e.select(F.col("u").alias("_m"), F.col("v").alias("_c"))
-    roots = e.select(F.col("v").alias("_m")).distinct().withColumn(
-        "_c", F.col("_m")
+    members = e.select(F.col("u").alias("name"), F.col("v").alias("component"))
+    roots = e.select(F.col("v").alias("name")).distinct().withColumn(
+        "component", F.col("name")
     )
-    ids = members.unionByName(roots).distinct()
-    if mapping is None:
-        result = ids.select(F.col("_m").alias("name"), F.col("_c").alias("component"))
-    else:
-        # single join-back from ids to names (two hash joins on int keys)
-        result = (
-            ids.join(mapping.withColumnsRenamed({"_nid": "_m"}), "_m")
-            .withColumnsRenamed({"_n": "name"})
-            .join(
-                mapping.withColumnsRenamed({"_nid": "_c", "_n": "component"}), "_c"
-            )
-            .select("name", "component")
-        )
+    result = members.unionByName(roots).distinct()
     # nodes whose ONLY edges were self-loops: singleton components
     extra = selfies.join(result.select("name"), "name", "left_anti")
     return result.unionByName(extra.withColumn("component", F.col("name")))

@@ -13,9 +13,7 @@ the final l2 (cosine) normalization the l1 row factor cancels, so
 weight(token) = count · log1p(N/df) gives identical cosines.
 
 Everything is built-in SQL: explode → groupBy → join → agg. Catalyst handles
-pushdown; AQE handles the skewed token join. Hot tokens can be excluded from
-the pair join with ``max_df`` (logged by the caller via the returned
-DataFrame) — their idf ≈ 0 so the cosine mass lost is negligible.
+pushdown; AQE handles the skewed token join.
 """
 
 from __future__ import annotations
@@ -51,7 +49,6 @@ def tfidf_cosine_pairs(
     bag_col: str,
     name_col: str = "name",
     threshold: float = 0.4,
-    max_df: int | None = None,
     weights: DataFrame | None = None,
 ) -> DataFrame:
     """Canonical pairs with cosine_similarity ≥ threshold.
@@ -71,18 +68,13 @@ def tfidf_cosine_pairs(
         from ..session import persist_now
 
         weights = persist_now(token_weights(names, bag_col, name_col))
-    w = weights
-    if max_df is not None:
-        w_join = w.where(F.col("df") <= max_df)
-    else:
-        w_join = w
-    a = w_join.select(
+    a = weights.select(
         F.col("token"),
         F.col(name_col).alias("name"),
         F.col("w").alias("wa"),
         F.col("norm").alias("na"),
     )
-    b = w_join.select(
+    b = weights.select(
         F.col("token"),
         F.col(name_col).alias("match"),
         F.col("w").alias("wb"),

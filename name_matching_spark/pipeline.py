@@ -95,8 +95,8 @@ def jaro_candidates(
     lsh_hashes: int,
     lsh_bands: int,
     registry: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Blocked candidate pairs for the Jaro channel + dropped hot keys."""
+) -> DataFrame:
+    """Blocked candidate pairs (name, match) for the Jaro channel."""
     nonempty = names.where(F.col("clean_name") != "")
     ft = first_token_key(nonempty, "bag_clean", out="bkey").select(
         "name", F.concat(F.lit("ft:"), F.col("bkey")).alias("bkey")
@@ -114,8 +114,8 @@ def jaro_candidates(
         "name", F.concat(F.lit("csh:"), F.col("band_key")).alias("bkey")
     )
     index = ft.unionByName(mp).unionByName(lsh).unionByName(csh).distinct()
-    pairs, dropped = pairs_from_index(index, "bkey", max_block=max_block, registry=registry)
-    return pairs.select("name", "match").distinct(), dropped
+    pairs = pairs_from_index(index, "bkey", max_block=max_block, registry=registry)
+    return pairs.select("name", "match").distinct()
 
 
 def match_names(
@@ -170,12 +170,12 @@ def match_names(
     block_caches: list = []
 
     # --- channel 3: shared word (match_names.R:643-654)
-    shared, _ = shared_word_pairs(
+    shared = shared_word_pairs(
         prepped, "bag_shared", max_block=max_block, registry=block_caches
     )
 
     # --- channel 4: Jaro on cleaned names (match_names.R:660-674)
-    cand, _ = jaro_candidates(
+    cand = jaro_candidates(
         prepped, max_block, lsh_hashes, lsh_bands, registry=block_caches
     )
     cand = (

@@ -510,7 +510,7 @@ def recall_jaro_channel(
     }
 
     def family_pairs(index: DataFrame) -> set:
-        p, _ = pairs_from_index(index, "bkey", max_block=1_000_000)
+        p = pairs_from_index(index, "bkey", max_block=1_000_000)
         return {(r["name"], r["match"]) for r in p.select("name", "match").collect()}
 
     ft = family_pairs(
@@ -524,7 +524,7 @@ def recall_jaro_channel(
             "name", F.col("band_key").alias("bkey")
         )
     )
-    union_pairs, _ = jaro_candidates(
+    union_pairs = jaro_candidates(
         nonempty, max_block=1_000_000, lsh_hashes=16, lsh_bands=4
     )
     union = {(r["name"], r["match"]) for r in union_pairs.collect()}

@@ -1,5 +1,5 @@
-"""Blocking: hot-key caps (logged, never silent) and cap-and-split
-completeness (every within-block pair produced exactly once)."""
+"""Blocking: hot keys are cap-and-split, never dropped, and the split is
+complete (every within-block pair produced exactly once)."""
 
 import itertools
 
@@ -14,11 +14,10 @@ from name_matching_spark.operators.blocking import (
 
 def test_hot_block_split_not_dropped(spark):
     # a hot block above max_block is cap-and-split: every pair still
-    # produced, dropped-keys lineage empty
+    # produced
     rows = [(f"n{i}", "HOT") for i in range(10)] + [("a", "COLD"), ("b", "COLD")]
     idx = spark.createDataFrame(rows, ["name", "token"])
-    pairs, dropped = pairs_from_index(idx, "token", max_block=5)
-    assert dropped.count() == 0
+    pairs = pairs_from_index(idx, "token", max_block=5)
     got = {(r["name"], r["match"]) for r in pairs.collect()}
     expected = {("a", "b")} | {
         (a, b) for a, b in itertools.combinations(sorted(f"n{i}" for i in range(10)), 2)
@@ -26,16 +25,6 @@ def test_hot_block_split_not_dropped(spark):
     assert got == expected
     # exactly once each (no replication duplicates)
     assert pairs.count() == len(expected)
-
-
-def test_hot_key_hard_drop_logged(spark):
-    # opt-in drop_above reproduces the old logged-exclusion behavior
-    rows = [(f"n{i}", "HOT") for i in range(10)] + [("a", "COLD"), ("b", "COLD")]
-    idx = spark.createDataFrame(rows, ["name", "token"])
-    pairs, dropped = pairs_from_index(idx, "token", max_block=5, drop_above=5)
-    assert [(r["token"], r["block_size"]) for r in dropped.collect()] == [("HOT", 10)]
-    got = {(r["name"], r["match"]) for r in pairs.collect()}
-    assert got == {("a", "b")}  # hot block excluded, cold block paired
 
 
 def test_split_equals_unsplit_on_sf001_corpus(spark):
@@ -53,9 +42,8 @@ def test_split_equals_unsplit_on_sf001_corpus(spark):
     from name_matching_spark.operators.blocking import shared_word_pairs
 
     prepped = _spark_prepped(spark, sf_dir).localCheckpoint(eager=True)
-    unsplit, _ = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
-    split, dropped = shared_word_pairs(prepped, "bag_shared", max_block=50)
-    assert dropped.count() == 0
+    unsplit = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
+    split = shared_word_pairs(prepped, "bag_shared", max_block=50)
     a = {(r["name"], r["match"], r["shared_words"]) for r in unsplit.collect()}
     b = {(r["name"], r["match"], r["shared_words"]) for r in split.collect()}
     assert a == b and len(a) > 0
@@ -121,8 +109,7 @@ def test_skew_stress_single_hot_block(spark):
         F.concat(F.lit("NAME"), F.format_string("%05d", F.col("id"))).alias("name"),
         F.lit("HOT").alias("token"),
     )
-    pairs, dropped = pairs_from_index(idx, "token", max_block=100)
-    assert dropped.count() == 0
+    pairs = pairs_from_index(idx, "token", max_block=100)
     assert pairs.count() == n * (n - 1) // 2          # complete, exactly once
     assert pairs.select("name", "match").distinct().count() == n * (n - 1) // 2
     # task boundedness: a task holds two hash-assigned sub-groups of mean
@@ -159,8 +146,7 @@ def test_split_fuzz_property(spark):
             for i in range(size)
         ]
         idx = spark.createDataFrame(rows, ["name", "token"])
-        pairs, dropped = pairs_from_index(idx, "token", max_block=cap)
-        assert dropped.count() == 0
+        pairs = pairs_from_index(idx, "token", max_block=cap)
         got = sorted((r["name"], r["match"]) for r in pairs.collect())
         expected = sorted(
             pair
@@ -195,13 +181,13 @@ def test_pairs_from_index_plan_shapes(spark):
             df.explain("formatted")
         return buf.getvalue()
 
-    pairs, _ = pairs_from_index(idx, "token", max_block=2000)
+    pairs = pairs_from_index(idx, "token", max_block=2000)
     p = plan_of(pairs)
     assert "task_key" not in p          # no split subtree planned
     assert "InMemoryTableScan" in p     # join sides read the cached index
     assert "Window" not in p            # no per-row window count over the index
 
-    pairs_split, _ = pairs_from_index(idx, "token", max_block=3)
+    pairs_split = pairs_from_index(idx, "token", max_block=3)
     ps = plan_of(pairs_split)
     assert "task_key" in ps             # split branch active under a hot cap
 

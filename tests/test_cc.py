@@ -32,6 +32,12 @@ def _union_find_components(edges):
     return {n: min(members) for members in comp.values() for n in members}
 
 
+def _chain(spark, n=40):
+    return spark.createDataFrame(
+        [(f"X{i:02d}", f"X{i+1:02d}") for i in range(n)], ["name", "match"]
+    )
+
+
 @pytest.mark.parametrize("seed,n_nodes,n_edges", [(1, 30, 25), (2, 80, 60), (3, 120, 200)])
 def test_cc_matches_union_find(spark, seed, n_nodes, n_edges):
     rng = random.Random(seed)
@@ -51,9 +57,7 @@ def test_cc_matches_union_find(spark, seed, n_nodes, n_edges):
 
 def test_cc_chain(spark):
     # a long path exercises multi-round convergence
-    edges = [(f"X{i:02d}", f"X{i+1:02d}") for i in range(40)]
-    df = spark.createDataFrame(edges, ["name", "match"])
-    got = connected_components(df).collect()
+    got = connected_components(_chain(spark)).collect()
     assert all(r["component"] == "X00" for r in got)
     assert len(got) == 41
 
@@ -116,33 +120,53 @@ def test_dense_ids_dataframe_native(spark):
     assert got == expected
 
 
-def test_cc_int_id_path_matches_string_path(spark):
-    # the dense-int-id fast path (auto above CC_INT_ID_THRESHOLD edges) must
-    # produce byte-identical components to the string path on any graph
-    rng = random.Random(11)
-    nodes = [f"N{i:03d}" for i in range(100)]
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(150)]
-    df = spark.createDataFrame(edges, ["name", "match"])
-    got_s = sorted(
-        (r["name"], r["component"])
-        for r in connected_components(df, int_ids=False).collect()
-    )
-    got_i = sorted(
-        (r["name"], r["component"])
-        for r in connected_components(df, int_ids=True).collect()
-    )
-    assert got_s == got_i
-    oracle = _union_find_components([e for e in edges if e[0] != e[1]])
-    assert dict(got_i) == oracle
-
-
 def test_self_loop_only_nodes_are_singletons(spark):
     # "(name, component) for every node in edges": a node whose only edge
-    # is a self-loop must surface as its own singleton component
-    from name_matching_spark.operators.cc import connected_components
+    # is a self-loop must surface as its own singleton component; an edge
+    # set with no connecting edge at all still converges (its observed
+    # checksum is (0, 0) from the first checkpoint on)
+    cases = [
+        ([("A", "B"), ("C", "C"), ("A", "A")], {("A", "A"), ("B", "A"), ("C", "C")}),
+        ([], set()),
+        ([("C", "C")], {("C", "C")}),
+    ]
+    for rows, want in cases:
+        edges = spark.createDataFrame(rows, "name string, match string")
+        got = {(r["name"], r["component"]) for r in connected_components(edges).collect()}
+        assert got == want, rows
+        # the representative's own row is dropped: singletons leave nothing
+        clusters = name_clusters(edges).collect()
+        assert {(r["name"], r["group_name"]) for r in clusters} == {
+            (n, c) for n, c in want if n != c
+        }, rows
 
-    edges = spark.createDataFrame(
-        [("A", "B"), ("C", "C"), ("A", "A")], "name string, match string"
-    )
-    got = {(r["name"], r["component"]) for r in connected_components(edges).collect()}
-    assert got == {("A", "A"), ("B", "A"), ("C", "C")}
+
+def test_cc_round_bound_raises(spark):
+    # the 40-node chain needs several star rounds; one is not enough
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(_chain(spark), max_iter=1)
+
+
+def test_cc_collects_nothing_to_the_driver(spark, monkeypatch):
+    # convergence is read from each round checkpoint's Observation, so the
+    # rounds run no collect() (a separate checksum job per round would)
+    rng = random.Random(5)
+    nodes = [f"M{i:03d}" for i in range(60)]
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(70)]
+    edges += [(f"X{i:02d}", f"X{i+1:02d}") for i in range(20)]  # multi-round
+    df = spark.createDataFrame(edges, ["name", "match"])
+    # the concrete (classic or Connect) class, which overrides collect
+    cls = type(df)
+    calls = []
+    real_collect = cls.collect
+
+    def counting_collect(self):
+        calls.append(1)
+        return real_collect(self)
+
+    monkeypatch.setattr(cls, "collect", counting_collect)
+    out = connected_components(df)
+    monkeypatch.undo()
+    assert calls == []
+    got = {r["name"]: r["component"] for r in out.collect()}
+    assert got == _union_find_components([e for e in edges if e[0] != e[1]])

@@ -43,6 +43,16 @@ def test_stage_skip_and_recompute(spark, tmp_path):
     assert calls == ["a", "b", "a3", "b3"]
 
 
+def test_uri_root_refused_before_any_job(spark, tmp_path):
+    # the manifest and markers use local file I/O: a URI root must fail at
+    # construction, not after Spark has written the first stage's data
+    for root in (f"file://{tmp_path}/ckpt", "s3://bucket/ckpt", "hdfs:/ckpt"):
+        with pytest.raises(ValueError, match="is a URI"):
+            CheckpointManager(root, spark)
+    assert not (tmp_path / "ckpt").exists()
+    CheckpointManager(str(tmp_path / "ckpt"), spark)  # a plain path is fine
+
+
 def test_lineage_metrics(spark, tmp_path):
     root = str(tmp_path / "ckpt")
 
