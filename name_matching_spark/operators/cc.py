@@ -122,61 +122,61 @@ def connected_components(
 
 def dense_ids(df: DataFrame, col: str, out: str = "cluster") -> DataFrame:
     """Dense sequential 1-based ids over the distinct, sorted values of
-    ``col`` — equivalent to dense_rank() over a global ORDER BY, but
-    computed DataFrame-native without a single-task global window:
-    range-repartition the distinct values (non-overlapping ordered ranges),
-    row_number *within* each range partition (parallel windows), then add a
-    broadcast per-partition cumulative offset. Ids are emitted as bigint, so
-    the scheme scales to 10^9+ distinct values (an int32 id would silently
-    wrap past 2^31 — ADVICE r2); only the O(#partitions) count vector
-    touches the driver.
-
-    The range layout is pinned with one eager localCheckpoint so the offset
-    scan and the window see the same physical partitioning (range sampling
-    is not guaranteed stable across recomputes)."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    ranged = (
+    ``col`` — equivalent to dense_rank() over a global ORDER BY, but with
+    no single-task global window: range-repartition the values
+    (non-overlapping ordered ranges; the distinct rides that partitioning
+    with no shuffle of its own), sort each range, and take each row's index
+    within its partition from ``monotonically_increasing_id`` (partition id
+    in the upper 31 bits, row index in the lower 33). One eager checkpoint
+    pins that layout; one per-partition count over it gives each
+    partition's starting offset, and the ids are then a projection of the
+    checkpoint. Ids are bigint, so the scheme scales to 10^9+ distinct
+    values (an int32 id would silently wrap past 2^31 — ADVICE r2); only
+    the O(#partitions) count vector touches the driver."""
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    pid = F.spark_partition_id()
+    ranged = materialize(
         df.select(col)
-        .distinct()
         .repartitionByRange(n_parts, F.col(col))
-        .withColumn("_pid", F.spark_partition_id())
+        .distinct()
+        .sortWithinPartitions(col)
+        .select(
+            col,
+            pid.alias("_pid"),
+            (F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)).alias("_i"),
+        ),
+        eager=True,
     )
-    ranged = materialize(ranged, eager=True)
-    counts = {
-        r["_pid"]: r["c"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-    }
+    counts = dict(ranged.groupBy("_pid").count().collect())
     offsets, acc = [], 0
-    for pid in sorted(counts):  # range partitions are ordered by key range
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    off_df = F.broadcast(spark.createDataFrame(offsets, "_pid int, _off bigint"))
-    w = Window.partitionBy("_pid").orderBy(col)
+    for p in range(n_parts):  # range partitions are ordered by key range
+        offsets.append(F.lit(acc))
+        acc += counts.get(p, 0)
+    return ranged.select(
+        col,
+        (F.col("_i") + 1 + F.element_at(F.array(*offsets), F.col("_pid") + 1)).alias(out),
+    )
+
+
+def label_clusters(members: DataFrame) -> DataFrame:
+    """(name, group_name) → (name, cluster, group_name): ``cluster`` is the
+    dense id of group_name (``dense_ids``), and the representative's own
+    row (group_name == name) is dropped, as the reference keeps only rows
+    where group_name != name (group_matches.R:94-123)."""
+    ids = dense_ids(members, "group_name", "cluster")
     return (
-        ranged.join(off_df, "_pid")
-        .withColumn(out, (F.row_number().over(w) + F.col("_off")).cast("long"))
-        .select(col, out)
+        members.join(ids, "group_name")
+        .where(F.col("group_name") != F.col("name"))
+        .select("name", "cluster", "group_name")
     )
 
 
 def name_clusters(matches: DataFrame) -> DataFrame:
     """Reference group_matches semantics (group_matches.R:60-123): matches
     (name, match[, keep]) → (name, cluster, group_name), keeping only rows
-    where group_name != name. ``cluster`` is a dense rank over group_name
-    (scalably assigned — see dense_ids)."""
+    where group_name != name. ``group_name`` is the component minimum and
+    ``cluster`` its dense id, numbered by ``label_clusters``."""
     if "keep" in matches.columns:
         matches = matches.where(F.col("keep") == 1)
     cc = connected_components(matches, "name", "match")
-    out = cc.select(
-        "name",
-        F.col("component").alias("group_name"),
-    )
-    clusters = dense_ids(out, "group_name", "cluster")
-    return (
-        out.join(clusters, "group_name")
-        .where(F.col("group_name") != F.col("name"))
-        .select("name", "cluster", "group_name")
-    )
+    return label_clusters(cc.select("name", F.col("component").alias("group_name")))

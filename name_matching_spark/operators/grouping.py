@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..constants import GROUP_COSINE_THRESHOLD
 from ..functions.normalize import canonical_pair
+from .cc import connected_components, label_clusters
 
 
 def match_group_names(
@@ -58,8 +59,6 @@ def regroup_clusters(clusters: DataFrame, group_pairs: DataFrame) -> DataFrame:
     re-densified. Members whose new group name equals their own name drop
     out (reference keeps only rows where group_name != name).
     """
-    from .cc import connected_components
-
     mapping = connected_components(group_pairs, "name", "match").select(
         F.col("name").alias("group_name"), F.col("component").alias("_new")
     )
@@ -72,15 +71,7 @@ def regroup_clusters(clusters: DataFrame, group_pairs: DataFrame) -> DataFrame:
     reps = mapping.select(
         F.col("group_name").alias("name"), F.col("_new").alias("group_name")
     ).where(F.col("name") != F.col("group_name"))
-    out = out.select("name", "group_name").unionByName(reps).distinct()
-    from .cc import dense_ids
-
-    ids = dense_ids(out, "group_name", "cluster")
-    return (
-        out.join(ids, "group_name")
-        .where(F.col("name") != F.col("group_name"))
-        .select("name", "cluster", "group_name")
-    )
+    return label_clusters(out.select("name", "group_name").unionByName(reps).distinct())
 
 
 def notifications(

@@ -92,12 +92,17 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
     nodes = [f"R{i:03d}" for i in range(60)]
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(50)]
     df = spark.createDataFrame(edges, ["name", "match"])
-    local = {(r["name"], r["component"]) for r in connected_components(df).collect()}
+
+    def run():
+        return (
+            {(r["name"], r["component"]) for r in connected_components(df).collect()},
+            {tuple(r) for r in name_clusters(df).collect()},
+        )
+
+    local = run()
     set_reliable_checkpoint_dir(str(tmp_path / "ckpt"))
     try:
-        reliable = {
-            (r["name"], r["component"]) for r in connected_components(df).collect()
-        }
+        reliable = run()
     finally:
         set_reliable_checkpoint_dir(None)
     assert reliable == local
@@ -108,16 +113,27 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
 
 def test_dense_ids_dataframe_native(spark):
     # VERDICT r1 item 6: dense_ids == dense_rank over global sort, no .rdd
-    from pyspark.sql import functions as F
-
     from name_matching_spark.operators.cc import dense_ids
 
     vals = [(f"V{i:04d}",) for i in range(537)]
     random.Random(3).shuffle(vals)
     df = spark.createDataFrame(vals, ["group_name"])
-    got = {r["group_name"]: r["cluster"] for r in dense_ids(df, "group_name").collect()}
+    ids = dense_ids(df, "group_name")
+    got = {r["group_name"]: r["cluster"] for r in ids.collect()}
     expected = {v: i + 1 for i, v in enumerate(sorted(v for (v,) in vals))}
     assert got == expected
+    # the ids are a projection of dense_ids' one checkpoint: no shuffle,
+    # window or join is left in the returned plan
+    plan = ids._jdf.queryExecution().executedPlan().toString()
+    assert not any(op in plan for op in ("Exchange", "Window", "Join")), plan
+
+    # fewer distinct values than range partitions (some partitions empty),
+    # duplicates numbered once; an empty input numbers nothing
+    dup = spark.createDataFrame([("b",), ("a",), ("b",)], ["group_name"])
+    got = {r["group_name"]: r["cluster"] for r in dense_ids(dup, "group_name").collect()}
+    assert got == {"a": 1, "b": 2}
+    empty = spark.createDataFrame([], "group_name string")
+    assert dense_ids(empty, "group_name").collect() == []
 
 
 def test_self_loop_only_nodes_are_singletons(spark):

@@ -193,6 +193,10 @@ def test_depth1_split_exact(spark):
     c = depth1_split_df(tight).first()["cutoff"]
     assert 0.4999996 < c < 0.4999998
 
+    # empty input: the keyless aggregate still returns its one row
+    empty = spark.createDataFrame([], "rf_prob double, keep double")
+    assert [r["cutoff"] for r in depth1_split_df(empty).collect()] == [0.5]
+
 
 def test_accept_threshold_tie_groups(spark):
     from name_matching_spark.operators.prescreen import accept_threshold_df
@@ -208,6 +212,9 @@ def test_accept_threshold_tie_groups(spark):
     assert accept_threshold_df(df, 0.6).first()["accept"] == 0.8
     # an unreachable bar accepts nothing automatically
     assert accept_threshold_df(df, 1.1).first()["accept"] == 1.0
+    # empty input: the keyless aggregate still returns its one row
+    empty = spark.createDataFrame([], "rf_prob double, keep double")
+    assert [r["accept"] for r in accept_threshold_df(empty, 0.9).collect()] == [1.0]
 
 
 def test_depth1_split_matches_bruteforce(spark):
