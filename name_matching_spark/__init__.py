@@ -7,7 +7,8 @@ re-expressed Spark-first (DataFrame/SQL + vectorized pandas/Arrow UDFs).
 
 Layout
 ------
-- ``session``     SparkSession factory (AQE, Arrow, deterministic configs)
+- ``session``     SparkSession factory (AQE, Arrow, deterministic configs),
+                  and the zip-import guard every UDF worker installs
 - ``constants``   stoplists / regexes / dictionaries (semantics parity with
                   the reference's word lists, reference: code/functions/match_names.R:36-88)
 - ``datagen``     deterministic synthetic `documents(doc_id, spans)` corpus +
@@ -22,4 +23,10 @@ Layout
 - ``pipeline``    end-to-end name-matching pipeline
 """
 
+from .session import guard_zip_invalidation
+
 __version__ = "0.1.0"
+
+# Every UDF the package ships reaches a Python worker through an import of
+# this package, so each worker installs the guard with its first such task.
+guard_zip_invalidation()

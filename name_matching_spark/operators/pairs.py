@@ -4,7 +4,10 @@ One `mapInPandas` pass computes every requested string metric for a batch of
 pairs — the kernels in functions/strings.py are numpy-vectorized across the
 batch, so Python-interpreter cost is O(batch count), not O(rows). This
 replaces the reference's per-pair loops (match_names.R:463-497 and the
-rowwise backfills at :729-792).
+rowwise backfills at :729-792). Each task also pays a fixed worker set-up
+cost before its first batch; most of it was the worker re-reading every zip
+archive on its path (pyspark.zip, the Spark core jar), which
+``session.guard_zip_invalidation`` skips while an archive is unchanged.
 
 mapInPandas (not applyInPandas) on the already-joined pair table means no
 extra shuffle and no per-group memory blowup: Arrow batch size is capped in

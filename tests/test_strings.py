@@ -6,9 +6,11 @@ from __future__ import annotations
 import math
 import random
 import string
+import sys
 
 import duckdb
 import numpy as np
+import pandas as pd
 import pytest
 
 from name_matching_spark.functions.strings import (
@@ -222,3 +224,38 @@ def test_jaro_winkler_boost_threshold():
         for x, y in [("FY", "FFN"), ("DWAYNE", "DUANE")]
     ]
     assert np.allclose(got, want, atol=1e-9)
+
+
+def test_udf_task_skips_rereading_unchanged_zips(spark):
+    # PySpark's worker calls importlib.invalidate_caches() at the start of
+    # every task; before CPython 3.13 each cached zipimporter (pyspark.zip,
+    # py4j, the Spark core jar) then re-reads its archive. Once a task has
+    # imported the package, as every score_pairs task does, none is re-read.
+    if sys.version_info >= (3, 13):
+        pytest.skip("the stdlib method re-reads lazily from 3.13 on")
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import name_matching_spark.operators.pairs  # noqa: F401
+
+        for _ in batches:
+            pass
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or read_directory(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        zips = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        yield pd.DataFrame({"reads": [len(reads)], "zips": [zips]})
+
+    rows = spark.range(0, 4, 1, 4).mapInPandas(probe, "reads long, zips long").collect()
+    assert len(rows) == 4
+    assert all(r.zips > 0 for r in rows)
+    assert [r.reads for r in rows] == [0, 0, 0, 0]
