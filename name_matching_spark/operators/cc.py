@@ -14,18 +14,23 @@ minimum. The rounds run on the name strings themselves, so `min(name)` is
 the component label, exactly the reference's group-name rule
 (group_matches.R:94-110), with no id mapping to build or join back.
 
-Scale notes: each round is two shuffles on node keys; an eager
-`localCheckpoint` truncates lineage each round (else the plan doubles per
-iteration). Convergence is observed by that checkpoint: an `Observation`
-on the round's plan yields a count + xor-of-edge-hashes checksum from the
-checkpoint's own job, so a round costs no aggregate or collect beyond it.
-Hub skew (one node with millions of neighbors) is bounded by the algorithm
-itself — large-star strictly reduces big-star neighborhoods.
+Scale notes: each round is three shuffles: each star's per-node min is a
+window over its node's neighbor list (one shuffle on the node key, no
+aggregate joined back), and small-star's `distinct` is the third. An
+eager `localCheckpoint` truncates lineage each round (else the plan
+doubles per iteration). Convergence is observed by that checkpoint: an
+`Observation` on the round's plan yields a count + xor-of-edge-hashes
+checksum from the checkpoint's own job, so a round costs no aggregate or
+collect beyond it. The input edges get no checkpoint: the first round is
+never taken as converged. Hub skew (one node with millions of neighbors)
+is bounded by the algorithm itself — large-star strictly reduces big-star
+neighborhoods; until then a hub's window partition is buffered by one task
+and spills to disk past Spark's window buffer thresholds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..session import materialize
@@ -38,30 +43,27 @@ def _symmetrize(e: DataFrame) -> DataFrame:
 
 
 def _large_star(e: DataFrame) -> DataFrame:
-    nbrs = _symmetrize(e)
-    mins = nbrs.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    # self-loops and duplicate edges change no min over Γ(u) ∪ {u}, and
+    # the duplicates this emits are left for small-star's distinct
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
     return (
-        nbrs.join(mins, "u")
+        _symmetrize(e)
+        .select("u", "v", m.alias("m"))
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
     )
 
 
 def _small_star(e: DataFrame) -> DataFrame:
-    # orient edges high→low so Γ≤ is just the neighbor list
-    dir_e = e.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).where(F.col("u") != F.col("v"))
-    mins = dir_e.groupBy("u").agg(F.min("v").alias("m"))
-    moved = (
-        dir_e.join(mins, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    self_edges = mins.select(F.col("u"), F.col("m").alias("v"))
+    # large-star emits only high→low edges (u > v), so Γ≤(u) is just u's
+    # neighbor list; each edge (u, v) emits (v, m) and u's own (u, m)
+    moved = e.select(
+        "u", "v", F.min("v").over(Window.partitionBy("u")).alias("m")
+    ).select(F.explode(F.array(
+        F.struct(F.col("v").alias("u"), "m"), F.struct("u", "m")
+    )).alias("e"))
     return (
-        moved.unionByName(self_edges)
+        moved.select(F.col("e.u").alias("u"), F.col("e.m").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
@@ -83,6 +85,24 @@ def _observed_checkpoint(e: DataFrame) -> tuple[DataFrame, dict]:
     return e, ob.get
 
 
+def _stars(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
+    """Star rounds over the non-null (src, dst) edges until a round's
+    checkpoint observes the same checksum as the round before. Then every
+    edge is (u: node, v: its component minimum), one per node that is not a
+    minimum. The first round is never taken as converged, so the input
+    needs no checkpoint of its own."""
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
+        F.col("u").isNotNull() & F.col("v").isNotNull()
+    )
+    prev = None
+    for _ in range(max_iter):
+        e, cur = _observed_checkpoint(_small_star(_large_star(e)))
+        if cur == prev:
+            return e
+        prev = cur
+    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "name",
@@ -91,31 +111,19 @@ def connected_components(
 ) -> DataFrame:
     """(name, component) for every node in ``edges``; component = min(name)
     of the connected component (string ordering)."""
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col("u").isNotNull() & F.col("v").isNotNull()
-    )
-    # self-loops carry no connectivity, but their NODES are still part of
-    # the contract ("for every node in edges"): a node whose only edge is
-    # (a, a) must come out as its own singleton component, not vanish
-    selfies = (
-        raw.where(F.col("u") == F.col("v")).select(F.col("u").alias("name")).distinct()
-    )
-    e, prev = _observed_checkpoint(raw.where(F.col("u") != F.col("v")).distinct())
-    for _ in range(max_iter):
-        e, cur = _observed_checkpoint(_small_star(_large_star(e)))
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-
+    e = _stars(edges, src, dst, max_iter)
     # converged: every edge is (node → component-min); roots map to themselves
     members = e.select(F.col("u").alias("name"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("name")).distinct().withColumn(
         "component", F.col("name")
     )
     result = members.unionByName(roots).distinct()
-    # nodes whose ONLY edges were self-loops: singleton components
+    # self-loops carry no connectivity, but their NODES are still part of
+    # the contract ("for every node in edges"): a node whose only edge is
+    # (a, a) must come out as its own singleton component, not vanish
+    selfies = (
+        edges.where(F.col(src) == F.col(dst)).select(F.col(src).alias("name")).distinct()
+    )
     extra = selfies.join(result.select("name"), "name", "left_anti")
     return result.unionByName(extra.withColumn("component", F.col("name")))
 
@@ -175,8 +183,11 @@ def name_clusters(matches: DataFrame) -> DataFrame:
     """Reference group_matches semantics (group_matches.R:60-123): matches
     (name, match[, keep]) → (name, cluster, group_name), keeping only rows
     where group_name != name. ``group_name`` is the component minimum and
-    ``cluster`` its dense id, numbered by ``label_clusters``."""
+    ``cluster`` its dense id, numbered by ``label_clusters`` over the groups
+    the output holds. The converged star edges are exactly these rows, so
+    the roots and self-loop singletons of ``connected_components`` (each
+    with group_name == name) are never built."""
     if "keep" in matches.columns:
         matches = matches.where(F.col("keep") == 1)
-    cc = connected_components(matches, "name", "match")
-    return label_clusters(cc.select("name", F.col("component").alias("group_name")))
+    e = _stars(matches, "name", "match", max_iter=30)
+    return label_clusters(e.select(F.col("u").alias("name"), F.col("v").alias("group_name")))

@@ -29,7 +29,10 @@ def _union_find_components(edges):
     comp = {}
     for n in parent:
         comp.setdefault(find(n), []).append(n)
-    return {n: min(members) for members in comp.values() for n in members}
+    out = {}
+    for members in comp.values():
+        out.update(dict.fromkeys(members, min(members)))
+    return out
 
 
 def _chain(spark, n=40):
@@ -140,7 +143,7 @@ def test_self_loop_only_nodes_are_singletons(spark):
     # "(name, component) for every node in edges": a node whose only edge
     # is a self-loop must surface as its own singleton component; an edge
     # set with no connecting edge at all still converges (its observed
-    # checksum is (0, 0) from the first checkpoint on)
+    # checksum is (0, 0) from the first round on)
     cases = [
         ([("A", "B"), ("C", "C"), ("A", "A")], {("A", "A"), ("B", "A"), ("C", "C")}),
         ([], set()),
@@ -155,6 +158,71 @@ def test_self_loop_only_nodes_are_singletons(spark):
         assert {(r["name"], r["group_name"]) for r in clusters} == {
             (n, c) for n, c in want if n != c
         }, rows
+    # cluster ids are dense over the groups the output holds: the
+    # self-loop-only C takes no id (o_name_clusters' dense_rank)
+    edges = spark.createDataFrame(
+        [("A", "B"), ("C", "C"), ("D", "E")], "name string, match string"
+    )
+    assert sorted(tuple(r) for r in name_clusters(edges).collect()) == [
+        ("B", 1, "A"), ("E", 2, "D")
+    ]
+
+
+def test_star_round_counts(spark, monkeypatch):
+    # rounds, not Spark jobs (AQE moves the job count from call to call):
+    # each star round is one observed checkpoint, and the input has none
+    from name_matching_spark.operators import cc
+
+    calls = []
+    real = cc._observed_checkpoint
+
+    def counting(e):
+        calls.append(1)
+        return real(e)
+
+    def no_cc(*a, **k):
+        raise AssertionError("name_clusters labels the stars directly")
+
+    monkeypatch.setattr(cc, "_observed_checkpoint", counting)
+    monkeypatch.setattr(cc, "connected_components", no_cc)
+    # diameter-1 cliques: one round makes the stars, one more confirms them
+    cliques = [
+        (f"{k}{i}", f"{k}{j}") for k in "PQR" for i in range(5) for j in range(i + 1, 5)
+    ]
+    rows = name_clusters(spark.createDataFrame(cliques, ["name", "match"])).collect()
+    assert len(rows) == 12 and len(calls) == 2
+    calls.clear()
+    rows = name_clusters(_chain(spark)).collect()
+    assert {r["group_name"] for r in rows} == {"X00"} and len(calls) == 7
+
+
+def test_cc_hub_matches_union_find(spark):
+    # a 50,000-leaf hub is one window partition, so one task buffers its
+    # whole neighbourhood; a low spill threshold makes that buffer spill.
+    # Chains off a few leaves put the component minimum rounds away.
+    from pyspark.sql import functions as F
+
+    leaves = [f"L{i:05d}" for i in range(50_000)]
+    edges = [("H", leaf) for leaf in leaves]
+    for k in range(5):
+        path = [leaves[k * 9973]] + [f"C{k}{j}" for j in range(6, -1, -1)]
+        edges += list(zip(path, path[1:]))
+    edges += [("Z1", "Z2"), ("Z2", "Z3")]
+    want = _union_find_components(edges)
+    assert set(want.values()) == {"C00", "Z1"}
+    hub = spark.range(len(leaves)).select(
+        F.lit("H").alias("name"), F.format_string("L%05d", "id").alias("match")
+    )
+    df = hub.unionByName(spark.createDataFrame(edges[len(leaves):], hub.schema))
+    key = "spark.sql.windowExec.buffer.spill.threshold"
+    spark.conf.set(key, "8192")
+    try:
+        got = {r["name"]: r["component"] for r in connected_components(df).collect()}
+        clusters = {(r["name"], r["group_name"]) for r in name_clusters(df).collect()}
+    finally:
+        spark.conf.unset(key)
+    assert got == want
+    assert clusters == {(n, c) for n, c in want.items() if n != c}
 
 
 def test_cc_round_bound_raises(spark):
