@@ -64,16 +64,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ensure_shipped(spark)
-            # drain the PREVIOUS query's parked blocking-index caches (the
-            # fallback registry) so a 47-query driver session does not
-            # accumulate one persisted index copy per query; draining
-            # before, not after, keeps THIS query's lazily-evaluated
-            # DataFrame's caches alive until the driver materializes it
-            from name_matching_spark.operators.blocking import (
-                release_block_caches,
-            )
-
-            release_block_caches()
             return fn(spark, sf_dir)
 
         return run

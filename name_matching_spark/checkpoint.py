@@ -313,7 +313,6 @@ def resolve_entities_checkpointed(
     num_trees: int = 100,
     auto_accept: bool = True,
     corpus_fingerprint: object = None,
-    **match_kwargs,
 ):
     """The resolve driver: documents(doc_id, spans) → entity clusters, as
     the reference makefile DAG (makefile:33-152) staged through one
@@ -345,7 +344,7 @@ def resolve_entities_checkpointed(
     _mn_results: list = []
 
     def _build_master() -> DataFrame:
-        res = match_names(names.select("name"), **match_kwargs)
+        res = match_names(names.select("name"))
         _mn_results.append(res)
         return res.master
 
@@ -353,7 +352,7 @@ def resolve_entities_checkpointed(
         "match_names",
         _build_master,
         depends_on=["extract_names"],
-        params=sorted(match_kwargs.items()),
+        params=[],
         score_cols=["cosine_similarity", "jw_distance", "token_sim"],
         bucket_by=["name", "match"],
         sort_by=["name", "match"],
@@ -370,7 +369,7 @@ def resolve_entities_checkpointed(
     # the name count for the percentile switch is the extract stage's own
     # row count (write or manifest): no Spark job, no fingerprint change
     exact_pct = mgr.results["extract_names"].rows <= APPROX_PERCENTILE_THRESHOLD
-    # a fresh match run hands its persisted parse to the cross-surname
+    # a fresh match run hands its checkpointed parse to the cross-surname
     # screen; a resume that skipped match_names passes None (re-parse)
     name_parts = _mn_results[0].name_parts if _mn_results else None
     screened = mgr.stage(
@@ -392,10 +391,6 @@ def resolve_entities_checkpointed(
         bucket_by=["name", "match"],
         sort_by=["name", "match"],
     )
-    # pre_screen has written its output (or skipped), so the match run's
-    # pinned weights/parse tables are releasable now
-    for res in _mn_results:
-        res.release()
     clusters = mgr.stage(
         "cluster",
         lambda: name_clusters(screened),

@@ -1101,11 +1101,11 @@ def q_match_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.pairs import score_pairs
     from .operators.tfidf import tfidf_cosine_pairs, token_weights
     from .pipeline import merge_score_channels
-    from .session import persist_now
+    from .session import materialize
 
     prepped = _spark_prepped(spark, sf_dir)
     nonempty = prepped.where(F.col("clean_name") != "")
-    weights = persist_now(token_weights(nonempty, "bag_clean"))
+    weights = materialize(token_weights(nonempty, "bag_clean"), eager=True)
     cosine = (
         tfidf_cosine_pairs(nonempty, "bag_clean", threshold=-1.0, weights=weights)
         .withColumn("cosine_similarity", F.round("cosine_similarity", 6))

@@ -674,22 +674,24 @@ def q_cutoff_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent md5 draw — so the split is interior and cumulative
     precision declines smoothly from the top)."""
     from .operators.prescreen import accept_threshold_df, depth1_split_df
+    from .session import materialize
 
     h = SPARK_H.format(x="cast(o_orderkey as string)")
     h2 = SPARK_H.format(x="concat(cast(o_orderkey as string),'L')")
-    scored = (
+    # three consumer branches (split window/totals, accept)
+    scored = materialize(
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .selectExpr(f"{h} % 1000 as hb", f"{h2} % 1000 as hb2")
         .selectExpr(
             "round(hb / 1000.0, 6) as rf_prob",
             "cast(case when hb2 < hb then 1 else 0 end as double) as keep",
-        )
-        .cache()  # three consumer branches (split window/totals, accept)
+        ),
+        eager=True,
     )
     # display rounding happens HERE, not in the operator (the operator
     # returns the unrounded midpoint so it can never cross an adjacent
     # score); scores are 3-decimal buckets, so round 6 is lossless
-    out = (
+    return (
         depth1_split_df(scored)
         .select(F.round("cutoff", 6).alias("cutoff"))
         .crossJoin(
@@ -698,12 +700,6 @@ def q_cutoff_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # both consumers are 1-row scalars: realize them now so the cache can
-    # be released before returning (a long-lived contract session would
-    # otherwise leak one cached table per run)
-    row = out.collect()[0]
-    scored.unpersist()
-    return spark.createDataFrame([row], out.schema)
 
 
 def o_cutoff_split() -> str:

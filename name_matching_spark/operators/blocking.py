@@ -16,12 +16,13 @@ an equi-join on an explicit blocking key:
 Skew: token frequencies are Zipf-distributed, so the inverted index has hot
 keys ("SMITH"). Two mitigations, neither of which drops a pair:
 
-1. **cap-and-split** (``split_oversized_blocks``, the default path inside
+1. **cap-and-split** (``split_oversized_blocks``, the one plan of
    ``pairs_from_index``): a block of size B > max_block is cut into
    g = ⌈B/max_block⌉ sub-groups and every unordered sub-group pair
    (gi ≤ gj) becomes its own task key, so all B·(B-1)/2 pairs are still
-   produced but no single task sees more than ~max_block² of them. Nothing
-   is dropped — recall is preserved at any skew.
+   produced but no single task sees more than ~max_block² of them; a block
+   within the cap is one task. Nothing is dropped — recall is preserved at
+   any skew.
 2. AQE skew-join splitting handles residual imbalance inside the join
    (enabled in session.py).
 """
@@ -31,38 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 # Mersenne prime 2^31-1 for MinHash universal hashing: coefficients and
 # reduced hashes stay below 2^31, so a*h+b < 2^62 never overflows int64
 # (Spark 4 runs ANSI mode — overflow is an error, not a wrap).
 _MERSENNE = (1 << 31) - 1
-
-# DataFrames persisted by pairs_from_index, pending release. The pair
-# outputs are lazy, so the caches must outlive this function — but a
-# long-lived session would otherwise accumulate a full inverted-index
-# copy in executor storage per pair channel per run (ADVICE r3). Callers
-# that own a materialization barrier (match_names) thread their OWN
-# ``registry`` list through and release just that — a process-global
-# registry would let one pipeline's barrier unpersist the still-pending
-# caches of a concurrent pipeline in the same session (driver threads are
-# a supported Spark pattern). The module-level list is only the fallback
-# for registry-less callers (one-shot contract queries, tests).
-_PENDING_CACHES: list[DataFrame] = []
-
-
-def release_block_caches(registry: list[DataFrame] | None = None) -> None:
-    """Unpersist every index/hot-key cache in ``registry`` (default: the
-    module-level fallback registry). Call AFTER the consuming pair
-    DataFrames are materialized (checkpoint/collect/write) — match_names
-    does this at its merged-master checkpoint barrier with its own run-
-    scoped registry."""
-    target = _PENDING_CACHES if registry is None else registry
-    while target:
-        df = target.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session torn down first — nothing to release
-
 
 def token_index(names: DataFrame, bag_col: str, name_col: str = "name") -> DataFrame:
     """(name, token) inverted index, distinct."""
@@ -78,73 +53,33 @@ def pairs_from_index(
     key_col: str,
     name_col: str = "name",
     max_block: int = 2000,
-    registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Self-join the (name, key) index into canonical candidate pairs
     (name, match, key). Pairs are canonical: name < match alphabetically
     (reference utils.R:5-9).
 
-    Blocks larger than ``max_block`` are routed through
-    ``split_oversized_blocks`` (cap-and-split with replicated boundary
-    sub-groups), so the full within-block pair set is produced while no
-    single shuffle task enumerates more than ~max_block² pairs. No key is
-    dropped.
+    One plan for every block size: each index row is tagged with the size
+    of its block when that block exceeds ``max_block`` and routed through
+    ``split_oversized_blocks``, where a block within the cap is the single
+    task ``key#0#0``. So the full within-block pair set is produced while
+    no single shuffle task enumerates more than ~max_block² pairs. No key
+    is dropped.
     """
-    # Pay-as-you-go skew handling (VERDICT r2 item 1): find the oversized
-    # block keys with one map-side-combinable aggregate over the persisted
-    # index — the hot-key set is bounded by |index|/max_block rows (0.05%
-    # of the index at the default cap), so it broadcasts. In the common
-    # case it is EMPTY and the plain equi self-join runs with zero added
-    # overhead: no window count over the index, no eager checkpoint of the
-    # full index (the round-2 fixed cost paid once per pair channel even
-    # when nothing exceeded the cap), no split subtree in the plan at all.
-    # persist() (not localCheckpoint) pins the index across the self-join's
-    # two sides — the explode/distinct subtree is computed once, and
-    # Catalyst can no longer broadcast a *recomputed* copy of the whole
-    # index as a build side (the round-1 OOM-at-scale defect).
-    idx = index.persist()
+    # the index is pinned once by an eager checkpoint: both join sides and
+    # the hot-key aggregate read its blocks, and Catalyst can never
+    # broadcast a *recomputed* copy of the whole index as a build side
+    # (the round-1 OOM-at-scale defect). The hot-key set is bounded by
+    # |index|/max_block rows (0.05% of the index at the default cap), so
+    # the tag rides a broadcast join.
+    idx = materialize(index.select(key_col, name_col), eager=True)
     hot = (
         idx.groupBy(key_col)
         .agg(F.count("*").alias("_bs"))
         .where(F.col("_bs") > max_block)
-        .persist()
     )
-    (_PENDING_CACHES if registry is None else registry).extend([idx, hot])
-    # one job: decides the plan shape and populates both caches
-    has_hot = not hot.isEmpty()
+    tagged = idx.join(F.broadcast(hot), key_col, "left")
 
-    if not has_hot:
-        a = idx.select(F.col(key_col).alias("_k"), F.col(name_col).alias("_na"))
-        b = idx.select(F.col(key_col).alias("_k"), F.col(name_col).alias("_nb"))
-        pairs = (
-            a.join(b, "_k")
-            .where(F.col("_na") < F.col("_nb"))
-            .select(
-                F.col("_na").alias("name"),
-                F.col("_nb").alias("match"),
-                F.col("_k").alias(key_col),
-            )
-        )
-        return pairs
-
-    small = idx.join(F.broadcast(hot.select(key_col)), key_col, "left_anti")
-    # the hot join tags the oversized subset with its block size, which
-    # split_oversized_blocks reuses instead of re-aggregating
-    large = idx.join(F.broadcast(hot), key_col)
-
-    a = small.select(F.col(key_col).alias("_k"), F.col(name_col).alias("_na"))
-    b = small.select(F.col(key_col).alias("_k"), F.col(name_col).alias("_nb"))
-    pairs_small = (
-        a.join(b, "_k")
-        .where(F.col("_na") < F.col("_nb"))
-        .select(
-            F.col("_na").alias("name"),
-            F.col("_nb").alias("match"),
-            F.col("_k").alias(key_col),
-        )
-    )
-
-    tasks = split_oversized_blocks(large, key_col, name_col, cap=max_block)
+    tasks = split_oversized_blocks(tagged, key_col, name_col, cap=max_block)
     ta = tasks.select(
         "task_key",
         "task_lo",
@@ -161,7 +96,7 @@ def pairs_from_index(
     # side rule: diagonal tasks (lo == hi) enumerate the upper triangle of
     # their single sub-group; off-diagonal tasks pair the lo side against the
     # hi side exactly once (each name lives in exactly one sub-group).
-    pairs_large = (
+    return (
         ta.join(tb, "task_key")
         .where(
             (
@@ -180,7 +115,6 @@ def pairs_from_index(
             F.col("block_key").alias(key_col),
         )
     )
-    return pairs_small.unionByName(pairs_large)
 
 
 def shared_word_pairs(
@@ -188,7 +122,6 @@ def shared_word_pairs(
     bag_col: str,
     name_col: str = "name",
     max_block: int = 2000,
-    registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Shared-word matcher (reference match_names.R:500-524): canonical pairs
     whose bags intersect, scored by the number of distinct shared tokens.
@@ -198,7 +131,7 @@ def shared_word_pairs(
     duplicate-free after normalization, and the value is only an RF feature.
     """
     idx = token_index(names, bag_col, name_col)
-    pairs = pairs_from_index(idx, "token", name_col, max_block, registry=registry)
+    pairs = pairs_from_index(idx, "token", name_col, max_block)
     return pairs.groupBy("name", "match").agg(
         F.countDistinct("token").alias("shared_words")
     )
@@ -316,16 +249,17 @@ def split_oversized_blocks(
     gi is replicated to all task keys (gi, gj), gi ≤ gj < g, tagged with the
     side it plays, so cross-sub-group pairs are produced exactly once.
 
-    If the index already carries a ``_bs`` block-size column (the window
-    count computed by ``pairs_from_index``), it is reused — no second
-    aggregation over the index.
+    If the index already carries a ``_bs`` block-size column (the hot-key
+    tag of ``pairs_from_index``, null for a block within the cap), it is
+    reused — no second aggregation over the index. A block of null or
+    at-most-cap size is one sub-group: the single task ``key#0#0``.
     """
     if "_bs" in index.columns:
         idx = index
     else:
         sizes = index.groupBy(key_col).agg(F.count("*").alias("_bs"))
         idx = index.join(sizes, key_col)
-    idx = idx.withColumn("_g", F.expr(f"int(ceil(_bs / {cap}))"))
+    idx = idx.withColumn("_g", F.expr(f"coalesce(int(ceil(_bs / {cap})), 1)"))
     idx = idx.withColumn("_gi", F.pmod(F.xxhash64(F.col(name_col)), F.col("_g")).cast("int"))
     # replicate each row to every (min(gi,gj), max(gi,gj)) task it joins
     idx = idx.withColumn(

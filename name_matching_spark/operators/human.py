@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..constants import COMPANY_REGEX_JAVA, FIRST_NAMES, NICKNAMES, SURNAMES
 from ..functions.normalize import with_clean_name
+from ..session import materialize
 from .pairs import score_pairs
 
 
@@ -120,22 +121,18 @@ def match_first_name(
 
     With ``return_parts`` returns ``(scored, parts)`` where ``parts`` is the
     full (uncompany-filtered) name-part table — (name, clean_name, company,
-    last_name, first_name, initials). The pre-screen's cross-surname rule
-    consumes it so the dictionary parse over the name universe runs ONCE per
-    pipeline, not once per stage (VERDICT r2 item 1).
+    last_name, first_name, initials), checkpointed. The pre-screen's
+    cross-surname rule consumes it so the dictionary parse over the name
+    universe runs ONCE per pipeline, not once per stage (VERDICT r2 item 1).
     """
     df = names.select(name_col).distinct()
     df = with_clean_name(df, name_col, "clean_name", drop_common=False, human=True)
     # the extract chain (dict joins + window) feeds both sides of the
     # last-name self-join AND, via return_parts, the pre-screen's
-    # cross-surname rule — pin it once so it is computed once and cached,
-    # not recomputed per consumer (see PLANS.md, same defect class as the
-    # pair index). persist_now (persist + count trigger), NOT an eager
-    # checkpoint: the block copy measured ~5s slower at sf0.1, while a
-    # lazy persist lets the self-join's two branches race the cold cache.
-    from ..session import persist_now
-
-    split = persist_now(extract_name(df, "clean_name"))
+    # cross-surname rule — an eager checkpoint computes it once for every
+    # consumer (see PLANS.md, same defect class as the pair index); a lazy
+    # pin would let the self-join's two branches each recompute it.
+    split = materialize(extract_name(df, "clean_name"), eager=True)
     humans = split.where(~F.col("company") & F.col("last_name").isNotNull())
     humans = humans.withColumn(
         "check_initials",

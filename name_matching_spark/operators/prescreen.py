@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..constants import HUMAN_COS_THRESHOLD, HUMAN_JW_THRESHOLD, IMPORTANCE_MIN_MAX_RATIO
 from ..functions.normalize import canonical_pair, word_count_expr
+from ..session import materialize
 
 _BIG = 1e10
 _RF_FEATURES = [
@@ -134,10 +135,20 @@ def count_percentiles(
 # random forest screen
 # ---------------------------------------------------------------------------
 
+def _fit_layout(df: DataFrame) -> DataFrame:
+    """One sorted partition. MLlib's bagging and split sampling and
+    ``randomSplit`` all draw per partition, so a forest fitted on the same
+    rows under a different upstream partitioning would differ; on this
+    layout it is a function of the rows alone. The labeled set is small by
+    construction (see ``depth1_split_df``)."""
+    return df.repartition(1).sortWithinPartitions(*df.columns)
+
+
 def train_rf(train: DataFrame, num_trees: int = 500, seed: int = 42):
     """RandomForestRegressor on the reference's feature set
     (pre_screen_names.R:66-71): keep ~ shared_words + cosine_similarity +
-    jw_distance + human_jw_distance + word_count + sum_n."""
+    jw_distance + human_jw_distance + word_count + sum_n. Fitted on
+    ``_fit_layout`` of the labeled rows."""
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import RandomForestRegressor
 
@@ -154,9 +165,8 @@ def train_rf(train: DataFrame, num_trees: int = 500, seed: int = 42):
         seed=seed,
     )
     data = assembler.transform(
-        _with_feature_cols(train.where(F.col("keep").isNotNull())).withColumn(
-            "keep", F.col("keep").cast("double")
-        )
+        _with_feature_cols(_fit_layout(train.where(F.col("keep").isNotNull())))
+        .withColumn("keep", F.col("keep").cast("double"))
     )
     model = rf.fit(data)
     return assembler, model
@@ -309,7 +319,8 @@ def rf_thresholds(
     seed: int = 42,
     target_precision: float = 0.98,
 ) -> tuple[float, float]:
-    """(cutoff, accept_threshold) from one 80/20 split.
+    """(cutoff, accept_threshold) from one 80/20 split of ``_fit_layout``
+    of the labeled rows.
 
     ``cutoff`` is the reference's reviewer-routing rule: a depth-1 decision
     tree on rf_prob (pre_screen_names.R:88-114) — below it, auto-reject.
@@ -326,15 +337,17 @@ def rf_thresholds(
     Acceptance must clear a stricter, precision-calibrated bar; the band
     between the two thresholds stays keep=NULL — the review queue
     (jobs/review_job.py emits it)."""
-    labeled = train.where(F.col("keep").isNotNull())
+    labeled = _fit_layout(train.where(F.col("keep").isNotNull()))
     tr, te = labeled.randomSplit([0.8, 0.2], seed=seed)
     assembler, model = train_rf(tr, num_trees=num_trees, seed=seed)
-    scored = rf_predict(te, assembler, model).select("rf_prob", "keep").cache()
+    # both thresholds read the held-out scores: score them once
+    scored = materialize(
+        rf_predict(te, assembler, model).select("rf_prob", "keep"), eager=True
+    )
     cutoff = float(depth1_split_df(scored).first()["cutoff"])
     accept = float(
         accept_threshold_df(scored, target_precision).first()["accept"]
     )
-    scored.unpersist()
     return cutoff, max(accept, cutoff)
 
 
@@ -383,7 +396,7 @@ def cross_surname_screen(df: DataFrame, name_parts: DataFrame | None = None) -> 
     surname aliases ('JOHNSON'/'JOHNSTON') out of the auto-reject.
 
     ``name_parts`` (name, clean_name, company, last_name — the human
-    channel's persisted parse, match_first_name(return_parts=True)) lets the
+    channel's checkpointed parse, match_first_name(return_parts=True)) lets the
     dictionary parse over the name universe run once per pipeline; when
     None (standalone use) it is recomputed from the pair table's distinct
     names — one dictionary-join pass, identical result.
@@ -587,12 +600,13 @@ def pre_screen(
 
     # 7. RF screen (:293-304). ``labeled_pairs`` carries (name, match, keep)
     # human labels (the fixture equivalent of training/leases_sample.csv);
-    # features are taken from the pair table just computed.
+    # features are taken from the pair table just computed. ``train`` is
+    # checkpointed: the split and the final fit both read it.
     if labeled_pairs is not None:
         df = df.withColumn(
             "human_jw_distance", F.coalesce("human_jw_distance", F.lit(1.0))
         )
-        train = (
+        train = materialize(
             df.select("name", "match", *_RF_FEATURES)
             .join(
                 labeled_pairs.select(
@@ -602,8 +616,8 @@ def pre_screen(
             )
             .withColumn("keep", F.col("_lbl"))
             .drop("_lbl")
-            .fillna({c: 0.0 for c in _RF_FEATURES})
-            .cache()
+            .fillna({c: 0.0 for c in _RF_FEATURES}),
+            eager=True,
         )
         cutoff, accept_thr = rf_thresholds(train, num_trees=num_trees, seed=seed)
         assembler, model = train_rf(train, num_trees=num_trees, seed=seed)

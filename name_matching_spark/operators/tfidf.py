@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def token_weights(
     names: DataFrame, bag_col: str, name_col: str = "name"
@@ -56,18 +58,15 @@ def tfidf_cosine_pairs(
     Output: (name, match, cosine_similarity). Equivalent to the reference's
     match_names_cosine (match_names.R:528-559) without the dense matrix.
 
-    ``weights`` lets a caller share one persisted ``token_weights`` table
-    between this join and the backfill pass (match_names computes both over
-    the same corpus — one weights table, four join branches).
+    ``weights`` lets a caller share one checkpointed ``token_weights``
+    table between this join and the backfill pass (match_names computes
+    both over the same corpus — one weights table, four join branches).
     """
     # weights feed both sides of the pair self-join (and norms are an agg
-    # over the same rows) — pin once instead of re-deriving the tokenize/
-    # normalize lineage per join branch (persist_now: both branches must
-    # see a WARM cache, else they race it and each recomputes the lineage)
+    # over the same rows) — one eager checkpoint instead of re-deriving the
+    # tokenize/normalize lineage per join branch
     if weights is None:
-        from ..session import persist_now
-
-        weights = persist_now(token_weights(names, bag_col, name_col))
+        weights = materialize(token_weights(names, bag_col, name_col), eager=True)
     a = weights.select(
         F.col("token"),
         F.col(name_col).alias("name"),

@@ -22,13 +22,13 @@ Channel → blocking key:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .constants import COSINE_THRESHOLD, JARO_THRESHOLD
-from .session import materialize, persist_now
+from .session import materialize
 from .functions.normalize import canonical_pair, with_clean_name, with_word_bag
 from .operators.blocking import (
     char_shingle_band_keys,
@@ -46,22 +46,8 @@ from .operators.tfidf import paired_cosine, tfidf_cosine_pairs, token_weights
 @dataclass
 class MatchNamesResult:
     master: DataFrame          # the candidate-pair table with all scores
-    name_parts: DataFrame | None = None  # human-channel parse (persisted),
+    name_parts: DataFrame | None = None  # human-channel parse (checkpointed),
     # reused by pre_screen's cross-surname rule instead of re-parsing
-    caches: list = field(default_factory=list)  # tables this run persisted
-    # (tf-idf weights, the human parse) that outlive the merge barrier
-    # because the LAZY master/backfill still references them
-
-    def release(self) -> None:
-        """Unpersist this run's pinned tables. Call once the downstream
-        consumers of ``master``/``name_parts`` are materialized (a later
-        evaluation would silently recompute them — correct, just slower);
-        without this a long-lived session accumulates one weights + parse
-        cache per match_names run (same defect class as the block-index
-        caches, which release at the merge barrier automatically)."""
-        for df in self.caches:
-            df.unpersist()
-        self.caches.clear()
 
 
 def prepare_names(names: DataFrame, name_col: str = "name") -> DataFrame:
@@ -89,13 +75,7 @@ def prepare_names(names: DataFrame, name_col: str = "name") -> DataFrame:
     return df
 
 
-def jaro_candidates(
-    names: DataFrame,
-    max_block: int,
-    lsh_hashes: int,
-    lsh_bands: int,
-    registry: list | None = None,
-) -> DataFrame:
+def jaro_candidates(names: DataFrame, max_block: int = 2000) -> DataFrame:
     """Blocked candidate pairs (name, match) for the Jaro channel."""
     nonempty = names.where(F.col("clean_name") != "")
     ft = first_token_key(nonempty, "bag_clean", out="bkey").select(
@@ -104,9 +84,9 @@ def jaro_candidates(
     mp = with_metaphone_key(nonempty, "bag_clean", out="bkey").select(
         "name", F.concat(F.lit("mp:"), F.col("bkey")).alias("bkey")
     )
-    lsh = minhash_band_keys(
-        nonempty, "bag_clean", num_hashes=lsh_hashes, bands=lsh_bands
-    ).select("name", F.concat(F.lit("lsh:"), F.col("band_key")).alias("bkey"))
+    lsh = minhash_band_keys(nonempty, "bag_clean").select(
+        "name", F.concat(F.lit("lsh:"), F.col("band_key")).alias("bkey")
+    )
     # char-shingle LSH: the only family that survives a typo in the first
     # token (which defeats ft, mp AND token-LSH at once) — found and
     # quantified by the blocking-recall harness (recall.py, RECALL_r05)
@@ -114,18 +94,11 @@ def jaro_candidates(
         "name", F.concat(F.lit("csh:"), F.col("band_key")).alias("bkey")
     )
     index = ft.unionByName(mp).unionByName(lsh).unionByName(csh).distinct()
-    pairs = pairs_from_index(index, "bkey", max_block=max_block, registry=registry)
+    pairs = pairs_from_index(index, "bkey", max_block=max_block)
     return pairs.select("name", "match").distinct()
 
 
-def match_names(
-    names: DataFrame,
-    cosine_threshold: float = COSINE_THRESHOLD,
-    jaro_threshold: float = JARO_THRESHOLD,
-    max_block: int = 2000,
-    lsh_hashes: int = 16,
-    lsh_bands: int = 4,
-) -> MatchNamesResult:
+def match_names(names: DataFrame) -> MatchNamesResult:
     """Candidate-pair table with the full score schema
     (match_names.R:806-808): name, match, shared_words, cosine_similarity,
     jw_distance, human_jw_distance, human_cosine_similarity, initials_match.
@@ -152,32 +125,24 @@ def match_names(
     # --- channel 2: tf-idf cosine (match_names.R:608-636)
     # ONE tf-idf weights table serves both the cosine channel and the
     # backfill's paired_cosine (identical corpus — round 2 computed and
-    # checkpointed it twice); persist covers all four join branches without
-    # a barrier job.
-    weights = persist_now(
-        token_weights(prepped.where(F.col("clean_name") != ""), "bag_clean")
+    # checkpointed it twice); one eager checkpoint serves all four join
+    # branches.
+    weights = materialize(
+        token_weights(prepped.where(F.col("clean_name") != ""), "bag_clean"),
+        eager=True,
     )
     cosine = tfidf_cosine_pairs(
         prepped.where(F.col("clean_name") != ""),
         "bag_clean",
-        threshold=cosine_threshold,
+        threshold=COSINE_THRESHOLD,
         weights=weights,
     )
 
-    # run-scoped cache registry: this match_names invocation's persisted
-    # index/hot-key tables, released at OUR merge barrier (a process-global
-    # registry would let a concurrent pipeline's barrier unpersist them)
-    block_caches: list = []
-
     # --- channel 3: shared word (match_names.R:643-654)
-    shared = shared_word_pairs(
-        prepped, "bag_shared", max_block=max_block, registry=block_caches
-    )
+    shared = shared_word_pairs(prepped, "bag_shared")
 
     # --- channel 4: Jaro on cleaned names (match_names.R:660-674)
-    cand = jaro_candidates(
-        prepped, max_block, lsh_hashes, lsh_bands, registry=block_caches
-    )
+    cand = jaro_candidates(prepped)
     cand = (
         cand.join(prepped.select("name", F.col("clean_name").alias("clean_a")), "name")
         .join(
@@ -189,16 +154,12 @@ def match_names(
     )
     jaro = (
         score_pairs(cand, [("jw_distance", "jaro_distance", "clean_a", "clean_b")])
-        .where(F.col("jw_distance") <= jaro_threshold)
+        .where(F.col("jw_distance") <= JARO_THRESHOLD)
         .select("name", "match", "jw_distance")
     )
 
-    master = merge_score_channels(
-        cosine, shared, jaro, human, prepped, weights, block_caches=block_caches
-    )
-    return MatchNamesResult(
-        master=master, name_parts=name_parts, caches=[weights, name_parts]
-    )
+    master = merge_score_channels(cosine, shared, jaro, human, prepped, weights)
+    return MatchNamesResult(master=master, name_parts=name_parts)
 
 
 def merge_score_channels(
@@ -208,7 +169,6 @@ def merge_score_channels(
     human: DataFrame,
     prepped: DataFrame,
     weights: DataFrame,
-    block_caches: list | None = None,
 ) -> DataFrame:
     """The 4-way channel merge + set-oriented score backfill — the heart of
     match_names (match_names.R:716-808), factored out so the contract layer
@@ -216,7 +176,7 @@ def merge_score_channels(
     channel inputs (contract_extras.q_match_master).
 
     ``prepped`` must carry (name, bag_clean, bag_nc); ``weights`` is the
-    persisted token_weights table the cosine channel used.
+    checkpointed token_weights table the cosine channel used.
     """
     # --- 4-way full outer merge (match_names.R:716-722) ---------------------
     # Each channel contributes DISTINCT (name, match) rows and disjoint
@@ -259,14 +219,6 @@ def merge_score_channels(
     # recompute. One localCheckpoint makes the backfill linear and truncates
     # the multi-channel lineage that AQE otherwise re-optimizes per stage.
     master = materialize(merged, eager=True)
-    # the channel subtrees are now fully evaluated: release the inverted-
-    # index caches pairs_from_index pinned (long-lived sessions would
-    # otherwise accumulate one full index copy per channel per run).
-    # ``block_caches`` is the CALLER's run-scoped registry; None falls back
-    # to the module-level registry for registry-less channel builders.
-    from .operators.blocking import release_block_caches
-
-    release_block_caches(block_caches)
 
     # --- set-oriented backfill (match_names.R:729-808) ---------------------
     # shared_words: recompute with drop_common_words=FALSE for missing pairs
@@ -290,7 +242,7 @@ def merge_score_channels(
     # cosine: paired tf-idf over the global corpus weights (deviation from
     # the reference, which refits idf on just the missing-pair corpus at
     # :738-783 — one consistent corpus is both cheaper and more principled).
-    # `weights` is the same persisted table the cosine channel used.
+    # `weights` is the same checkpointed table the cosine channel used.
     missing_cos = master.where(F.col("cosine_similarity").isNull()).select("name", "match")
     backfilled_cos = paired_cosine(missing_cos, weights, "name", "match", "_cos_bf")
     master = master.join(backfilled_cos, ["name", "match"], "left").withColumn(
@@ -326,7 +278,6 @@ def incremental_resolve(
     shared_words_accept: int = 2,
     member_sample_k: int = 0,
     match_fn=None,
-    **match_kwargs,
 ) -> DataFrame:
     """Batch-incremental resolution — the re-run path when NEW names arrive
     and the prior clustering should be extended, not recomputed.
@@ -380,7 +331,7 @@ def incremental_resolve(
     # matcher so the universe/prior-edge/re-cluster logic here is
     # hash-checked independently of the scoring machinery (which has its
     # own oracles — match_master et al.).
-    mm = (match_fn or match_names)(universe, **match_kwargs)
+    mm = (match_fn or match_names)(universe)
     accepted = mm.master.where(
         (F.col("jw_distance") <= jaro_accept)
         | (F.col("cosine_similarity") >= cosine_accept)

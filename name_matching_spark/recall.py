@@ -524,9 +524,7 @@ def recall_jaro_channel(
             "name", F.col("band_key").alias("bkey")
         )
     )
-    union_pairs = jaro_candidates(
-        nonempty, max_block=1_000_000, lsh_hashes=16, lsh_bands=4
-    )
+    union_pairs = jaro_candidates(nonempty, max_block=1_000_000)
     union = {(r["name"], r["match"]) for r in union_pairs.collect()}
     # the full 4-channel candidate surface (shared-word + cosine + jaro +
     # human), i.e. what downstream scoring/clustering actually sees
@@ -535,7 +533,6 @@ def recall_jaro_channel(
         _canon(r["name"], r["match"])
         for r in mres.master.select("name", "match").collect()
     }
-    mres.release()
     # ... plus the address channel the resolve driver adds (shared coded
     # address) — labeled_pairs are EXCLUDED: they are review output over
     # already-surfaced candidates, so counting them as blocking recall
@@ -670,7 +667,6 @@ def recall_human_channel(spark: SparkSession, sf_dir: str) -> dict:
         for r in out.select("name", "match").collect()
     }
     rows = parts.select("name", "company", "last_name", "first_name").collect()
-    parts.unpersist()
 
     hum = [
         (r["name"], r["last_name"], r["first_name"])

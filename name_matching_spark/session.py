@@ -13,6 +13,9 @@ unchanged on a multi-executor cluster:
 - ``guard_zip_invalidation``: a zip archive on the Python path is re-read
   only when it changed, so a UDF task does not pay 0.15-0.5 s re-reading
   pyspark.zip and the Spark core jar before its body runs.
+- ``materialize``: the one lifetime rule for a pinned table — an eager
+  checkpoint that Spark frees once nothing references it, never a cache
+  that must be released by hand.
 """
 
 from __future__ import annotations
@@ -180,24 +183,15 @@ def set_reliable_checkpoint_dir(path: str | None) -> None:
     _RELIABLE_DIR = path
 
 
-def persist_now(df):
-    """persist() + a count() trigger: pins a DataFrame that feeds MULTIPLE
-    branches of a downstream join before the consuming job runs. persist()
-    alone is lazy — if the first action triggers several branches at once,
-    each branch races the cold cache and recomputes the full lineage
-    (the round-1 per-branch re-evaluation defect). The count is one cheap
-    job over the cached data; unlike an eager checkpoint there is no block
-    copy, and unlike localCheckpoint the cached plan keeps its statistics
-    for join planning."""
-    df = df.persist()
-    df.count()
-    return df
-
-
 def materialize(df, eager: bool = True):
-    """Cut lineage at a pipeline materialization point (iterative CC rounds,
-    the match-master table, tf-idf weights). Uses the policy set by
-    ``set_reliable_checkpoint_dir``; defaults to localCheckpoint."""
+    """Cut lineage at a pipeline materialization point: the one way the
+    batch path pins a table that more than one branch reads (the CC
+    rounds, the prepared names, the human parse, the tf-idf weights, the
+    blocking indexes, the merged master, the forest's held-out scores).
+    Uses the policy set by ``set_reliable_checkpoint_dir``; defaults to
+    localCheckpoint. Nothing is released by hand: Spark's ContextCleaner
+    frees a local checkpoint's blocks once no DataFrame references them,
+    and reliable mode leaves the checkpoint files in the directory."""
     dir_ = _RELIABLE_DIR or os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if dir_:
         sc = df.sparkSession.sparkContext

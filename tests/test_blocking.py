@@ -161,18 +161,19 @@ def test_split_fuzz_property(spark):
 
 
 def test_pairs_from_index_plan_shapes(spark):
-    # perf regression guard for the pay-as-you-go skew design (round 3):
-    # with no oversized block, the plan must contain NO split machinery and
-    # the self-join must read the CACHED index (never a recomputed copy —
-    # the round-1 broadcast-of-recomputed-subtree defect); with a forced
-    # tiny cap the split branch must appear.
+    # one plan for every cap: the split machinery (task_key) is always
+    # planned, and every scan in it reads the ONE checkpointed index —
+    # never an in-memory cache and never a recomputed copy of the index
+    # subtree (the round-1 broadcast-of-recomputed-subtree defect) — with
+    # no per-row window count over the index.
     import io
+    import re
     from contextlib import redirect_stdout
 
     from name_matching_spark.operators.blocking import pairs_from_index
 
-    idx = spark.createDataFrame(
-        [(f"n{i:02d}", f"K{i % 5}") for i in range(40)], ["name", "token"]
+    idx = spark.range(40).selectExpr(
+        "format_string('n%02d', id) AS name", "concat('K', id % 5) AS token"
     )
 
     def plan_of(df):
@@ -181,15 +182,15 @@ def test_pairs_from_index_plan_shapes(spark):
             df.explain("formatted")
         return buf.getvalue()
 
-    pairs = pairs_from_index(idx, "token", max_block=2000)
-    p = plan_of(pairs)
-    assert "task_key" not in p          # no split subtree planned
-    assert "InMemoryTableScan" in p     # join sides read the cached index
-    assert "Window" not in p            # no per-row window count over the index
-
-    pairs_split = pairs_from_index(idx, "token", max_block=3)
-    ps = plan_of(pairs_split)
-    assert "task_key" in ps             # split branch active under a hot cap
+    for max_block in (2000, 3):
+        p = plan_of(pairs_from_index(idx, "token", max_block=max_block))
+        assert "task_key" in p
+        assert "InMemoryTableScan" not in p
+        assert "Range" not in p             # the index lineage is cut
+        assert "Window" not in p
+        scans = re.findall(r"Arguments: \[.*?\], (\w+\[\d+\]) at \w*[cC]heckpoint", p)
+        assert len(scans) == len(re.findall(r"^\(\d+\) Scan ExistingRDD", p, re.M)) >= 2
+        assert len(set(scans)) == 1         # both join sides: one checkpoint
 
 
 def test_char_shingle_short_names_excluded(spark):

@@ -79,9 +79,7 @@ def _resolve(names_df):
         | (F.col("cosine_similarity") >= ACCEPT["cosine_accept"])
         | (F.col("shared_words") >= ACCEPT["shared_words_accept"])
     ).select("name", "match")
-    clusters = name_clusters(accepted)
-    mm.release()
-    return clusters
+    return name_clusters(accepted)
 
 
 def _cluster_sets(clusters) -> dict[str, frozenset]:

@@ -7,7 +7,14 @@ from name_matching_spark.datagen import ensure_fixtures
 from name_matching_spark.evaluate import cluster_pairs, pairwise_f1, truth_pairs
 
 
+def _cache_empty(spark) -> bool:
+    """No table is pinned in the session's CacheManager: every pinned
+    intermediate is a checkpoint, which needs no release."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_pipeline_f1_gate(spark, tmp_path):
+    spark.catalog.clearCache()
     fx = ensure_fixtures("sf0.001")
     docs = spark.read.parquet(os.path.join(fx, "documents_spans.parquet"))
     addr = spark.read.parquet(os.path.join(fx, "addresses.parquet"))
@@ -30,6 +37,7 @@ def test_pipeline_f1_gate(spark, tmp_path):
     )
     # span-sequence invariant holds end-to-end: source docs never mutated
     assert docs.count() > 0
+    assert _cache_empty(spark)
 
 
 def test_incremental_resolve(spark):
@@ -59,6 +67,22 @@ def test_incremental_resolve(spark):
     # the unrelated newcomer joins nothing (name_clusters emits members
     # only, so it is absent — its own singleton)
     assert "WEMFAZKA PETROLEUM" not in out
+
+
+def test_incremental_resolve_leaves_no_cache(spark):
+    # a refresh pins its intermediates as checkpoints only: repeated
+    # refreshes in one session leave nothing in the CacheManager
+    from name_matching_spark.pipeline import incremental_resolve
+
+    spark.catalog.clearCache()
+    prior = spark.createDataFrame(
+        [("MERKAVDI OPERATING", 1, "MERKAVDI ENERGY")],
+        "name string, cluster long, group_name string",
+    )
+    new = spark.createDataFrame([("MERKAVDO ENERGY",)], "name string")
+    for _ in range(2):
+        assert incremental_resolve(new, prior).count() > 0
+        assert _cache_empty(spark)
 
 
 def test_incremental_resolve_member_sample(spark):

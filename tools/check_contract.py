@@ -98,15 +98,6 @@ def main(argv: list[str]) -> int:
         t0 = time.time()
         try:
             sdf = queries[name](spark, SF_DIR).toPandas()
-            # registry-less contract queries park their persisted blocking
-            # index/hot tables in the module fallback registry; drain it per
-            # query or a full 47-query session accumulates one cached index
-            # copy per query in executor storage (review finding)
-            from name_matching_spark.operators.blocking import (
-                release_block_caches,
-            )
-
-            release_block_caches()
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
