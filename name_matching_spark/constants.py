@@ -97,6 +97,9 @@ PO_NUM_REGEX: str = (
 # code/matching/match_group_names.R:44-46; code/functions/pre_screen_names.R:150).
 COSINE_THRESHOLD: float = 0.4
 GROUP_COSINE_THRESHOLD: float = 0.65
+# round 2's automatic stand-in for the reference's human review of the
+# group-name pairs (an extension; see operators/grouping.py)
+GROUP_TOKEN_SIM_ACCEPT: float = 0.85
 JARO_THRESHOLD: float = 0.15
 HUMAN_JW_THRESHOLD: float = 0.6
 HUMAN_COS_THRESHOLD: float = 0.6

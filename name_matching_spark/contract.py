@@ -237,11 +237,12 @@ prepped AS (
 
 def _spark_prepped(spark: SparkSession, sf_dir: str, extra_edges: bool = False) -> DataFrame:
     from .pipeline import prepare_names
+    from .session import materialize
 
     # materialized: every downstream query self-joins the prepped corpus
-    return prepare_names(
-        _corpus_df(spark, sf_dir, extra_edges).select("name")
-    ).localCheckpoint(eager=True)
+    return materialize(
+        prepare_names(_corpus_df(spark, sf_dir, extra_edges).select("name"))
+    )
 
 
 # ===========================================================================

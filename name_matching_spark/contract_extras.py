@@ -885,12 +885,13 @@ def q_group_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.grouping import regroup_clusters
     from .operators.tfidf import tfidf_cosine_pairs
     from .pipeline import prepare_names
+    from .session import materialize
 
     prepped = _spark_prepped(spark, sf_dir)
     scored = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
-    clusters = name_clusters(
-        scored.where(F.col("shared_words") >= 2).select("name", "match")
-    ).localCheckpoint(eager=True)
+    clusters = materialize(
+        name_clusters(scored.where(F.col("shared_words") >= 2).select("name", "match"))
+    )
     gnames = clusters.select(F.col("group_name").alias("name")).distinct()
     gp = prepare_names(gnames).where(F.col("clean_name") != "")
     gpairs = tfidf_cosine_pairs(gp, "bag_clean", threshold=0.65).select("name", "match")
@@ -1082,66 +1083,31 @@ GROUP BY event_type, time_bucket(INTERVAL 1 HOUR, ts)
 
 
 # ---------------------------------------------------------------------------
-# 4-way channel merge + backfill master (match_names.R:716-808) — drives the
-# REAL pipeline.merge_score_channels with oracle-expressible channels.
-# Channel difference vs production match_names: the Jaro channel blocks on
-# first-token only (the metaphone and xxhash-LSH keys are imperative/
-# non-SQL; their banding math is oracled separately in minhash_bands), and
-# score thresholds apply to round(x, 6) on both sides so an exact-boundary
-# pair can't flip membership on last-ulp float association differences.
-# Everything downstream of the channels — the union-all merge, null-skipping
-# max, shared-word/cosine/raw-jaro backfills and the Monge-Elkan token_sim —
-# is the production code path, hash-compared end to end.
+# match master (match_names.R:599-808) — drives the REAL
+# pipeline.score_candidates with an oracle-expressible Jaro index. Channel
+# difference vs production match_names: the Jaro families are first-token
+# only (the metaphone and xxhash-LSH keys are imperative/non-SQL; their
+# banding math is oracled separately in minhash_bands). The oracle keeps
+# the reference's shape — four channels, a 4-way merge and three
+# backfills, thresholds on round(x, 6) — so the one candidate pass, its
+# channel rules and the Monge-Elkan token_sim are hash-compared end to end
+# against an independent formulation. No cosine or first-token Jaro value
+# of the corpus lies where round(·, 6) flips a threshold decision.
 # ---------------------------------------------------------------------------
 
 def q_match_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .contract import _spark_prepped
-    from .operators.blocking import first_token_key, pairs_from_index, shared_word_pairs
-    from .operators.human import match_first_name
-    from .operators.pairs import score_pairs
-    from .operators.tfidf import tfidf_cosine_pairs, token_weights
-    from .pipeline import merge_score_channels
-    from .session import materialize
+    from .operators.blocking import first_token_key, tag_keys
+    from .operators.human import name_parts
+    from .pipeline import score_candidates
 
     prepped = _spark_prepped(spark, sf_dir)
-    nonempty = prepped.where(F.col("clean_name") != "")
-    weights = materialize(token_weights(nonempty, "bag_clean"), eager=True)
-    cosine = (
-        tfidf_cosine_pairs(nonempty, "bag_clean", threshold=-1.0, weights=weights)
-        .withColumn("cosine_similarity", F.round("cosine_similarity", 6))
-        .where(F.col("cosine_similarity") >= 0.4)
+    ft = tag_keys(
+        first_token_key(prepped.where(F.col("clean_name") != ""), "bag_clean", out="bkey"),
+        "bkey",
+        "ft",
     )
-    shared = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
-    idx = first_token_key(nonempty, "bag_clean", out="bkey").select("name", "bkey")
-    ft_pairs = pairs_from_index(idx, "bkey", max_block=1_000_000)
-    cand = (
-        ft_pairs.select("name", "match")
-        .distinct()
-        .join(nonempty.select("name", F.col("clean_name").alias("ca")), "name")
-        .join(
-            nonempty.select(F.col("name").alias("match"), F.col("clean_name").alias("cb")),
-            "match",
-        )
-    )
-    jaro = (
-        score_pairs(cand, [("jw_distance", "jaro_distance", "ca", "cb")])
-        .withColumn("jw_distance", F.round("jw_distance", 6))
-        .where(F.col("jw_distance") <= 0.15)
-        .select("name", "match", "jw_distance")
-    )
-    human = (
-        match_first_name(prepped.select("name"))
-        .select(
-            F.least("name", "match").alias("_n"),
-            F.greatest("name", "match").alias("_m"),
-            F.round("human_jw_distance", 6).alias("human_jw_distance"),
-            F.round("human_cosine_similarity", 6).alias("human_cosine_similarity"),
-            "initials_match",
-        )
-        .withColumnsRenamed({"_n": "name", "_m": "match"})
-        .dropDuplicates(["name", "match"])
-    )
-    master = merge_score_channels(cosine, shared, jaro, human, prepped, weights)
+    master = score_candidates(prepped, name_parts(prepped.select("name")), ft)
     return master.select(
         "name",
         "match",

@@ -543,9 +543,10 @@ def q_importance_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.blocking import shared_word_pairs
     from .operators.prescreen import count_percentiles, importance_distance_udf
     from .pipeline import prepare_names
+    from .session import materialize
 
     corpus = _corpus_df(spark, sf_dir)
-    prepped = prepare_names(corpus.select("name")).localCheckpoint(eager=True)
+    prepped = materialize(prepare_names(corpus.select("name")))
     pairs = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
     counts = corpus.select("name", "n")
     df = (

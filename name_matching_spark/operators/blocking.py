@@ -1,8 +1,12 @@
 """Blocking: candidate-pair generation without O(n²).
 
 The reference enumerates every pair with nested loops
-(code/functions/match_names.R:468-490,533-552); here each matcher channel is
-an equi-join on an explicit blocking key:
+(code/functions/match_names.R:468-490,533-552); here candidates come from
+an inverted (name, key) index and ONE self-join over it
+(``pairs_from_index``). Each key family is a blocking scheme, tagged with a
+family prefix (``tag_keys``) so that one index can hold them all and one
+self-join generates every comparison once (SparkER's single blocking
+collection):
 
 - shared-token inverted index (the reference's own implicit blocking key:
   two names are compared by the shared-word matcher iff their cleaned token
@@ -12,6 +16,9 @@ an equi-join on an explicit blocking key:
 - MinHash-LSH band signatures over the token bag (north-star recall channel)
   — computed entirely in Spark SQL with xxhash64 + higher-order aggregates,
   no UDF.
+
+``pipeline.candidate_families`` runs the self-join over the families of
+``match_names``.
 
 Skew: token frequencies are Zipf-distributed, so the inverted index has hot
 keys ("SMITH"). Two mitigations, neither of which drops a pair:
@@ -46,6 +53,12 @@ def token_index(names: DataFrame, bag_col: str, name_col: str = "name") -> DataF
         .where(F.col("token") != "")
         .distinct()
     )
+
+
+def tag_keys(index: DataFrame, key_col: str, family: str) -> DataFrame:
+    """(name, key) rows of one key family: ``key`` is ``<family>:<key_col>``,
+    so keys of different families never collide in a shared index."""
+    return index.select("name", F.concat(F.lit(f"{family}:"), F.col(key_col)).alias("key"))
 
 
 def pairs_from_index(

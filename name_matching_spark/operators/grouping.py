@@ -20,16 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..constants import GROUP_COSINE_THRESHOLD
+from ..constants import GROUP_COSINE_THRESHOLD, GROUP_TOKEN_SIM_ACCEPT
 from ..functions.normalize import canonical_pair
 from .cc import connected_components, label_clusters
 
 
-def match_group_names(
-    clusters: DataFrame,
-    cosine_threshold: float = GROUP_COSINE_THRESHOLD,
-    auto_accept_token_sim: float = 0.85,
-) -> DataFrame:
+def match_group_names(clusters: DataFrame) -> DataFrame:
     """Candidate merges between first-round clusters: run the full matcher
     over the distinct group names, keep cosine ≥ 0.65 (reference threshold),
     auto-screened by token_sim ≥ 0.85 standing in for the reference's human
@@ -41,8 +37,8 @@ def match_group_names(
     mm = match_names(gnames)
     return (
         mm.master.where(
-            (F.col("cosine_similarity") >= cosine_threshold)
-            & (F.col("token_sim") >= auto_accept_token_sim)
+            (F.col("cosine_similarity") >= GROUP_COSINE_THRESHOLD)
+            & (F.col("token_sim") >= GROUP_TOKEN_SIM_ACCEPT)
         )
         .select("name", "match")
         .distinct()

@@ -17,8 +17,9 @@ Semantic quirks reproduced deliberately:
   first_name is ≤ 2 chars, in which case it is used verbatim
   (match_names.R:380-386);
 - trailing " JR" stripped from both parts (match_names.R:387-388);
-- blocking: self-join on exact last_name, upper triangle by row id
-  (match_names.R:424-436);
+- blocking: exact last_name (match_names.R:424-436), as the ``ln:`` key
+  family of the one pair self-join (``pairs_from_index``), so a common
+  surname is cap-and-split like any hot key;
 - initials_match = set-equality, only evaluated when either side has a
   multi-word or short (<4 chars) first name, else FALSE
   (match_names.R:415-421,437-439);
@@ -34,6 +35,7 @@ from pyspark.sql import functions as F
 from ..constants import COMPANY_REGEX_JAVA, FIRST_NAMES, NICKNAMES, SURNAMES
 from ..functions.normalize import with_clean_name
 from ..session import materialize
+from .blocking import pairs_from_index
 from .pairs import score_pairs
 
 
@@ -110,85 +112,107 @@ def extract_name(names: DataFrame, name_col: str = "clean_name") -> DataFrame:
     return names.join(best, name_col, "left")
 
 
-def match_first_name(
-    names: DataFrame, name_col: str = "name", return_parts: bool = False
-):
-    """Human-name matcher: (name, match, human_jw_distance,
-    human_cosine_similarity, initials_match) over last-name-blocked pairs.
+def name_parts(names: DataFrame) -> DataFrame:
+    """The dictionary parse of the distinct ``name`` column: (name,
+    clean_name, company, last_name, first_name, initials), checkpointed.
 
-    ``names`` needs a distinct ``name_col``. Original (raw) names are
-    carried through; scoring happens on extracted first names.
+    One parse per pipeline: the ``ln:`` index, the human-score step and the
+    pre-screen's cross-surname rule all read this table (VERDICT r2 item
+    1); an eager checkpoint computes the extract chain (dict joins + window)
+    once for every consumer instead of once per join branch (see PLANS.md,
+    same defect class as the pair index)."""
+    df = names.select("name").distinct()
+    df = with_clean_name(df, "name", "clean_name", drop_common=False, human=True)
+    return materialize(extract_name(df, "clean_name"), eager=True)
 
-    With ``return_parts`` returns ``(scored, parts)`` where ``parts`` is the
-    full (uncompany-filtered) name-part table — (name, clean_name, company,
-    last_name, first_name, initials), checkpointed. The pre-screen's
-    cross-surname rule consumes it so the dictionary parse over the name
-    universe runs ONCE per pipeline, not once per stage (VERDICT r2 item 1).
+
+def _is_human():
+    return ~F.col("company") & F.col("last_name").isNotNull()
+
+
+def last_name_index(parts: DataFrame) -> DataFrame:
+    """The ``ln:`` key family: (name, key) for every human parse row — not a
+    company, with a last name. Blocking on exact last_name is the
+    reference's own (match_names.R:424-436)."""
+    return parts.where(_is_human()).select(
+        "name", F.concat(F.lit("ln:"), F.col("last_name")).alias("key")
+    )
+
+
+HUMAN_COLUMNS = ("human_jw_distance", "human_cosine_similarity", "initials_match")
+
+
+def score_first_names(pairs: DataFrame, parts: DataFrame, specs=()) -> DataFrame:
+    """The human-score step: adds ``HUMAN_COLUMNS`` to canonical (name,
+    match) ``pairs`` from the two sides' parse rows (null first names for a
+    side that is not a human row).
+
+    ``specs`` are further ``score_pairs`` kernels over ``pairs``' own
+    columns, computed in the same Python pass as the two first-name ones.
     """
-    df = names.select(name_col).distinct()
-    df = with_clean_name(df, name_col, "clean_name", drop_common=False, human=True)
-    # the extract chain (dict joins + window) feeds both sides of the
-    # last-name self-join AND, via return_parts, the pre-screen's
-    # cross-surname rule — an eager checkpoint computes it once for every
-    # consumer (see PLANS.md, same defect class as the pair index); a lazy
-    # pin would let the self-join's two branches each recompute it.
-    split = materialize(extract_name(df, "clean_name"), eager=True)
-    humans = split.where(~F.col("company") & F.col("last_name").isNotNull())
-    humans = humans.withColumn(
-        "check_initials",
-        (F.size(F.split("first_name", " ")) > 1) | (F.length("first_name") < 4),
-    ).withColumn("_id", F.xxhash64(name_col))
 
-    a = humans.select(
-        F.col("last_name"),
-        F.col(name_col).alias("name_a"),
-        F.col("first_name").alias("first_a"),
-        F.col("initials").alias("init_a"),
-        F.col("check_initials").alias("check_a"),
-        F.col("_id").alias("id_a"),
+    def side(name: str, s: str) -> DataFrame:
+        first = F.col("first_name")
+        return parts.where(_is_human()).select(
+            F.col("name").alias(name),
+            first.alias(f"_first_{s}"),
+            F.col("initials").alias(f"_init_{s}"),
+            ((F.size(F.split(first, " ")) > 1) | (F.length(first) < 4)).alias(
+                f"_check_{s}"
+            ),
+        )
+
+    df = pairs.join(side("name", "a"), "name", "left").join(
+        side("match", "b"), "match", "left"
     )
-    b = humans.select(
-        F.col("last_name"),
-        F.col(name_col).alias("name_b"),
-        F.col("first_name").alias("first_b"),
-        F.col("initials").alias("init_b"),
-        F.col("check_initials").alias("check_b"),
-        F.col("_id").alias("id_b"),
-    )
-    pairs = a.join(b, "last_name").where(F.col("id_a") < F.col("id_b"))
-    pairs = pairs.withColumn(
+    df = df.withColumn(
         "initials_match",
         F.when(
-            F.col("check_a") | F.col("check_b"),
-            F.array_sort(F.array_distinct("init_a"))
-            == F.array_sort(F.array_distinct("init_b")),
+            F.col("_check_a") | F.col("_check_b"),
+            F.array_sort(F.array_distinct("_init_a"))
+            == F.array_sort(F.array_distinct("_init_b")),
         ).otherwise(F.lit(False)),
     )
     scored = score_pairs(
-        pairs,
+        df,
         [
-            ("human_jw_distance", "jaro_distance", "first_a", "first_b"),
-            ("_cos_dist", "unigram_cosine_distance", "first_a", "first_b"),
+            ("human_jw_distance", "jaro_distance", "_first_a", "_first_b"),
+            ("_cos_dist", "unigram_cosine_distance", "_first_a", "_first_b"),
+            *specs,
         ],
     )
     # NaN → null, then flip cosine distance to similarity (match_names.R:448-450)
-    scored = scored.withColumn(
-        "_cos_dist", F.when(F.isnan("_cos_dist"), F.lit(None)).otherwise(F.col("_cos_dist"))
-    ).withColumn(
-        "human_jw_distance",
-        F.when(
-            F.col("first_a").isNull() | F.col("first_b").isNull()
-            | (F.col("first_a") == "") | (F.col("first_b") == ""),
-            F.lit(None),
-        ).otherwise(F.col("human_jw_distance")),
+    no_first = (
+        F.col("_first_a").isNull() | F.col("_first_b").isNull()
+        | (F.col("_first_a") == "") | (F.col("_first_b") == "")
     )
-    out = scored.select(
-        F.col("name_a").alias("name"),
-        F.col("name_b").alias("match"),
-        "human_jw_distance",
-        (1.0 - F.col("_cos_dist")).alias("human_cosine_similarity"),
-        "initials_match",
-    )
+    return scored.withColumns(
+        {
+            "human_jw_distance": F.when(no_first, F.lit(None)).otherwise(
+                F.col("human_jw_distance")
+            ),
+            "human_cosine_similarity": 1.0
+            - F.when(F.isnan("_cos_dist"), F.lit(None)).otherwise(F.col("_cos_dist")),
+        }
+    ).drop(*[f"_{c}_{s}" for c in ("first", "init", "check") for s in "ab"], "_cos_dist")
+
+
+def match_first_name(names: DataFrame, return_parts: bool = False):
+    """Human-name matcher: (name, match, human_jw_distance,
+    human_cosine_similarity, initials_match) over last-name-blocked
+    canonical pairs.
+
+    ``names`` needs a ``name`` column. Original (raw) names are carried
+    through; scoring happens on extracted first names. The same pieces as
+    the ``ln:`` family of ``pipeline.match_names``: parse → ``ln:`` index →
+    ``pairs_from_index`` → ``score_first_names``.
+
+    With ``return_parts`` returns ``(scored, parts)`` where ``parts`` is the
+    full (uncompany-filtered) ``name_parts`` table.
+    """
+    parts = name_parts(names)
+    pairs = pairs_from_index(last_name_index(parts), "key").select("name", "match")
+    out = score_first_names(pairs, parts).select("name", "match", *HUMAN_COLUMNS)
     if return_parts:
-        return out, split
+        return out, parts
     return out

@@ -396,7 +396,7 @@ def cross_surname_screen(df: DataFrame, name_parts: DataFrame | None = None) -> 
     surname aliases ('JOHNSON'/'JOHNSTON') out of the auto-reject.
 
     ``name_parts`` (name, clean_name, company, last_name — the human
-    channel's checkpointed parse, match_first_name(return_parts=True)) lets the
+    channel's checkpointed parse, human.name_parts) lets the
     dictionary parse over the name universe run once per pipeline; when
     None (standalone use) it is recomputed from the pair table's distinct
     names — one dictionary-join pass, identical result.

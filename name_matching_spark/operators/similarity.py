@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def _dot_expr(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
@@ -262,10 +264,9 @@ def ivf_assign(
                 ).alias("_mean")
             )
         )
-        cents = (
-            with_unit_vectors(means, "_mean", "cu")
-            .select(F.col(out).alias("cid"), "cu")
-            .localCheckpoint(eager=True)  # tiny; cuts the per-iter lineage
+        # tiny; cuts the per-iter lineage
+        cents = materialize(
+            with_unit_vectors(means, "_mean", "cu").select(F.col(out).alias("cid"), "cu")
         )
     assigned = _assign(cents)
     return assigned, cents

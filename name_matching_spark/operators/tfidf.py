@@ -12,8 +12,10 @@ sublinear_tf=FALSE): tf is l1-normalized counts and idf = log1p(N/df). Under
 the final l2 (cosine) normalization the l1 row factor cancels, so
 weight(token) = count · log1p(N/df) gives identical cosines.
 
-Everything is built-in SQL: explode → groupBy → join → agg. Catalyst handles
-pushdown; AQE handles the skewed token join.
+Everything is built-in SQL: explode → groupBy → join → agg. Candidate pairs
+come from the shared (name, token) index through ``pairs_from_index``, so a
+hot token is cap-and-split like every other blocking key; ``paired_cosine``
+then scores an explicit pair list.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import materialize
+from .blocking import pairs_from_index
 
 
 def token_weights(
@@ -47,48 +50,25 @@ def token_weights(
 
 
 def tfidf_cosine_pairs(
-    names: DataFrame,
-    bag_col: str,
-    name_col: str = "name",
-    threshold: float = 0.4,
-    weights: DataFrame | None = None,
+    names: DataFrame, bag_col: str, threshold: float = 0.4
 ) -> DataFrame:
     """Canonical pairs with cosine_similarity ≥ threshold.
 
     Output: (name, match, cosine_similarity). Equivalent to the reference's
     match_names_cosine (match_names.R:528-559) without the dense matrix.
 
-    ``weights`` lets a caller share one checkpointed ``token_weights``
-    table between this join and the backfill pass (match_names computes
-    both over the same corpus — one weights table, four join branches).
+    The same pieces as the ``tok:`` family of ``pipeline.match_names``:
+    the (name, token) rows of the weights table are the index,
+    ``pairs_from_index`` pairs the names that share a token, and
+    ``paired_cosine`` scores them.
     """
-    # weights feed both sides of the pair self-join (and norms are an agg
-    # over the same rows) — one eager checkpoint instead of re-deriving the
-    # tokenize/normalize lineage per join branch
-    if weights is None:
-        weights = materialize(token_weights(names, bag_col, name_col), eager=True)
-    a = weights.select(
-        F.col("token"),
-        F.col(name_col).alias("name"),
-        F.col("w").alias("wa"),
-        F.col("norm").alias("na"),
-    )
-    b = weights.select(
-        F.col("token"),
-        F.col(name_col).alias("match"),
-        F.col("w").alias("wb"),
-        F.col("norm").alias("nb"),
-    )
-    return (
-        a.join(b, "token")
-        .where(F.col("name") < F.col("match"))
-        .groupBy("name", "match")
-        .agg(
-            (F.sum(F.col("wa") * F.col("wb")) / F.first("na") / F.first("nb")).alias(
-                "cosine_similarity"
-            )
-        )
-        .where(F.col("cosine_similarity") >= threshold)
+    # the weights are both the index and the scoring input — one eager
+    # checkpoint instead of re-deriving the tokenize/normalize lineage per
+    # join branch
+    weights = materialize(token_weights(names, bag_col), eager=True)
+    pairs = pairs_from_index(weights, "token").select("name", "match").distinct()
+    return paired_cosine(pairs, weights).where(
+        F.col("cosine_similarity") >= threshold
     )
 
 
@@ -99,10 +79,9 @@ def paired_cosine(
     name_col_b: str = "match",
     out: str = "cosine_similarity",
 ) -> DataFrame:
-    """Cosine for an explicit pair list (score backfill — the reference's
-    psim2 second pass, match_names.R:738-783): join weights to both sides on
-    shared token, sum, divide by the two norms; pairs with no shared token
-    get 0.0."""
+    """Cosine for an explicit pair list (the reference's psim2 pass,
+    match_names.R:738-783): join weights to both sides on shared token, sum,
+    divide by the two norms; pairs with no shared token get 0.0."""
     a = weights.select(
         F.col("name").alias(name_col_a) if "name" in weights.columns else F.col(name_col_a),
         "token",

@@ -2,22 +2,28 @@
 
 Reference lifecycle (code/functions/match_names.R:584-818): four matcher
 channels → canonical pairs → 4-way full outer merge → backfill missing
-scores. Spark-first re-expression:
+scores. Spark-first re-expression: ONE candidate pass.
 
-- channels are *joins with explicit blocking keys*, never O(n²) loops;
-- every score for the merged pair table is computed in bulk (set-oriented
-  backfill, not rowwise);
-- names/bags are computed once and reused across channels.
+- every channel's blocking key goes into one family-tagged (name, key)
+  index, and one cap-and-split self-join (``pairs_from_index``) generates
+  each candidate pair once, with the set of families that found it;
+- every score is computed once per candidate (SQL scores in bulk, the
+  Python kernels in one pass), and a pair is kept when any channel's own
+  rule holds — so there is no merge and no backfill;
+- names/bags are computed once and reused by every family.
 
-Channel → blocking key:
-  shared-word   : inverted token index (the reference's own implicit key)
-  tf-idf cosine : shared token (lossless for threshold ≥ 0.4)
-  Jaro          : union of first-token, double-metaphone(first token) and
-                  MinHash-LSH band keys (north-star channels; the reference
-                  compares all O(n²) pairs — at 10^12 docs the blocked
-                  recall surface is the deliverable, and F1 is measured at
-                  the shared blocking key)
-  human         : exact last_name
+Channel → key family (``score_candidates`` has the rules):
+  shared-word   : ``sw:`` word of the raw-name bag (the reference's own
+                  implicit key)
+  tf-idf cosine : ``tok:`` token of the cleaned bag (lossless for
+                  threshold ≥ 0.4)
+  Jaro          : ``ft:`` first token, ``mp:`` double-metaphone of it,
+                  ``lsh:`` token MinHash-LSH bands, ``csh:`` char-shingle
+                  LSH bands (north-star channels; the reference compares
+                  all O(n²) pairs — at 10^12 docs the blocked recall
+                  surface is the deliverable, and F1 is measured at the
+                  shared blocking key)
+  human         : ``ln:`` exact last_name of a human parse row
 """
 
 from __future__ import annotations
@@ -29,18 +35,24 @@ from pyspark.sql import functions as F
 
 from .constants import COSINE_THRESHOLD, JARO_THRESHOLD
 from .session import materialize
-from .functions.normalize import canonical_pair, with_clean_name, with_word_bag
+from .functions.normalize import with_clean_name, with_word_bag
 from .operators.blocking import (
     char_shingle_band_keys,
     first_token_key,
     minhash_band_keys,
     pairs_from_index,
-    shared_word_pairs,
+    tag_keys,
+    token_index,
 )
-from .operators.human import match_first_name
-from .operators.pairs import score_pairs
+from .operators.human import (
+    HUMAN_COLUMNS,
+    last_name_index,
+    name_parts,
+    score_first_names,
+)
+from .operators.pairs import token_set_similarity
 from .operators.phonetic import with_metaphone_key
-from .operators.tfidf import paired_cosine, tfidf_cosine_pairs, token_weights
+from .operators.tfidf import paired_cosine, token_weights
 
 
 @dataclass
@@ -70,203 +82,175 @@ def prepare_names(names: DataFrame, name_col: str = "name") -> DataFrame:
     # shared-word channel uses get_words(names) semantics: raw name, no
     # comma→space replacement (match_names.R:131-140)
     df = with_word_bag(df, "name", "bag_shared", drop_common=True, comma_to_space=False)
-    # backfill bag: drop_common_words=FALSE (the reference's quirk at :729-735)
+    # shared_words bag of a pair with no shared sw: key:
+    # drop_common_words=FALSE (the reference's backfill quirk at :729-735)
     df = with_word_bag(df, "name", "bag_nc", drop_common=False, comma_to_space=False)
     return df
 
 
+def jaro_index(names: DataFrame) -> DataFrame:
+    """The Jaro channel's (name, key) index: the ``ft:``, ``mp:``, ``lsh:``
+    and ``csh:`` families over the names with a non-empty clean name."""
+    nonempty = names.where(F.col("clean_name") != "")
+    return (
+        tag_keys(first_token_key(nonempty, "bag_clean", out="bkey"), "bkey", "ft")
+        .unionByName(
+            tag_keys(with_metaphone_key(nonempty, "bag_clean", out="bkey"), "bkey", "mp")
+        )
+        .unionByName(tag_keys(minhash_band_keys(nonempty, "bag_clean"), "band_key", "lsh"))
+        # char-shingle LSH: the only family that survives a typo in the
+        # first token (which defeats ft, mp AND token-LSH at once) — found
+        # and quantified by the blocking-recall harness (recall.py,
+        # RECALL_r05)
+        .unionByName(
+            tag_keys(char_shingle_band_keys(nonempty, "clean_name"), "band_key", "csh")
+        )
+    )
+
+
 def jaro_candidates(names: DataFrame, max_block: int = 2000) -> DataFrame:
     """Blocked candidate pairs (name, match) for the Jaro channel."""
-    nonempty = names.where(F.col("clean_name") != "")
-    ft = first_token_key(nonempty, "bag_clean", out="bkey").select(
-        "name", F.concat(F.lit("ft:"), F.col("bkey")).alias("bkey")
-    )
-    mp = with_metaphone_key(nonempty, "bag_clean", out="bkey").select(
-        "name", F.concat(F.lit("mp:"), F.col("bkey")).alias("bkey")
-    )
-    lsh = minhash_band_keys(nonempty, "bag_clean").select(
-        "name", F.concat(F.lit("lsh:"), F.col("band_key")).alias("bkey")
-    )
-    # char-shingle LSH: the only family that survives a typo in the first
-    # token (which defeats ft, mp AND token-LSH at once) — found and
-    # quantified by the blocking-recall harness (recall.py, RECALL_r05)
-    csh = char_shingle_band_keys(nonempty, "clean_name").select(
-        "name", F.concat(F.lit("csh:"), F.col("band_key")).alias("bkey")
-    )
-    index = ft.unionByName(mp).unionByName(lsh).unionByName(csh).distinct()
-    pairs = pairs_from_index(index, "bkey", max_block=max_block)
+    pairs = pairs_from_index(jaro_index(names), "key", max_block=max_block)
     return pairs.select("name", "match").distinct()
 
 
 def match_names(names: DataFrame) -> MatchNamesResult:
     """Candidate-pair table with the full score schema
     (match_names.R:806-808): name, match, shared_words, cosine_similarity,
-    jw_distance, human_jw_distance, human_cosine_similarity, initials_match.
+    jw_distance, human_jw_distance, human_cosine_similarity, initials_match,
+    plus token_sim.
     """
-    # EAGER CHECKPOINT, not persist: prepped is embedded in every channel,
-    # every backfill and token_sim — a dozen plan sites. A cached relation
-    # keeps its full analyzed subtree in each consumer's plan, and the
-    # resulting plan blow-up measured 2.5× e2e at sf0.1 (98 s vs 39 s);
-    # checkpoint truncation keeps every consumer's plan a flat scan.
+    # EAGER CHECKPOINT, not persist: prepped is embedded in every key
+    # family, the side joins and token_sim. A cached relation keeps its
+    # full analyzed subtree in each consumer's plan, and the resulting plan
+    # blow-up measured 2.5× e2e at sf0.1 (98 s vs 39 s); checkpoint
+    # truncation keeps every consumer's plan a flat scan.
     prepped = materialize(prepare_names(names), eager=True)
+    parts = name_parts(prepped.select("name"))
+    master = score_candidates(prepped, parts, jaro_index(prepped))
+    return MatchNamesResult(master=master, name_parts=parts)
 
-    # --- channel 1: human first-name distance (match_names.R:599-601)
-    human, name_parts = match_first_name(prepped.select("name"), return_parts=True)
-    lo, hi = canonical_pair(F.col("name"), F.col("match"))
-    human = (
-        human.select(
-            lo.alias("_n"), hi.alias("_m"),
-            "human_jw_distance", "human_cosine_similarity", "initials_match",
+
+def candidate_families(index: DataFrame, max_block: int = 2000) -> DataFrame:
+    """One cap-and-split self-join of a family-tagged (name, key) index:
+    each candidate pair once, as (name, match, sw, tok, jaro, ln) — the
+    number of distinct shared ``sw:`` keys, and whether the pair shares a
+    ``tok:``, a Jaro-family (``ft:``/``mp:``/``lsh:``/``csh:``) or an
+    ``ln:`` key."""
+
+    def shares(*families: str):
+        return F.max(F.col("key").rlike("^(" + "|".join(families) + "):"))
+
+    return (
+        pairs_from_index(index, "key", max_block=max_block)
+        .groupBy("name", "match")
+        .agg(
+            F.count_distinct(
+                F.when(F.col("key").startswith("sw:"), F.col("key"))
+            ).alias("sw"),
+            shares("tok").alias("tok"),
+            shares("ft", "mp", "lsh", "csh").alias("jaro"),
+            shares("ln").alias("ln"),
         )
-        .withColumnsRenamed({"_n": "name", "_m": "match"})
-        .dropDuplicates(["name", "match"])
     )
 
-    # --- channel 2: tf-idf cosine (match_names.R:608-636)
-    # ONE tf-idf weights table serves both the cosine channel and the
-    # backfill's paired_cosine (identical corpus — round 2 computed and
-    # checkpointed it twice); one eager checkpoint serves all four join
-    # branches.
+
+def score_candidates(
+    prepped: DataFrame, parts: DataFrame, jaro_keys: DataFrame
+) -> DataFrame:
+    """The one candidate pass of match_names (match_names.R:599-808),
+    factored out so the contract layer can drive it with an
+    oracle-expressible Jaro index (contract_extras.q_match_master).
+
+    ``prepped`` is ``prepare_names``' table, ``parts`` the ``name_parts``
+    of its names and ``jaro_keys`` a (name, key) index of Jaro families.
+    ``tok:``, ``sw:`` and ``ln:`` keys join them in one index, and
+    ``candidate_families`` yields each candidate once with its families.
+    Every score is computed once per candidate: the SQL ones in bulk, the
+    four Python kernels (clean-name and raw-name Jaro, the two first-name
+    kernels) in one ``score_pairs`` pass. A candidate is kept when any
+    channel's own rule holds:
+
+    - it shares an ``sw:`` key;
+    - it shares a ``tok:`` key and cosine ≥ COSINE_THRESHOLD;
+    - it shares a Jaro-family key and the Jaro distance of the clean
+      names is ≤ JARO_THRESHOLD;
+    - it shares an ``ln:`` key.
+
+    Values: ``shared_words`` counts the distinct shared ``sw:`` keys, or,
+    with none, the raw-name bags' intersection without dropping common
+    words (the reference's quirk at :729-735). ``cosine_similarity`` is
+    the paired tf-idf cosine (0.0 without a shared token). ``jw_distance``
+    is the clean-name Jaro when the Jaro rule fired, else the raw-name
+    Jaro (:786-792). The human columns are null unless the pair shares an
+    ``ln:`` key.
+    """
+    # ONE tf-idf weights table: its (name, token) rows are the tok: keys
+    # and it scores every candidate (deviation from the reference, which
+    # refits idf on just the missing-pair corpus at :738-783 — one
+    # consistent corpus is both cheaper and more principled).
     weights = materialize(
         token_weights(prepped.where(F.col("clean_name") != ""), "bag_clean"),
         eager=True,
     )
-    cosine = tfidf_cosine_pairs(
-        prepped.where(F.col("clean_name") != ""),
-        "bag_clean",
-        threshold=COSINE_THRESHOLD,
-        weights=weights,
+    index = (
+        tag_keys(weights, "token", "tok")
+        .unionByName(tag_keys(token_index(prepped, "bag_shared"), "token", "sw"))
+        .unionByName(jaro_keys)
+        .unionByName(last_name_index(parts))
     )
-
-    # --- channel 3: shared word (match_names.R:643-654)
-    shared = shared_word_pairs(prepped, "bag_shared")
-
-    # --- channel 4: Jaro on cleaned names (match_names.R:660-674)
-    cand = jaro_candidates(prepped)
-    cand = (
-        cand.join(prepped.select("name", F.col("clean_name").alias("clean_a")), "name")
-        .join(
-            prepped.select(
-                F.col("name").alias("match"), F.col("clean_name").alias("clean_b")
-            ),
-            "match",
-        )
-    )
-    jaro = (
-        score_pairs(cand, [("jw_distance", "jaro_distance", "clean_a", "clean_b")])
-        .where(F.col("jw_distance") <= JARO_THRESHOLD)
-        .select("name", "match", "jw_distance")
-    )
-
-    master = merge_score_channels(cosine, shared, jaro, human, prepped, weights)
-    return MatchNamesResult(master=master, name_parts=name_parts)
-
-
-def merge_score_channels(
-    cosine: DataFrame,
-    shared: DataFrame,
-    jaro: DataFrame,
-    human: DataFrame,
-    prepped: DataFrame,
-    weights: DataFrame,
-) -> DataFrame:
-    """The 4-way channel merge + set-oriented score backfill — the heart of
-    match_names (match_names.R:716-808), factored out so the contract layer
-    can drive the REAL merge/backfill code path with oracle-expressible
-    channel inputs (contract_extras.q_match_master).
-
-    ``prepped`` must carry (name, bag_clean, bag_nc); ``weights`` is the
-    checkpointed token_weights table the cosine channel used.
-    """
-    # --- 4-way full outer merge (match_names.R:716-722) ---------------------
-    # Each channel contributes DISTINCT (name, match) rows and disjoint
-    # score columns, so the 4-way full outer join is equivalent to
-    # union-all + one groupBy(name, match) with null-skipping max — ONE
-    # shuffle instead of three sequential join shuffles (and at 100 TB,
-    # one exchange of the union instead of three pair-keyed exchanges).
-    _schema = {
-        "shared_words": "bigint",
-        "cosine_similarity": "double",
-        "jw_distance": "double",
-        "human_jw_distance": "double",
-        "human_cosine_similarity": "double",
-        "initials_match": "boolean",
-    }
-
-    def _conform(df: DataFrame) -> DataFrame:
-        return df.select(
+    side = prepped.select("name", "clean_name", "bag_nc")
+    # paired_cosine reads the candidates twice (its pair list and the join
+    # back): one checkpoint runs the self-join once.
+    cand = materialize(
+        candidate_families(index).join(
+            side.withColumnsRenamed({"clean_name": "_clean_a", "bag_nc": "_bag_a"}),
             "name",
-            "match",
-            *[
-                F.col(c).cast(t) if c in df.columns else F.lit(None).cast(t).alias(c)
-                for c, t in _schema.items()
-            ],
-        )
-
-    merged = (
-        _conform(cosine)
-        .unionByName(_conform(shared))
-        .unionByName(_conform(jaro))
-        .unionByName(_conform(human))
-        .where(F.col("name") != F.col("match"))
-        .groupBy("name", "match")
-        .agg(*[F.max(c).alias(c) for c in _schema])
-    )
-    # Materialize the merged pair table before the backfill: the backfill
-    # references `master` on both sides of its joins (missing-score subsets
-    # joined back), so without a checkpoint every channel's whole plan would
-    # be re-evaluated once per backfill step — O(channels × backfills)
-    # recompute. One localCheckpoint makes the backfill linear and truncates
-    # the multi-channel lineage that AQE otherwise re-optimizes per stage.
-    master = materialize(merged, eager=True)
-
-    # --- set-oriented backfill (match_names.R:729-808) ---------------------
-    # shared_words: recompute with drop_common_words=FALSE for missing pairs
-    bags_nc = prepped.select("name", "bag_nc")
-    master = (
-        master.join(bags_nc.withColumnsRenamed({"bag_nc": "_bag_a"}), "name", "left")
-        .join(
-            bags_nc.withColumnsRenamed({"name": "match", "bag_nc": "_bag_b"}),
-            "match",
-            "left",
-        )
-        .withColumn(
-            "shared_words",
-            F.coalesce(
-                "shared_words",
-                F.size(F.array_intersect("_bag_a", "_bag_b")).cast("long"),
+        ).join(
+            side.withColumnsRenamed(
+                {"name": "match", "clean_name": "_clean_b", "bag_nc": "_bag_b"}
             ),
-        )
-        .drop("_bag_a", "_bag_b")
+            "match",
+        ),
+        eager=True,
     )
-    # cosine: paired tf-idf over the global corpus weights (deviation from
-    # the reference, which refits idf on just the missing-pair corpus at
-    # :738-783 — one consistent corpus is both cheaper and more principled).
-    # `weights` is the same checkpointed table the cosine channel used.
-    missing_cos = master.where(F.col("cosine_similarity").isNull()).select("name", "match")
-    backfilled_cos = paired_cosine(missing_cos, weights, "name", "match", "_cos_bf")
-    master = master.join(backfilled_cos, ["name", "match"], "left").withColumn(
-        "cosine_similarity", F.coalesce("cosine_similarity", "_cos_bf")
-    ).drop("_cos_bf")
-    # jaro: raw-name Jaro for missing pairs (match_names.R:786-792)
-    master = score_pairs(
-        master, [("_jw_raw", "jaro_distance", "name", "match")]
-    ).withColumn("jw_distance", F.coalesce("jw_distance", "_jw_raw")).drop("_jw_raw")
-
+    scored = score_first_names(
+        paired_cosine(cand, weights),
+        parts,
+        [
+            ("_jw_clean", "jaro_distance", "_clean_a", "_clean_b"),
+            ("_jw_raw", "jaro_distance", "name", "match"),
+        ],
+    )
+    jaro_hit = F.col("jaro") & (F.col("_jw_clean") <= JARO_THRESHOLD)
+    kept = scored.where(
+        (F.col("sw") > 0)
+        | (F.col("tok") & (F.col("cosine_similarity") >= COSINE_THRESHOLD))
+        | jaro_hit
+        | F.col("ln")
+    ).select(
+        "name",
+        "match",
+        F.when(F.col("sw") > 0, F.col("sw"))
+        .otherwise(F.size(F.array_intersect("_bag_a", "_bag_b")))
+        .cast("bigint")
+        .alias("shared_words"),
+        "cosine_similarity",
+        F.when(jaro_hit, F.col("_jw_clean"))
+        .otherwise(F.col("_jw_raw"))
+        .alias("jw_distance"),
+        *[F.when(F.col("ln"), F.col(c)).alias(c) for c in HUMAN_COLUMNS],
+    )
+    # token_sim reads the kept table twice (its pair list and the join
+    # back): one checkpoint runs the candidate pass and its Python kernels
+    # once.
+    master = materialize(kept, eager=True)
     # token_sim: symmetric Monge-Elkan over cleaned bags (extension beyond
     # the reference's feature set — the RF feature that separates typo
     # aliases from shared-first-name coincidences; see pairs.py)
-    from .operators.pairs import token_set_similarity
-
-    master = token_set_similarity(
+    return token_set_similarity(
         master, prepped.select("name", F.col("bag_clean").alias("bag")),
         bag_col="bag", out="token_sim",
-    )
-
-    return master.select(
-        "name", "match", "shared_words", "cosine_similarity", "jw_distance",
-        "human_jw_distance", "human_cosine_similarity", "initials_match",
-        "token_sim",
     )
 
 

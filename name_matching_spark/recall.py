@@ -51,6 +51,8 @@ def _canon(a: str, b: str) -> tuple:
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import materialize
+
 
 # ---------------------------------------------------------------------------
 # brute-force primitives (reference semantics: all-pairs loops)
@@ -100,7 +102,7 @@ def recall_simhash_pairs(spark: SparkSession, sf_dir: str) -> dict:
     from .contract_extras import _dup_docs
     from .operators.dedup import simhash, simhash_near_pairs
 
-    sims = simhash(_dup_docs(spark, sf_dir), bits=48).localCheckpoint(eager=True)
+    sims = materialize(simhash(_dup_docs(spark, sf_dir), bits=48))
     vals = {r["id"]: int(r["simhash"]) for r in sims.collect()}
     ids = sorted(vals)
     truth = {}
@@ -136,7 +138,7 @@ def recall_jaccard(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -> 
     from .contract_extras import _dup_docs
     from .operators.dedup import ngram_jaccard_pairs
 
-    docs = _dup_docs(spark, sf_dir).localCheckpoint(eager=True)
+    docs = materialize(_dup_docs(spark, sf_dir))
     sets = {r["doc_id"]: _shingle_set(r["text"], 3) for r in docs.collect()}
     truth = _all_pairs_jaccard(sets, threshold)
     pairs, _ = ngram_jaccard_pairs(docs, threshold=threshold, n=3)
@@ -172,7 +174,7 @@ def recall_jaccard_maxdf(
     from .contract_extras import _dup_docs
     from .operators.dedup import ngram_jaccard_pairs
 
-    docs = _dup_docs(spark, sf_dir).localCheckpoint(eager=True)
+    docs = materialize(_dup_docs(spark, sf_dir))
     raw = {r["doc_id"]: _shingle_set(r["text"], 3) for r in docs.collect()}
     # document frequency over DISTINCT per-doc shingles, as the operator
     from collections import Counter
@@ -236,7 +238,7 @@ def recall_minhash(
     from .operators.dedup import minhash_lsh_candidates
 
     r = num_hashes // bands
-    docs = _dup_docs(spark, sf_dir).localCheckpoint(eager=True)
+    docs = materialize(_dup_docs(spark, sf_dir))
     sets = {r_["doc_id"]: _token_set(r_["text"]) for r_ in docs.collect()}
     sets = {i: s for i, s in sets.items() if s}  # operator skips empty docs
     truth = _all_pairs_jaccard(sets, report_floor_j)
@@ -377,7 +379,7 @@ def recall_ann_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> dict:
         ("isotropic_driver", _driver_embeddings(sf_dir), [4, 8]),
     ]:
         truth = _numpy_truth_topk(ids, mat, k)
-        emb = _emb_df(spark, ids, mat).localCheckpoint(eager=True)
+        emb = materialize(_emb_df(spark, ids, mat))
         q = emb.where(F.col("vec_id") < 20)
         for planes in planes_list:
             single = _topk_recall(
@@ -423,7 +425,7 @@ def recall_ivf_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> dict:
         ("isotropic_driver", _driver_embeddings(sf_dir), [(16, 2, 0), (16, 8, 0)]),
     ]:
         truth = _numpy_truth_topk(ids, mat, k)
-        emb = _emb_df(spark, ids, mat).localCheckpoint(eager=True)
+        emb = materialize(_emb_df(spark, ids, mat))
         q = emb.where(F.col("vec_id") < 20)
         for nc, np_, it in configs:
             rec = _topk_recall(
@@ -477,7 +479,7 @@ def recall_jaro_channel(
     truth_clusters = spark.read.parquet(
         os.path.join(fx, "truth_clusters.parquet")
     ).withColumn("name", F.regexp_replace("name", "É", "E"))
-    prepped = prepare_names(truth_clusters.select("name")).localCheckpoint(eager=True)
+    prepped = materialize(prepare_names(truth_clusters.select("name")))
     nonempty = prepped.where(F.col("clean_name") != "")
     pdf = nonempty.select("name", "clean_name").toPandas()
     # DuckDB jaro_similarity works on UTF-8 BYTES, the kernel on
