@@ -16,16 +16,20 @@ the component label, exactly the reference's group-name rule
 
 Scale notes: each round is three shuffles: each star's per-node min is a
 window over its node's neighbor list (one shuffle on the node key, no
-aggregate joined back), and small-star's `distinct` is the third. An
-eager `localCheckpoint` truncates lineage each round (else the plan
-doubles per iteration). Convergence is observed by that checkpoint: an
-`Observation` on the round's plan yields a count + xor-of-edge-hashes
-checksum from the checkpoint's own job, so a round costs no aggregate or
-collect beyond it. The input edges get no checkpoint: the first round is
-never taken as converged. Hub skew (one node with millions of neighbors)
-is bounded by the algorithm itself — large-star strictly reduces big-star
-neighborhoods; until then a hub's window partition is buffered by one task
-and spills to disk past Spark's window buffer thresholds.
+aggregate joined back), and small-star's output is deduplicated by a third
+window on the node. An eager `localCheckpoint` truncates lineage each round
+(else the plan doubles per iteration). Convergence is observed by that
+checkpoint: an `Observation` on the round's plan counts the output's
+star-breaking rows (a leaf with two centres, or a centre that is also a
+leaf) in the checkpoint's own job, so a round costs no aggregate or collect
+beyond it. Every small-star edge points high→low and the rounds preserve
+connectivity, so an output with no such row is a star forest whose stars
+are the components, each centred on its minimum: the final answer, which
+another round would only reproduce. The rounds stop there. Hub skew (one
+node with millions of neighbors) is bounded by the algorithm itself —
+large-star strictly reduces big-star neighborhoods; until then a hub's
+window partition is buffered by one task and spills to disk past Spark's
+window buffer thresholds.
 """
 
 from __future__ import annotations
@@ -44,7 +48,7 @@ def _symmetrize(e: DataFrame) -> DataFrame:
 
 def _large_star(e: DataFrame) -> DataFrame:
     # self-loops and duplicate edges change no min over Γ(u) ∪ {u}, and
-    # the duplicates this emits are left for small-star's distinct
+    # the duplicates this emits are left for small-star's dedup window
     m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
     return (
         _symmetrize(e)
@@ -55,51 +59,56 @@ def _large_star(e: DataFrame) -> DataFrame:
 
 
 def _small_star(e: DataFrame) -> DataFrame:
+    """(u, v, bad): the round's distinct high→low edges; ``bad`` marks a
+    leaf that has a second centre or is a centre itself."""
     # large-star emits only high→low edges (u > v), so Γ≤(u) is just u's
-    # neighbor list; each edge (u, v) emits (v, m) and u's own (u, m)
-    moved = e.select(
-        "u", "v", F.min("v").over(Window.partitionBy("u")).alias("m")
-    ).select(F.explode(F.array(
-        F.struct(F.col("v").alias("u"), "m"), F.struct("u", "m")
-    )).alias("e"))
-    return (
-        moved.select(F.col("e.u").alias("u"), F.col("e.m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    # neighbor list; each edge (u, v) emits (v, m) and u's own (u, m), and
+    # each such edge (x, m), x > m, is an "out" row at x (v < u) and an
+    # "in" row at m (v > u), so at a node v orders its out rows first
+    m = F.min("v").over(Window.partitionBy("u"))
+    rows = e.select("u", "v", m.alias("m")).select(F.explode(F.array(
+        F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+        F.struct(F.col("m").alias("u"), F.col("v").alias("v")),
+        F.struct("u", F.col("m").alias("v")),
+        F.struct(F.col("m").alias("u"), F.col("u").alias("v")),
+    )).alias("e")).select("e.*").where(F.col("u") != F.col("v"))
+    w = Window.partitionBy("u").orderBy("v")
+    dup = F.lag("v").over(w).eqNullSafe(F.col("v"))
+    # the node's largest row is not this out row's target: a second
+    # target, or an in row
+    top = F.max("v").over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    return rows.select("u", "v", dup.alias("dup"), (top != F.col("v")).alias("bad")).where(
+        ~F.col("dup") & (F.col("v") < F.col("u"))
+    ).drop("dup")
 
 
-def _observed_checkpoint(e: DataFrame) -> tuple[DataFrame, dict]:
-    """Eager checkpoint of ``e`` plus its {c: count, h: xor of edge hashes}
-    checksum, both from the checkpoint's own job: the aggregate rides the
-    plan as an ``Observation`` instead of re-scanning the checkpoint."""
+def _observed_checkpoint(e: DataFrame) -> tuple[DataFrame, int]:
+    """Eager checkpoint of the (u, v) edges of ``e`` plus the number of its
+    rows whose ``bad`` flag is set, from the checkpoint's own job: the count
+    rides the plan as an ``Observation`` instead of re-scanning the
+    checkpoint. 0 means the edges are a star forest."""
     ob = Observation()
     e = materialize(
-        e.observe(
-            ob,
-            F.count(F.lit(1)).alias("c"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ),
+        e.observe(ob, F.count_if(F.col("bad")).alias("bad")).select("u", "v"),
         eager=True,
     )
-    return e, ob.get
+    return e, ob.get["bad"]
 
 
 def _stars(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
     """Star rounds over the non-null (src, dst) edges until a round's
-    checkpoint observes the same checksum as the round before. Then every
-    edge is (u: node, v: its component minimum), one per node that is not a
-    minimum. The first round is never taken as converged, so the input
-    needs no checkpoint of its own."""
+    checkpoint observes a star forest. Small-star's edges all point
+    high→low and every round keeps the components, so a star forest holds
+    one star per component, centred on its minimum, and is final: every
+    edge is (u: node, v: its component minimum), one per node that is not
+    a minimum."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u").isNotNull() & F.col("v").isNotNull()
     )
-    prev = None
     for _ in range(max_iter):
-        e, cur = _observed_checkpoint(_small_star(_large_star(e)))
-        if cur == prev:
+        e, bad = _observed_checkpoint(_small_star(_large_star(e)))
+        if bad == 0:
             return e
-        prev = cur
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 

@@ -20,7 +20,7 @@ then scores an explicit pair list.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import materialize
@@ -30,8 +30,9 @@ from .blocking import pairs_from_index
 def token_weights(
     names: DataFrame, bag_col: str, name_col: str = "name"
 ) -> DataFrame:
-    """(name, token, w) tf-idf weights + (name, norm) in one DataFrame:
-    returns weights with an attached l2 ``norm`` column per name."""
+    """(name, token, w, df, norm): tf-idf weights with each name's l2
+    ``norm`` attached by a window over the name's rows, so the weights are
+    computed once (an aggregate joined back would compute them twice)."""
     toks = names.select(name_col, F.explode(F.col(bag_col)).alias("token")).where(
         F.col("token") != ""
     )
@@ -45,8 +46,8 @@ def token_weights(
         .withColumn("idf", F.log1p(F.col("_n_names") / F.col("df")))
         .withColumn("w", F.col("cnt") * F.col("idf"))
     )
-    norms = w.groupBy(name_col).agg(F.sqrt(F.sum(F.col("w") ** 2)).alias("norm"))
-    return w.select(name_col, "token", "w", "df").join(norms, name_col)
+    norm = F.sqrt(F.sum(F.col("w") ** 2).over(Window.partitionBy(name_col)))
+    return w.select(name_col, "token", "w", "df", norm.alias("norm"))
 
 
 def tfidf_cosine_pairs(

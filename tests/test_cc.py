@@ -142,8 +142,8 @@ def test_dense_ids_dataframe_native(spark):
 def test_self_loop_only_nodes_are_singletons(spark):
     # "(name, component) for every node in edges": a node whose only edge
     # is a self-loop must surface as its own singleton component; an edge
-    # set with no connecting edge at all still converges (its observed
-    # checksum is (0, 0) from the first round on)
+    # set with no connecting edge at all still converges (its first round
+    # is empty, a star forest with no star-breaking row)
     cases = [
         ([("A", "B"), ("C", "C"), ("A", "A")], {("A", "A"), ("B", "A"), ("C", "C")}),
         ([], set()),
@@ -185,15 +185,88 @@ def test_star_round_counts(spark, monkeypatch):
 
     monkeypatch.setattr(cc, "_observed_checkpoint", counting)
     monkeypatch.setattr(cc, "connected_components", no_cc)
-    # diameter-1 cliques: one round makes the stars, one more confirms them
+    # diameter-1 cliques: one round makes the stars and observes them final
     cliques = [
         (f"{k}{i}", f"{k}{j}") for k in "PQR" for i in range(5) for j in range(i + 1, 5)
     ]
     rows = name_clusters(spark.createDataFrame(cliques, ["name", "match"])).collect()
-    assert len(rows) == 12 and len(calls) == 2
+    assert len(rows) == 12 and len(calls) == 1
     calls.clear()
     rows = name_clusters(_chain(spark)).collect()
-    assert {r["group_name"] for r in rows} == {"X00"} and len(calls) == 7
+    assert {r["group_name"] for r in rows} == {"X00"} and len(calls) == 6
+
+
+def _star_defects(edges):
+    """(a leaf with two centres, a centre that is also a leaf) in a round's
+    (node, centre) edges; neither means a star forest."""
+    centres = {}
+    for x, m in edges:
+        centres.setdefault(x, set()).add(m)
+    return (
+        any(len(ms) > 1 for ms in centres.values()),
+        any(m in centres for _, m in edges),
+    )
+
+
+_SHAPES = {
+    # centre M, sub-centres N1-N3 with leaves; the minimum A is a leaf of N1
+    "star_of_stars": [("M", f"N{i}") for i in range(1, 4)]
+    + [(f"N{i}", f"{c}{i}") for i in range(1, 4) for c in "PQR"]
+    + [("N1", "A")],
+    # a spine S0-S6 with two legs on every spine node
+    "caterpillar": [(f"S{i}", f"S{i + 1}") for i in range(6)]
+    + [(f"S{i}", f"L{i}{j}") for i in range(7) for j in range(2)],
+    # two 5-cliques joined by the one edge J4-K3
+    "bridged_cliques": [
+        (f"{k}{i}", f"{k}{j}") for k in "JK" for i in range(5) for j in range(i + 1, 5)
+    ]
+    + [("J4", "K3")],
+    # a path out of name order: its first round's only defect is a leaf
+    # with two centres
+    "scrambled_path": [("V0", "V3"), ("V3", "V4"), ("V4", "V6"), ("V6", "V1")],
+    "duplicates_and_self_loops": [
+        ("E3", "E1"), ("E1", "E3"), ("E3", "E1"), ("E3", "E3"), ("E2", "E3"),
+        ("E5", "E2"), ("E5", "E5"), ("E4", "E5"), ("E4", "E5"), ("E0", "E0"),
+    ],
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_cc_stops_at_first_star_forest(spark, monkeypatch, shape):
+    # shapes whose first round is not yet a star forest: the rounds go on
+    # until one is, and stop there, with the union-find components
+    from name_matching_spark.operators import cc
+
+    rounds = []
+    real = cc._observed_checkpoint
+
+    def recording(e):
+        e, bad = real(e)
+        rows = [tuple(r) for r in e.collect()]
+        assert len(rows) == len(set(rows))  # one row per edge
+        rounds.append((_star_defects(rows), bad))
+        return e, bad
+
+    monkeypatch.setattr(cc, "_observed_checkpoint", recording)
+    edges = _SHAPES[shape]
+    got = {
+        r["name"]: r["component"]
+        for r in connected_components(
+            spark.createDataFrame(edges, "name string, match string")
+        ).collect()
+    }
+    want = _union_find_components([e for e in edges if e[0] != e[1]])
+    want.update({a: a for a, b in edges if a == b and a not in want})
+    assert got == want
+    defects = [d for d, _ in rounds]
+    forest = (False, False)
+    # the observed count is 0 exactly on a star forest, and the rounds stop
+    # at the first one: a round with a leaf of two centres is never accepted
+    assert [bad == 0 for _, bad in rounds] == [d == forest for d in defects]
+    assert defects[-1] == forest and forest not in defects[:-1], defects
+    assert len(rounds) >= 2
+    if shape in ("bridged_cliques", "scrambled_path"):
+        assert defects[0][0], defects
 
 
 def test_cc_hub_matches_union_find(spark):
@@ -233,7 +306,7 @@ def test_cc_round_bound_raises(spark):
 
 def test_cc_collects_nothing_to_the_driver(spark, monkeypatch):
     # convergence is read from each round checkpoint's Observation, so the
-    # rounds run no collect() (a separate checksum job per round would)
+    # rounds run no collect() (a separate convergence job per round would)
     rng = random.Random(5)
     nodes = [f"M{i:03d}" for i in range(60)]
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(70)]

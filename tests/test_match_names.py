@@ -157,6 +157,36 @@ def test_one_candidate_self_join(spark):
     assert not [k for k, _ in joins if bare(k) & {"last_name", "_id"}]
 
 
+def test_token_weights_join_once(spark):
+    # the weights checkpoint joins counts to document frequencies once:
+    # the l2 norm is a window over the weights, not an aggregate of them
+    # joined back (which plans the weights, and their join, twice)
+    import re
+
+    from name_matching_spark.operators.tfidf import token_weights
+    from name_matching_spark.session import materialize
+
+    bags = spark.createDataFrame(list(CLEAN_BAGS.items()), "name string, bag array<string>")
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsCount()
+    weights = materialize(token_weights(bags, "bag"), eager=True)
+    execs = store.executionsList()
+    joins = set()
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() >= first:
+            joins |= set(_join_nodes(e.physicalPlanDescription()))
+    token_joins = [k for k, _ in joins if {re.sub(r"#\d+L?", "", x) for x in k} == {"token"}]
+    assert len(token_joins) == 1, token_joins
+    # the norm is each name's l2 norm over its weights
+    norms = {}
+    for r in weights.collect():
+        norms.setdefault(r["name"], []).append((r["w"], r["norm"]))
+    assert set(norms) == set(CLEAN_BAGS)
+    for name, rows in norms.items():
+        assert all(n == pytest.approx(math.sqrt(sum(w * w for w, _ in rows))) for _, n in rows)
+
+
 def test_family_flags_under_cap_and_split(spark):
     # a family-tagged index where one tok: block and one ln: block exceed
     # the cap: the split yields the same pairs, flags and sw: counts as an
