@@ -104,6 +104,9 @@ JARO_THRESHOLD: float = 0.15
 HUMAN_JW_THRESHOLD: float = 0.6
 HUMAN_COS_THRESHOLD: float = 0.6
 IMPORTANCE_MIN_MAX_RATIO: float = 0.10
+# the cumulative held-out precision the RF auto-accept bar must clear (an
+# extension; see operators/prescreen.rf_thresholds)
+AUTO_ACCEPT_PRECISION: float = 0.98
 
 # Small deterministic human-name dictionaries (stand-ins for the census /
 # CMU corpora the reference downloads — reference: match_names.R:293-330).

@@ -674,39 +674,31 @@ def q_cutoff_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (score = md5 bucket / 1000; P(label=1 | score) = score via a second,
     independent md5 draw — so the split is interior and cumulative
     precision declines smoothly from the top)."""
-    from .operators.prescreen import accept_threshold_df, depth1_split_df
-    from .session import materialize
+    from .operators.prescreen import split_thresholds_df
 
     h = SPARK_H.format(x="cast(o_orderkey as string)")
     h2 = SPARK_H.format(x="concat(cast(o_orderkey as string),'L')")
-    # three consumer branches (split window/totals, accept)
-    scored = materialize(
+    scored = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .selectExpr(f"{h} % 1000 as hb", f"{h2} % 1000 as hb2")
         .selectExpr(
             "round(hb / 1000.0, 6) as rf_prob",
             "cast(case when hb2 < hb then 1 else 0 end as double) as keep",
-        ),
-        eager=True,
+        )
     )
     # display rounding happens HERE, not in the operator (the operator
     # returns the unrounded midpoint so it can never cross an adjacent
     # score); scores are 3-decimal buckets, so round 6 is lossless
-    return (
-        depth1_split_df(scored)
-        .select(F.round("cutoff", 6).alias("cutoff"))
-        .crossJoin(
-            accept_threshold_df(scored, target_precision=0.9).select(
-                F.round("accept", 6).alias("accept_thr")
-            )
-        )
+    return split_thresholds_df(scored, target_precision=0.9).select(
+        F.round("cutoff", 6).alias("cutoff"),
+        F.round("accept", 6).alias("accept_thr"),
     )
 
 
 def o_cutoff_split() -> str:
     h = DUCK_H.format(x="o_orderkey::VARCHAR")
     h2 = DUCK_H.format(x="o_orderkey::VARCHAR||'L'")
-    # the Gini expression mirrors depth1_split_df token-for-token (exact
+    # the Gini expression mirrors split_thresholds_df token-for-token (exact
     # integer counts, one IEEE-double expression, round 12) so the argmin
     # and the midpoint agree bit-for-bit across engines
     return f"""

@@ -12,10 +12,16 @@ load-bearing and preserved exactly:
 6. prior-cluster clique completion → keep=prior_check (:232-288);
 7. RF screen: keep=0 where rf_prob < cutoff and keep is null (:293-304).
 
-Extension (documented): ``auto_accept=True`` adds keep=1 where
-rf_prob ≥ cutoff and keep is still null — the automated stand-in for the
-reference's human-review step, which is what lets the pipeline produce
-end-to-end decisions without a human in the loop.
+Steps 1-6 build one feature table, as the reference does. Given labels,
+it is checkpointed once: the forest's training rows and its final scoring
+both read that checkpoint. The cutoff and the accept bar come from one
+pass over the held-out scores (``split_thresholds_df``).
+
+Extension (documented): ``auto_accept=True`` adds keep=1 where rf_prob
+clears the precision-calibrated accept bar and keep is still null — the
+automated stand-in for the reference's human-review step, which is what
+lets the pipeline produce end-to-end decisions without a human in the
+loop.
 """
 
 from __future__ import annotations
@@ -27,7 +33,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..constants import HUMAN_COS_THRESHOLD, HUMAN_JW_THRESHOLD, IMPORTANCE_MIN_MAX_RATIO
+from ..constants import (
+    AUTO_ACCEPT_PRECISION,
+    HUMAN_COS_THRESHOLD,
+    HUMAN_JW_THRESHOLD,
+    IMPORTANCE_MIN_MAX_RATIO,
+)
 from ..functions.normalize import canonical_pair, word_count_expr
 from ..session import materialize
 
@@ -140,7 +151,7 @@ def _fit_layout(df: DataFrame) -> DataFrame:
     ``randomSplit`` all draw per partition, so a forest fitted on the same
     rows under a different upstream partitioning would differ; on this
     layout it is a function of the rows alone. The labeled set is small by
-    construction (see ``depth1_split_df``)."""
+    construction (see ``split_thresholds_df``)."""
     return df.repartition(1).sortWithinPartitions(*df.columns)
 
 
@@ -183,33 +194,46 @@ def rf_predict(df: DataFrame, assembler, model) -> DataFrame:
     return out.drop("_features", *[f"_f_{c}" for c in _RF_FEATURES])
 
 
-def depth1_split_df(
-    df: DataFrame, score_col: str = "rf_prob", label_col: str = "keep"
+def split_thresholds_df(
+    df: DataFrame,
+    target_precision: float,
+    score_col: str = "rf_prob",
+    label_col: str = "keep",
 ) -> DataFrame:
-    """Exact depth-1 decision-tree split as a one-row DataFrame (cutoff).
+    """Both routing thresholds as a one-row DataFrame (cutoff, accept).
 
-    The reference routes reviewer attention with a depth-1 rpart tree on the
+    ``cutoff`` is the EXACT depth-1 decision-tree split on the score. The
+    reference routes reviewer attention with a depth-1 rpart tree on the
     RF score (pre_screen_names.R:88-114). MLlib's DecisionTreeClassifier
     approximates the split through maxBins quantile binning and reports a
-    bin boundary; this is the EXACT version — every observed score is a
-    candidate, the weighted-Gini argmin is computed with one groupBy + one
-    ordered window, and the returned cutoff is the UNROUNDED midpoint
-    between the winning score and the next distinct score (so ``<`` vs
-    ``≤`` downstream cannot flip a boundary row; rounding the midpoint
-    could push it past an adjacent score when two distinct scores differ
-    by less than the rounding step — display rounding belongs to callers).
+    bin boundary; here every observed score is a candidate, and the
+    returned cutoff is the UNROUNDED midpoint between the weighted-Gini
+    argmin score and the next distinct score (so ``<`` vs ``≤`` downstream
+    cannot flip a boundary row; rounding the midpoint could push it past an
+    adjacent score when two distinct scores differ by less than the
+    rounding step — display rounding belongs to callers). Degenerate
+    inputs (one distinct score, or a single class — no split has positive
+    gain) give 0.5.
 
-    Scale shape: the groupBy reduces the input to its DISTINCT scores
-    before the cumulative scan, which then runs in one task (a global
-    ordered window) — exactly right for labeled training samples
-    (~10²-10³ rows by construction; the reference's was ~1 000 pairs). An
-    exact split over millions of distinct scores would need a two-pass
-    distributed prefix sum instead; out of scope here.
+    ``accept`` is the precision-calibrated auto-accept bar: the smallest
+    score at which cumulative precision over the descending score order is
+    ≥ ``target_precision``, with ties accumulated as a whole group before
+    the precision test (a tie group either clears the bar together or not
+    at all). 1.0 (accept nothing automatically) when no prefix clears it.
 
-    Determinism: candidate counts are exact longs; the Gini arithmetic is
-    a fixed IEEE-double expression identical to the DuckDB oracle's, and
-    ties break on the smaller score. Degenerate inputs (one distinct
-    score, or a single class — no split has positive gain) return 0.5.
+    One pass: a groupBy reduces the input to its DISTINCT scores; one
+    ascending window over them gives the left counts (nl, nl1) and the
+    next score, an unordered window the totals (nt, nt1); the descending
+    cumulative counts are the exact suffix sums ``nt1 - nl1 + n1`` and
+    ``nt - nl + n``; one global aggregate picks both thresholds. The
+    windows run in one task — right for labeled training samples (~10²-10³
+    rows by construction; the reference's was ~1 000 pairs). An exact split
+    over millions of distinct scores would need a two-pass distributed
+    prefix sum instead; out of scope here.
+
+    Determinism: all counts are exact longs; the Gini arithmetic is a fixed
+    IEEE-double expression identical to the DuckDB oracle's, and ties break
+    on the smaller score.
     """
     g = (
         df.where(F.col(label_col).isNotNull())
@@ -219,35 +243,28 @@ def depth1_split_df(
             F.sum(F.col(label_col).cast("bigint")).alias("n1"),
         )
     )
-    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cand = (
-        g.select(
-            "s",
-            F.sum("n").over(w).alias("nl"),
-            F.sum("n1").over(w).alias("nl1"),
-            F.lead("s").over(Window.orderBy("s")).alias("s_next"),
-        )
-        .crossJoin(
-            F.broadcast(
-                g.agg(
-                    F.sum("n").alias("nt"), F.sum("n1").alias("nt1")
-                )
-            )
-        )
-        # right side must be non-empty, and one-class inputs (nt1 = 0 or
-        # nt1 = nt) have zero gain everywhere — no meaningful split
-        .where(
-            F.col("s_next").isNotNull()
-            & (F.col("nt1") > 0)
-            & (F.col("nt1") < F.col("nt"))
-        )
-        .selectExpr(
-            "s",
-            "s_next",
-            # weighted Gini impurity of the two children; all counts are
-            # exact integers, the double expression mirrors the DuckDB
-            # oracle token-for-token so both engines round identically
-            """round(
+    asc = Window.orderBy("s")
+    left = asc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    every = Window.partitionBy()
+    cand = g.select(
+        "s",
+        "n",
+        "n1",
+        F.sum("n").over(left).alias("nl"),
+        F.sum("n1").over(left).alias("nl1"),
+        F.lead("s").over(asc).alias("s_next"),
+        F.sum("n").over(every).alias("nt"),
+        F.sum("n1").over(every).alias("nt1"),
+    ).selectExpr(
+        "s",
+        "s_next",
+        # the right side must be non-empty (the guard also keeps ANSI mode
+        # from dividing by nt - nl = 0 on the last score), and one-class
+        # inputs (nt1 = 0 or nt1 = nt) have zero gain everywhere — no
+        # meaningful split. Weighted Gini impurity of the two children;
+        # all counts are exact integers, the double expression mirrors the
+        # DuckDB oracle token-for-token so both engines round identically
+        """CASE WHEN s_next IS NOT NULL AND nt1 > 0 AND nt1 < nt THEN round(
                  (cast(nl as double) * (1.0
                     - (cast(nl1 as double)/cast(nl as double))
                       * (cast(nl1 as double)/cast(nl as double))
@@ -258,115 +275,71 @@ def depth1_split_df(
                       * (cast(nt1-nl1 as double)/cast(nt-nl as double))
                     - (cast((nt-nl)-(nt1-nl1) as double)/cast(nt-nl as double))
                       * (cast((nt-nl)-(nt1-nl1) as double)/cast(nt-nl as double)))
-                 ) / cast(nt as double), 12) as impurity""",
-        )
+                 ) / cast(nt as double), 12) END as impurity""",
+        # the positives and all labelled rows at scores ≥ s
+        "nt1 - nl1 + n1 as ctp",
+        "nt - nl + n as cn",
     )
     # argmin by (impurity, s): min over a struct orders lexicographically by
     # field — exactly the tie-break rule — and degenerates to NULL on an
-    # empty candidate set (≤1 distinct score, or one class) → default 0.5
-    return cand.agg(F.min(F.struct("impurity", "s", "s_next")).alias("b")).select(
+    # empty candidate set → default 0.5
+    best = F.min(
+        F.when(F.col("impurity").isNotNull(), F.struct("impurity", "s", "s_next"))
+    ).alias("b")
+    clears = F.col("ctp").cast("double") / F.col("cn").cast("double") >= F.lit(
+        target_precision
+    )
+    return cand.agg(best, F.min(F.when(clears, F.col("s"))).alias("a")).select(
         F.coalesce(
             (F.col("b.s") + F.col("b.s_next")) / F.lit(2.0), F.lit(0.5)
-        ).alias("cutoff")
+        ).alias("cutoff"),
+        F.coalesce("a", F.lit(1.0)).alias("accept"),
     )
-
-
-def accept_threshold_df(
-    df: DataFrame,
-    target_precision: float,
-    score_col: str = "rf_prob",
-    label_col: str = "keep",
-) -> DataFrame:
-    """Precision-calibrated auto-accept bar as a one-row DataFrame (accept).
-
-    The smallest score at which cumulative precision over the descending
-    score order is ≥ ``target_precision``, with ties accumulated as a whole
-    group before the precision test (a tie group either clears the bar
-    together or not at all). One groupBy (reduces to distinct scores) +
-    one descending cumulative window over that reduced set — same scale
-    shape and caveat as ``depth1_split_df``; no driver-side sweep.
-    Returns 1.0 (accept nothing automatically) when no prefix clears the
-    bar.
-    """
-    g = (
-        df.where(F.col(label_col).isNotNull())
-        .groupBy(F.col(score_col).alias("s"))
-        .agg(
-            F.sum((F.col(label_col).cast("double") == 1.0).cast("bigint")).alias("tp"),
-            F.sum((F.col(label_col).cast("double") != 1.0).cast("bigint")).alias("fp"),
-        )
-    )
-    w = Window.orderBy(F.col("s").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ok = (
-        g.select(
-            "s", F.sum("tp").over(w).alias("ctp"), F.sum("fp").over(w).alias("cfp")
-        )
-        .where(
-            F.col("ctp").cast("double")
-            / (F.col("ctp") + F.col("cfp")).cast("double")
-            >= F.lit(target_precision)
-        )
-        .agg(F.coalesce(F.min("s"), F.lit(1.0)).alias("accept"))
-    )
-    return ok
 
 
 def rf_thresholds(
-    train: DataFrame,
-    num_trees: int = 500,
-    seed: int = 42,
-    target_precision: float = 0.98,
+    train: DataFrame, num_trees: int = 500, seed: int = 42
 ) -> tuple[float, float]:
     """(cutoff, accept_threshold) from one 80/20 split of ``_fit_layout``
-    of the labeled rows.
+    of the labeled rows, by ``split_thresholds_df`` over the held-out
+    scores in one Spark action.
 
     ``cutoff`` is the reference's reviewer-routing rule: a depth-1 decision
     tree on rf_prob (pre_screen_names.R:88-114) — below it, auto-reject.
-    Computed by ``depth1_split_df`` (exact distributed Gini argmin, not
-    MLlib's binned approximation; hash-oracled by the ``cutoff_split``
-    contract query).
+    Exact Gini argmin, not MLlib's binned approximation; hash-oracled by
+    the ``cutoff_split`` contract query.
 
     ``accept_threshold`` is the AUTO-ACCEPT bar: the smallest held-out
-    rf_prob at which cumulative precision is ≥ ``target_precision``
-    (``accept_threshold_df``). The reference sends everything above the
-    cutoff to HUMAN review; replacing that review with "accept at the same
-    cutoff" was measured (sf1 stress run) to admit borderline cross-entity
-    pairs whose transitive closure collapses cluster precision to ~0.01.
-    Acceptance must clear a stricter, precision-calibrated bar; the band
-    between the two thresholds stays keep=NULL — the review queue
-    (jobs/review_job.py emits it)."""
+    rf_prob at which cumulative precision is ≥ ``AUTO_ACCEPT_PRECISION``.
+    The reference sends everything above the cutoff to HUMAN review;
+    replacing that review with "accept at the same cutoff" was measured
+    (sf1 stress run) to admit borderline cross-entity pairs whose
+    transitive closure collapses cluster precision to ~0.01. Acceptance
+    must clear a stricter, precision-calibrated bar; the band between the
+    two thresholds stays keep=NULL — the review queue (jobs/review_job.py
+    emits it)."""
     labeled = _fit_layout(train.where(F.col("keep").isNotNull()))
     tr, te = labeled.randomSplit([0.8, 0.2], seed=seed)
     assembler, model = train_rf(tr, num_trees=num_trees, seed=seed)
-    # both thresholds read the held-out scores: score them once
-    scored = materialize(
-        rf_predict(te, assembler, model).select("rf_prob", "keep"), eager=True
-    )
-    cutoff = float(depth1_split_df(scored).first()["cutoff"])
-    accept = float(
-        accept_threshold_df(scored, target_precision).first()["accept"]
-    )
-    return cutoff, max(accept, cutoff)
+    row = split_thresholds_df(
+        rf_predict(te, assembler, model), AUTO_ACCEPT_PRECISION
+    ).first()
+    cutoff = float(row["cutoff"])
+    return cutoff, max(float(row["accept"]), cutoff)
 
 
 # ---------------------------------------------------------------------------
 # the pre-screen stage
 # ---------------------------------------------------------------------------
 
-def human_screen_rule(
-    df: DataFrame,
-    human_jw_threshold: float = HUMAN_JW_THRESHOLD,
-    human_cos_threshold: float = HUMAN_COS_THRESHOLD,
-) -> DataFrame:
+def human_screen_rule(df: DataFrame) -> DataFrame:
     """Rule 1 (pre_screen_names.R:154-160): keep=0 for far-apart human
     first names, THEN fillna the human scores — order is load-bearing."""
     return df.withColumn(
         "keep",
         F.when(
-            (F.col("human_jw_distance") > human_jw_threshold)
-            & (F.col("human_cosine_similarity") > human_cos_threshold)
+            (F.col("human_jw_distance") > HUMAN_JW_THRESHOLD)
+            & (F.col("human_cosine_similarity") > HUMAN_COS_THRESHOLD)
             & F.col("initials_match").isNull(),
             F.lit(0.0),
         ),
@@ -527,11 +500,7 @@ def pre_screen(
     labeled_pairs: DataFrame | None = None,
     reviewed: DataFrame | None = None,
     prior_clusters: DataFrame | None = None,
-    human_jw_threshold: float = HUMAN_JW_THRESHOLD,
-    human_cos_threshold: float = HUMAN_COS_THRESHOLD,
-    min_max_ratio: float = IMPORTANCE_MIN_MAX_RATIO,
     num_trees: int = 500,
-    seed: int = 42,
     auto_accept: bool = False,
     exact_percentiles: bool = True,
     name_parts: DataFrame | None = None,
@@ -539,7 +508,7 @@ def pre_screen(
     df = name_matches
 
     # 1. human-name screen, then fillna (order matters: :154-160)
-    df = human_screen_rule(df, human_jw_threshold, human_cos_threshold)
+    df = human_screen_rule(df)
 
     # 1b. cross-surname screen (extension; see cross_surname_screen docstring)
     df = cross_surname_screen(df, name_parts=name_parts)
@@ -576,7 +545,7 @@ def pre_screen(
 
     # 4. importance distance (:189-198)
     p70, p90 = count_percentiles(name_counts, exact=exact_percentiles)
-    dist_udf = importance_distance_udf(p90, p70, min_max_ratio)
+    dist_udf = importance_distance_udf(p90, p70, IMPORTANCE_MIN_MAX_RATIO)
     df = df.withColumn(
         "importance_dist",
         dist_udf(F.col("max_n").cast("double"), F.col("min_n").cast("double")),
@@ -600,12 +569,13 @@ def pre_screen(
 
     # 7. RF screen (:293-304). ``labeled_pairs`` carries (name, match, keep)
     # human labels (the fixture equivalent of training/leases_sample.csv);
-    # features are taken from the pair table just computed. ``train`` is
-    # checkpointed: the split and the final fit both read it.
+    # features are taken from the pair table just computed. Both tables
+    # are checkpointed: the training rows and the final scoring read the
+    # pair table; the split and the final fit read ``train``. Its fillna
+    # is not redundant with ``_with_feature_cols``: ``_fit_layout`` sorts
+    # on every column, so NULL vs 0.0 changes the row order of the fit.
     if labeled_pairs is not None:
-        df = df.withColumn(
-            "human_jw_distance", F.coalesce("human_jw_distance", F.lit(1.0))
-        )
+        df = materialize(df, eager=True)
         train = materialize(
             df.select("name", "match", *_RF_FEATURES)
             .join(
@@ -619,8 +589,8 @@ def pre_screen(
             .fillna({c: 0.0 for c in _RF_FEATURES}),
             eager=True,
         )
-        cutoff, accept_thr = rf_thresholds(train, num_trees=num_trees, seed=seed)
-        assembler, model = train_rf(train, num_trees=num_trees, seed=seed)
+        cutoff, accept_thr = rf_thresholds(train, num_trees=num_trees)
+        assembler, model = train_rf(train, num_trees=num_trees)
         df = rf_predict(df, assembler, model)
         df = df.withColumn(
             "keep",

@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from name_matching_spark.operators.prescreen import (
     _RF_FEATURES,
+    pre_screen,
     rf_predict,
     rf_thresholds,
+    split_thresholds_df,
     train_rf,
 )
 
@@ -186,39 +188,41 @@ def test_percentiles_approx_close_to_exact(spark):
 def test_depth1_split_exact(spark):
     # perfectly separated classes: the Gini argmin is the gap between the
     # two clusters, and the returned cutoff is the midpoint of that gap
-    from name_matching_spark.operators.prescreen import depth1_split_df
+    def depth1_split(df):
+        return split_thresholds_df(df, 0.98).first()["cutoff"]
 
     df = spark.createDataFrame(
         [(0.1, 0.0), (0.2, 0.0), (0.8, 1.0), (0.9, 1.0)], "rf_prob double, keep double"
     )
-    assert depth1_split_df(df).first()["cutoff"] == 0.5
+    assert depth1_split(df) == 0.5
 
     # degenerate: one distinct score -> no candidate split -> default 0.5
     one = spark.createDataFrame([(0.7, 1.0), (0.7, 0.0)], "rf_prob double, keep double")
-    assert depth1_split_df(one).first()["cutoff"] == 0.5
+    assert depth1_split(one) == 0.5
 
     # pure-label data: every split has zero gain -> no meaningful split,
     # default 0.5 (matches the old MLlib degenerate-tree fallback)
     pure = spark.createDataFrame(
         [(0.1, 1.0), (0.4, 1.0), (0.6, 1.0)], "rf_prob double, keep double"
     )
-    assert depth1_split_df(pure).first()["cutoff"] == 0.5
+    assert depth1_split(pure) == 0.5
 
     # the midpoint is returned UNROUNDED: adjacent scores closer than any
     # rounding step must still yield a cutoff strictly between them
     tight = spark.createDataFrame(
         [(0.4999996, 0.0), (0.4999998, 1.0)], "rf_prob double, keep double"
     )
-    c = depth1_split_df(tight).first()["cutoff"]
+    c = depth1_split(tight)
     assert 0.4999996 < c < 0.4999998
 
     # empty input: the keyless aggregate still returns its one row
     empty = spark.createDataFrame([], "rf_prob double, keep double")
-    assert [r["cutoff"] for r in depth1_split_df(empty).collect()] == [0.5]
+    assert [tuple(r) for r in split_thresholds_df(empty, 0.98).collect()] == [(0.5, 1.0)]
 
 
 def test_accept_threshold_tie_groups(spark):
-    from name_matching_spark.operators.prescreen import accept_threshold_df
+    def accept_threshold(df, target):
+        return split_thresholds_df(df, target).first()["accept"]
 
     # descending order: 0.9 (tp), 0.8 tie group (tp, fp) -> cumulative
     # precision at 0.8 is 2/3 < 0.75; at 0.9 it is 1.0 -> accept = 0.9
@@ -226,14 +230,14 @@ def test_accept_threshold_tie_groups(spark):
         [(0.9, 1.0), (0.8, 1.0), (0.8, 0.0), (0.5, 0.0)],
         "rf_prob double, keep double",
     )
-    assert accept_threshold_df(df, 0.75).first()["accept"] == 0.9
+    assert accept_threshold(df, 0.75) == 0.9
     # a looser bar admits the whole 0.8 tie group (2/3 >= 0.6)
-    assert accept_threshold_df(df, 0.6).first()["accept"] == 0.8
+    assert accept_threshold(df, 0.6) == 0.8
     # an unreachable bar accepts nothing automatically
-    assert accept_threshold_df(df, 1.1).first()["accept"] == 1.0
+    assert accept_threshold(df, 1.1) == 1.0
     # empty input: the keyless aggregate still returns its one row
     empty = spark.createDataFrame([], "rf_prob double, keep double")
-    assert [r["accept"] for r in accept_threshold_df(empty, 0.9).collect()] == [1.0]
+    assert [tuple(r) for r in split_thresholds_df(empty, 0.9).collect()] == [(0.5, 1.0)]
 
 
 def test_depth1_split_matches_bruteforce(spark):
@@ -241,11 +245,6 @@ def test_depth1_split_matches_bruteforce(spark):
     # argmin equals a literal O(k^2)-free numpy reference (cum-sum sweep,
     # same tie-break: lowest impurity, then smallest score)
     import numpy as np
-
-    from name_matching_spark.operators.prescreen import (
-        accept_threshold_df,
-        depth1_split_df,
-    )
 
     rng = random.Random(7)
     for trial in range(6):
@@ -273,11 +272,11 @@ def test_depth1_split_matches_bruteforce(spark):
             imp = np.round((nlc * gl + nr * gr) / nt, 12)
             i = int(np.lexsort((s[:-1], imp))[0])
             expect = (s[i] + s[i + 1]) / 2.0
-        got = depth1_split_df(df).first()["cutoff"]
-        assert got == expect, (trial, got, expect)
-
         # accept threshold vs a literal descending tie-group sweep
         target = 0.7
+        got, acc = split_thresholds_df(df, target).first()
+        assert got == expect, (trial, got, expect)
+
         acc_expect = 1.0
         tp = fp = 0
         best = None
@@ -288,5 +287,51 @@ def test_depth1_split_matches_bruteforce(spark):
                 best = v
         if best is not None:
             acc_expect = best
-        acc = accept_threshold_df(df, target).first()["accept"]
         assert acc == acc_expect, (trial, acc, acc_expect)
+
+
+def test_pre_screen_features_evaluated_once(spark):
+    # a labelled pre_screen pins its rule-1..6 feature table once: the
+    # training rows and the final scoring both read that checkpoint, so
+    # exactly one execution plans the double-count windows (row_number)
+    # and the importance-distance UDF (_dist)
+    rng = random.Random(3)
+    pairs, counts, labels = [], [], []
+    for i in range(40):
+        pos = i % 2 == 0
+        name, match = f"ALPHA{i:02d} HOLDINGS", f"ALPHA{i:02d} HOLDING"
+        pairs.append((
+            name, match, None, None, None,
+            float(rng.randint(1, 3) if pos else rng.randint(0, 1)),
+            (0.7 if pos else 0.3) + rng.uniform(-0.2, 0.2),
+            (0.1 if pos else 0.3) + rng.uniform(0, 0.1),
+            (0.7 if pos else 0.3) + rng.uniform(-0.2, 0.2),
+        ))
+        counts += [(name, rng.randint(1, 30)), (match, rng.randint(1, 30))]
+        if i < 30:
+            labels.append((name, match, 1 if pos else 0))
+    name_matches = spark.createDataFrame(
+        pairs,
+        "name string, match string, human_jw_distance double, "
+        "human_cosine_similarity double, initials_match boolean, "
+        "shared_words double, cosine_similarity double, jw_distance double, "
+        "token_sim double",
+    )
+    name_counts = spark.createDataFrame(counts, "name string, n bigint")
+    labeled = spark.createDataFrame(labels, "name string, match string, keep int")
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsCount()
+    out = pre_screen(
+        name_matches, None, name_counts, labeled_pairs=labeled, num_trees=5,
+        auto_accept=True,
+    ).collect()
+    assert len(out) == 40 and all(r["rf_prob"] is not None for r in out)
+    execs = store.executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if e.executionId() >= first
+    ]
+    assert sum("row_number()" in p for p in plans) == 1
+    assert sum("_dist(" in p for p in plans) == 1
