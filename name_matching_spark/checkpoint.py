@@ -4,10 +4,11 @@ The Spark analogue of the reference's make-timestamp DAG (makefile:33-152)
 and its append-only label caches (pre_screen_names.R:220-228,
 match_addresses.R:151-175), upgraded per the north rule:
 
-- every stage writes its output as parquet under ``<root>/<stage>/`` plus a
-  manifest line with an **input fingerprint** (hash of upstream stage
-  fingerprints + parameters — the content-addressed version of make's
-  timestamps);
+- every stage writes its output as plain parquet under ``<root>/<stage>/``
+  plus a manifest line with an **input fingerprint** (hash of upstream
+  stage fingerprints + parameters — the content-addressed version of
+  make's timestamps); nothing is registered in the session catalog, so a
+  later job reads a stage with ``spark.read.parquet(<root>/<stage>)``;
 - the stage's metrics come back with its one write and live in that
   manifest line: a 10-bin histogram per score column, observed by the write
   job itself (``DataFrame.observe``), and per-file row counts read from the
@@ -81,17 +82,8 @@ class StageResult:
 
 @dataclass
 class CheckpointManager:
-    """``num_buckets`` sizes every bucketed stage this manager writes; it is
-    part of each bucketed stage's LAYOUT, which is part of the stage
-    fingerprint — changing it therefore re-runs every bucketed stage and
-    its downstream chain (a checkpoint written under a different layout
-    must not satisfy a resume that plans zero-Exchange joins against this
-    one). Mixing bucket counts across stages that join each other forfeits
-    the zero-exchange plan."""
-
     root: str
     spark: SparkSession
-    num_buckets: int = 32
     results: dict[str, StageResult] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -107,39 +99,6 @@ class CheckpointManager:
 
     def _manifest_path(self) -> str:
         return os.path.join(self.root, "manifest.jsonl")
-
-    def _table_name(self, stage: str) -> str:
-        """Catalog table name for a bucketed stage — unique per checkpoint
-        root (two concurrent runs over different roots never collide) and
-        stable across sessions (a resume in a fresh session re-registers the
-        same name over the same files)."""
-        digest = hashlib.sha256(os.path.abspath(self.root).encode()).hexdigest()[:10]
-        return f"nm_ckpt_{digest}_{stage}"
-
-    def _register_bucketed(self, entry: dict, out_dir: str) -> DataFrame:
-        """Re-attach a bucketed stage's files to the session catalog.
-
-        Bucket layout lives in table METADATA, not in the parquet files —
-        a plain ``read.parquet`` of a bucketed directory silently loses the
-        layout and every downstream join re-shuffles. On resume in a fresh
-        session (in-memory catalog, empty) we re-issue the CREATE TABLE DDL
-        recorded in the manifest over the existing files; same-session hits
-        find the table already registered.
-        """
-        tbl = entry["table"]
-        if not self.spark.catalog.tableExists(tbl):
-            cols = ", ".join(entry["bucket_by"])
-            sort = (
-                f" SORTED BY ({', '.join(entry['sort_by'])})"
-                if entry.get("sort_by")
-                else ""
-            )
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({entry['schema_ddl']}) USING PARQUET "
-                f"CLUSTERED BY ({cols}){sort} INTO {entry['num_buckets']} BUCKETS "
-                f"LOCATION '{out_dir}'"
-            )
-        return self.spark.table(tbl)
 
     def _load_manifest(self) -> dict[str, dict]:
         out: dict[str, dict] = {}
@@ -165,8 +124,6 @@ class CheckpointManager:
         depends_on: list[str] | None = None,
         params: object = None,
         score_cols: list[str] | None = None,
-        bucket_by: list[str] | None = None,
-        sort_by: list[str] | None = None,
     ) -> DataFrame:
         """Run ``fn`` (or load its checkpoint) as stage ``name``.
 
@@ -179,28 +136,9 @@ class CheckpointManager:
         for a fingerprint the data does not actually carry (the manifest
         alone cannot guarantee that — it describes the PREVIOUS completed
         write, not whatever is on disk now).
-
-        ``bucket_by`` materializes the stage BUCKETED by those columns
-        (io.write_bucketed rationale): the shuffle on the stage's join key
-        happens once at write time, and every downstream/resume-path join
-        between stages bucketed on the same key plans with zero Exchange —
-        at 100 TB the canonical pair key stops being re-shuffled at every
-        stage boundary that crosses a resume. ``sort_by`` additionally sorts
-        within buckets so sort-merge joins skip their sort.
         """
         dep_fps = [self.results[d].fingerprint for d in (depends_on or [])]
-        # bucket layout is part of the stage identity: a checkpoint written
-        # unbucketed (or with different bucket columns / counts) must NOT
-        # satisfy a resume that expects zero-Exchange joins on this layout —
-        # a silent plain-parquet hit would permanently diverge fresh vs
-        # resumed physical plans.
-        layout = (
-            {"bucket_by": list(bucket_by), "sort_by": list(sort_by or []),
-             "num_buckets": self.num_buckets}
-            if bucket_by
-            else None
-        )
-        fp = fingerprint(name, params, layout, *dep_fps)
+        fp = fingerprint(name, params, *dep_fps)
         out_dir = os.path.join(self.root, name)
         manifest = self._load_manifest()
         entry = manifest.get(name)
@@ -216,10 +154,7 @@ class CheckpointManager:
             and os.path.exists(success)
             and disk_fp == fp
         ):
-            if entry.get("bucket_by"):
-                df = self._register_bucketed(entry, out_dir)
-            else:
-                df = self.spark.read.parquet(out_dir)
+            df = self.spark.read.parquet(out_dir)
             res = StageResult(
                 name, df, fp, True, entry["rows"], 0.0,
                 entry.get("files", {}), entry.get("hist", {}),
@@ -230,8 +165,7 @@ class CheckpointManager:
         t0 = time.time()
         df = fn()
         # the score histograms ride the write: the write job itself counts
-        # the bins (observed before write_bucketed's repartition, so both
-        # paths carry it); a null score falls in no bin
+        # the bins; a null score falls in no bin
         cols = [c for c in score_cols or [] if c in df.columns]
         obs = Observation()
         if cols:
@@ -242,20 +176,9 @@ class CheckpointManager:
                 F.count_if(F.col(c).isNotNull() & (bins[c] == b)).alias(f"{c}#{b}")
                 for c in cols for b in range(10)
             ])
-        if bucket_by:
-            from .io import write_bucketed
-
-            tbl = self._table_name(name)
-            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            write_bucketed(
-                df, tbl, list(bucket_by), self.num_buckets,
-                sort_cols=list(sort_by) if sort_by else None, path=out_dir,
-            )
-            out = self.spark.table(tbl)
-        else:
-            df.write.mode("overwrite").parquet(out_dir)
-            # the schema is known: reading it back infers nothing (no job)
-            out = self.spark.read.schema(df.schema).parquet(out_dir)
+        df.write.mode("overwrite").parquet(out_dir)
+        # the schema is known: reading it back infers nothing (no job)
+        out = self.spark.read.schema(df.schema).parquet(out_dir)
         wall_ms = (time.time() - t0) * 1000
 
         # per-file row counts from the committed footers, read on the
@@ -265,8 +188,8 @@ class CheckpointManager:
             for p in sorted(glob.glob(os.path.join(out_dir, "*.parquet")))
         }
         rows = sum(files.values())
-        # an empty bucketed write may never run the observed plan: an empty
-        # output's histogram is all zeros without asking for it
+        # an empty write may never run the observed plan: an empty output's
+        # histogram is all zeros without asking for it
         got = obs.get if cols and rows else {}
         hist = {c: [got.get(f"{c}#{b}", 0) for b in range(10)] for c in cols}
 
@@ -284,21 +207,6 @@ class CheckpointManager:
             "wall_ms": round(wall_ms, 1),
             "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        if bucket_by:
-            mentry.update(
-                {
-                    "bucket_by": bucket_by,
-                    "sort_by": sort_by or [],
-                    "num_buckets": self.num_buckets,
-                    "table": self._table_name(name),
-                    # layout metadata needed to re-register the table in a
-                    # fresh session's (empty, in-memory) catalog on resume
-                    "schema_ddl": ", ".join(
-                        f"`{f.name}` {f.dataType.simpleString()}"
-                        for f in out.schema.fields
-                    ),
-                }
-            )
         self._append_manifest(mentry)
         res = StageResult(name, out, fp, False, rows, wall_ms, files, hist)
         self.results[name] = res
@@ -337,10 +245,6 @@ def resolve_entities_checkpointed(
         lambda: extract_names(documents),
         params=("v1", corpus_fingerprint),
     )
-    # the pair-keyed stages materialize bucketed by the canonical pair key
-    # (and clusters by name): master⋈screened on resume, screened⋈clusters
-    # feeds, and merge_labels-style joins all reuse the write-time layout
-    # with zero Exchange (plan-asserted in tests/test_checkpoint.py)
     _mn_results: list = []
 
     def _build_master() -> DataFrame:
@@ -354,8 +258,6 @@ def resolve_entities_checkpointed(
         depends_on=["extract_names"],
         params=[],
         score_cols=["cosine_similarity", "jw_distance", "token_sim"],
-        bucket_by=["name", "match"],
-        sort_by=["name", "match"],
     )
     addr_pairs = (
         mgr.stage(
@@ -388,14 +290,10 @@ def resolve_entities_checkpointed(
         + (["match_addresses"] if addresses is not None else []),
         params=(num_trees, auto_accept, df_fingerprint(labels)),
         score_cols=["rf_prob", "importance_dist"],
-        bucket_by=["name", "match"],
-        sort_by=["name", "match"],
     )
     clusters = mgr.stage(
         "cluster",
         lambda: name_clusters(screened),
         depends_on=["pre_screen"],
-        bucket_by=["name"],
-        sort_by=["name"],
     )
     return mgr, clusters

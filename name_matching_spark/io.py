@@ -1,4 +1,4 @@
-"""Table I/O: schema-enforced scans, bucketed materialization, MERGE INTO.
+"""Table I/O: schema-enforced scans and MERGE INTO.
 
 The pipeline's inputs/outputs are plain parquet directories (the sandbox
 stand-in for Iceberg tables — snapshot/append semantics live in
@@ -7,13 +7,6 @@ checkpoint.py and streaming/ingest.py). This module adds the pieces a
 
 - ``read_documents``: schema-pinned scan of the interleaved span table
   (bad files fail fast instead of silently widening the schema).
-- ``write_bucketed``: persist a pair/cluster table
-  BUCKETED by its join key. Two tables bucketed the same way join with
-  ZERO exchanges — the shuffle happens once at write time and every
-  downstream join reuses the layout (verified by plan assertion in
-  tests/test_io.py). At 10^12 docs this converts the per-run shuffle of
-  the hottest join keys into a one-time layout cost, exactly like
-  Iceberg's bucket partition transform.
 - ``merge_into`` / ``read_merged``: a generation-directory managed table
   with Iceberg-``MERGE INTO`` semantics (SURVEY §2.11). Each merge writes
   a complete new snapshot generation and atomically renames it live, so a
@@ -43,38 +36,6 @@ DOCUMENTS_DDL = (
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
     """Schema-enforced scan of documents(doc_id, spans)."""
     return spark.read.schema(DOCUMENTS_DDL).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    path: str | None = None,
-) -> None:
-    """Materialize ``df`` as a bucketed (and optionally sorted) table.
-
-    Spark bucketing requires the table catalog (saveAsTable); the files
-    land under spark.sql.warehouse.dir unless ``path`` pins an external
-    location (the checkpoint layer does). ``sort_cols`` additionally sorts
-    within buckets so sort-merge joins skip their sort too.
-
-    The pre-write ``repartition`` on the bucket columns gives one shuffle
-    task per bucket — exactly ``num_buckets`` files per table instead of
-    (shuffle tasks × buckets) small files, which is the difference between
-    a usable and an unusable layout at 10^12 rows.
-    """
-    writer = (
-        df.repartition(num_buckets, *bucket_cols)
-        .write.mode("overwrite")
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.format("parquet").saveAsTable(table)
 
 
 # ---------------------------------------------------------------------------

@@ -112,18 +112,23 @@ def extract_name(names: DataFrame, name_col: str = "clean_name") -> DataFrame:
     return names.join(best, name_col, "left")
 
 
-def name_parts(names: DataFrame) -> DataFrame:
+def parse_names(names: DataFrame) -> DataFrame:
     """The dictionary parse of the distinct ``name`` column: (name,
-    clean_name, company, last_name, first_name, initials), checkpointed.
+    clean_name, company, last_name, first_name, initials), unpinned."""
+    df = names.select("name").distinct()
+    df = with_clean_name(df, "name", "clean_name", drop_common=False, human=True)
+    return extract_name(df, "clean_name")
+
+
+def name_parts(names: DataFrame) -> DataFrame:
+    """``parse_names``, checkpointed.
 
     One parse per pipeline: the ``ln:`` index, the human-score step and the
     pre-screen's cross-surname rule all read this table (VERDICT r2 item
     1); an eager checkpoint computes the extract chain (dict joins + window)
     once for every consumer instead of once per join branch (see PLANS.md,
     same defect class as the pair index)."""
-    df = names.select("name").distinct()
-    df = with_clean_name(df, "name", "clean_name", drop_common=False, human=True)
-    return materialize(extract_name(df, "clean_name"), eager=True)
+    return materialize(parse_names(names), eager=True)
 
 
 def _is_human():

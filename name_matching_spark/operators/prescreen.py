@@ -41,6 +41,7 @@ from ..constants import (
 )
 from ..functions.normalize import canonical_pair, word_count_expr
 from ..session import materialize
+from . import human
 
 _BIG = 1e10
 _RF_FEATURES = [
@@ -371,29 +372,22 @@ def cross_surname_screen(df: DataFrame, name_parts: DataFrame | None = None) -> 
     ``name_parts`` (name, clean_name, company, last_name — the human
     channel's checkpointed parse, human.name_parts) lets the
     dictionary parse over the name universe run once per pipeline; when
-    None (standalone use) it is recomputed from the pair table's distinct
-    names — one dictionary-join pass, identical result.
+    None (standalone use, or a resume that skipped ``match_names``) the same
+    parse (``human.parse_names``) runs unpinned on the pair table's names,
+    inside the plan of the feature table it feeds.
     """
     from ..constants import FIRST_NAMES, NICKNAMES
 
     first_tokens = sorted(
         set(FIRST_NAMES) | {s for s, _ in NICKNAMES} | {n for _, n in NICKNAMES}
     )
-    if name_parts is not None:
-        parts = name_parts.select(
-            F.col("name").alias("nm"), "clean_name", "company", "last_name"
+    if name_parts is None:
+        name_parts = human.parse_names(
+            df.select("name").unionByName(df.select(F.col("match").alias("name")))
         )
-    else:
-        from ..functions.normalize import with_clean_name
-        from .human import extract_name
-
-        names = (
-            df.select(F.col("name").alias("nm"))
-            .unionByName(df.select(F.col("match").alias("nm")))
-            .distinct()
-        )
-        names = with_clean_name(names, "nm", "clean_name", drop_common=False, human=True)
-        parts = extract_name(names, "clean_name")
+    parts = name_parts.select(
+        F.col("name").alias("nm"), "clean_name", "company", "last_name"
+    )
     toks = F.split(F.col("clean_name"), " ")
     # Screen-surname = the first ≥3-char token that is NOT a known first
     # name. This deliberately ignores the dictionary parse's last_name for

@@ -187,8 +187,8 @@ def materialize(df, eager: bool = True):
     """Cut lineage at a pipeline materialization point: the one way the
     batch path pins a table that more than one branch reads (the CC
     rounds, the prepared names, the human parse, the tf-idf weights, the
-    blocking indexes, the candidates and the kept master, the forest's
-    held-out scores).
+    blocking indexes, the candidates and the kept master, the pre-screen's
+    feature table and its labeled training rows).
     Uses the policy set by ``set_reliable_checkpoint_dir``; defaults to
     localCheckpoint. Nothing is released by hand: Spark's ContextCleaner
     frees a local checkpoint's blocks once no DataFrame references them,

@@ -90,10 +90,9 @@ def test_lineage_metrics(spark, tmp_path):
         assert len(hist["s"]) == 10 and hist["s"][0] == 10
         assert sum(hist["s"]) == 95  # the non-null count of s
 
-    # an empty bucketed write may write no file and never run the observed
-    # plan: zero rows, all-zero bins
-    mgr.stage("empty", lambda: build().where("id < 0"), score_cols=["s"],
-              bucket_by=["id"])
+    # an empty write may never run the observed plan: zero rows, all-zero
+    # bins
+    mgr.stage("empty", lambda: build().where("id < 0"), score_cols=["s"])
     assert mgr.results["empty"].rows == 0
     assert mgr.results["empty"].hist == {"s": [0] * 10}
 
@@ -101,8 +100,6 @@ def test_lineage_metrics(spark, tmp_path):
 def test_stage_runs_no_job_beyond_its_write(spark, tmp_path):
     """A stage's metrics come back with its write: the stage runs exactly
     the jobs of the same write done by hand, and no re-scan."""
-    from name_matching_spark.io import write_bucketed
-
     sc = spark.sparkContext
 
     def fn():
@@ -116,29 +113,16 @@ def test_stage_runs_no_job_beyond_its_write(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    for tag, bucket_by in [("plain", None), ("bucketed", ["id"])]:
-        mgr = CheckpointManager(str(tmp_path / f"ckpt_{tag}"), spark)
-        staged = jobs_in_group(
-            f"stage_{tag}",
-            lambda: mgr.stage("s", fn, score_cols=["s"], bucket_by=bucket_by),
-        )
-        by_hand_dir = str(tmp_path / f"by_hand_{tag}")
-
-        def write():
-            if bucket_by:
-                write_bucketed(fn(), "t_by_hand", bucket_by, mgr.num_buckets,
-                               path=by_hand_dir)
-            else:
-                fn().write.mode("overwrite").parquet(by_hand_dir)
-
-        try:
-            by_hand = jobs_in_group(f"by_hand_{tag}", write)
-        finally:
-            spark.sql("DROP TABLE IF EXISTS t_by_hand")
-        assert by_hand > 0
-        assert staged == by_hand, (tag, staged, by_hand)
-        res = mgr.results["s"]
-        assert res.rows == 100 and res.hist["s"] == [10] * 10
+    mgr = CheckpointManager(str(tmp_path / "ckpt"), spark)
+    staged = jobs_in_group("stage", lambda: mgr.stage("s", fn, score_cols=["s"]))
+    by_hand_dir = str(tmp_path / "by_hand")
+    by_hand = jobs_in_group(
+        "by_hand", lambda: fn().write.mode("overwrite").parquet(by_hand_dir)
+    )
+    assert by_hand > 0
+    assert staged == by_hand, (staged, by_hand)
+    res = mgr.results["s"]
+    assert res.rows == 100 and res.hist["s"] == [10] * 10
 
 
 def test_pipeline_resume_identical(spark, tmp_path):
@@ -175,63 +159,61 @@ def test_pipeline_resume_identical(spark, tmp_path):
     assert not mgr3.results["pre_screen"].skipped
     assert not mgr3.results["cluster"].skipped
 
-    # the resume-path master⋈screened join reuses the bucketed write-time
-    # layout: both stages are bucketed by the canonical pair key, so the
-    # join plans with ZERO exchanges (the 100-TB point of bucketing the
-    # stage boundary — no re-shuffle of the pair key across a resume)
-    master = mgr3.results["match_names"].df.select("name", "match", "jw_distance")
-    screened = mgr3.results["pre_screen"].df.select("name", "match", "keep")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = master.join(screened, ["name", "match"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == mgr3.results["pre_screen"].rows
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
 
+def test_fresh_manager_resume_registers_no_table(spark, tmp_path, monkeypatch):
+    # a resume in a new process is a fresh CheckpointManager on the same
+    # root: every stage is served from its parquet directory without running
+    # its builder, and nothing is left in the process-global session catalog
+    fx = ensure_fixtures("sf0.001")
+    docs = spark.read.parquet(os.path.join(fx, "documents_spans.parquet"))
+    addr = spark.read.parquet(os.path.join(fx, "addresses.parquet"))
+    labels = spark.read.parquet(os.path.join(fx, "labeled_pairs.parquet"))
+    root = str(tmp_path / "ckpt")
 
-def test_bucketed_stage_reregisters_in_fresh_catalog(spark, tmp_path):
-    # simulate resume in a NEW session (empty in-memory catalog): drop the
-    # catalog entry, rebuild the manager, and assert the stage re-registers
-    # the table from manifest DDL over the existing files — still bucketed
-    # (zero-exchange self-join), identical rows.
-    root = str(tmp_path / "ckpt_bucketed")
-    calls = []
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
 
-    def build():
-        calls.append(1)
-        return spark.range(500).selectExpr(
-            "concat('N', id) as name", "concat('M', id) as match",
-            "id * 0.001 as jw_distance",
-        )
+    def tables():
+        return {t.name for t in spark.catalog.listTables()}
 
-    m1 = CheckpointManager(root, spark)
-    df1 = m1.stage("pairs", build, bucket_by=["name", "match"],
-                   sort_by=["name", "match"])
-    tbl = m1._table_name("pairs")
-    assert spark.catalog.tableExists(tbl)
-    rows1 = sorted(r["name"] for r in df1.collect())
+    before = tables()
+    mgr1, _ = resolve_entities_checkpointed(
+        docs, root, addresses=addr, labels=labels, num_trees=10,
+        corpus_fingerprint="sf0.001",
+    )
+    written = {s: rows(r.df) for s, r in mgr1.results.items()}
 
-    spark.sql(f"DROP TABLE {tbl}")  # ← fresh-session catalog
-    m2 = CheckpointManager(root, spark)
-    df2 = m2.stage("pairs", build, bucket_by=["name", "match"],
-                   sort_by=["name", "match"])
-    assert calls == [1]  # skipped, not recomputed
-    assert m2.results["pairs"].skipped
-    assert sorted(r["name"] for r in df2.collect()) == rows1
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = df2.join(df2.select("name", "match"), ["name", "match"])
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    # the resume may not call any stage's builder
+    import name_matching_spark.operators.address as address
+    import name_matching_spark.operators.cc as cc
+    import name_matching_spark.operators.extract as extract
+    import name_matching_spark.operators.prescreen as prescreen
+    import name_matching_spark.pipeline as pipeline
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("a skipped stage ran its builder")
+
+    for mod, fn in [(extract, "extract_names"), (pipeline, "match_names"),
+                    (address, "match_addresses"), (prescreen, "pre_screen"),
+                    (cc, "name_clusters")]:
+        monkeypatch.setattr(mod, fn, refuse)
+    mgr2, _ = resolve_entities_checkpointed(
+        docs, root, addresses=addr, labels=labels, num_trees=10,
+        corpus_fingerprint="sf0.001",
+    )
+    assert set(mgr2.results) == set(written) == {
+        "extract_names", "match_names", "match_addresses", "pre_screen", "cluster"
+    }
+    for stage, res in mgr2.results.items():
+        assert res.skipped, stage
+        assert rows(res.df) == written[stage], stage
+        # a plain parquet read of the stage directory (what jobs/review_job.py
+        # does with pre_screen) sees the same rows
+        plain = spark.read.parquet(os.path.join(root, stage))
+        assert rows(plain) == written[stage], stage
+    after = tables()
+    assert after == before, after - before
+    assert not any(t.startswith("nm_ckpt_") for t in after)
 
 
 def test_stage_integrity_gate(spark, tmp_path):

@@ -1,38 +1,5 @@
-"""Bucketed-table layout: co-located joins plan with zero exchanges."""
-
-from pyspark.sql import functions as F
-
-from name_matching_spark.io import write_bucketed
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    # (warehouse dir is a static conf — managed tables land under the
-    # default spark-warehouse/, dropped at the end)
-    left = spark.range(2000).select(
-        F.concat(F.lit("N"), F.col("id")).alias("name"),
-        (F.col("id") % 97).alias("n"),
-    )
-    right = spark.range(2000).select(
-        F.concat(F.lit("N"), F.col("id")).alias("name"),
-        (F.col("id") % 13).alias("score"),
-    )
-    write_bucketed(left, "t_counts", ["name"], num_buckets=8)
-    write_bucketed(right, "t_scores", ["name"], num_buckets=8)
-
-    # bucketed-on-the-same-key join: the shuffle happened at write time
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_counts").join(spark.table("t_scores"), "name")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 2000
-        # correctness: values line up
-        row = joined.where("name = 'N42'").collect()[0]
-        assert (row["n"], row["score"]) == (42 % 97, 42 % 13)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS t_counts")
-        spark.sql("DROP TABLE IF EXISTS t_scores")
+"""MERGE INTO over generation tables: never-overwrite, atomic commit,
+deterministic duplicate-key winners."""
 
 
 def test_merge_into_generations(spark, tmp_path):
