@@ -234,7 +234,7 @@ def resolve_entities_checkpointed(
     from .operators.address import match_addresses
     from .operators.cc import name_clusters
     from .operators.extract import extract_names
-    from .operators.prescreen import APPROX_PERCENTILE_THRESHOLD, pre_screen
+    from .operators.prescreen import pre_screen
     from .pipeline import match_names
 
     spark = documents.sparkSession
@@ -268,9 +268,6 @@ def resolve_entities_checkpointed(
         if addresses is not None
         else None
     )
-    # the name count for the percentile switch is the extract stage's own
-    # row count (write or manifest): no Spark job, no fingerprint change
-    exact_pct = mgr.results["extract_names"].rows <= APPROX_PERCENTILE_THRESHOLD
     # a fresh match run hands its checkpointed parse to the cross-surname
     # screen; a resume that skipped match_names passes None (re-parse)
     name_parts = _mn_results[0].name_parts if _mn_results else None
@@ -283,7 +280,6 @@ def resolve_entities_checkpointed(
             labeled_pairs=labels,
             num_trees=num_trees,
             auto_accept=auto_accept,
-            exact_percentiles=exact_pct,
             name_parts=name_parts,
         ),
         depends_on=["match_names"]

@@ -662,24 +662,28 @@ FROM sp WHERE pos % 3 <> 2
 
 
 # ---------------------------------------------------------------------------
-# Monge-Elkan token similarity (ER scorer, §pairs.token_set_similarity)
+# Monge-Elkan token similarity (ER scorer, §strings.monge_elkan_similarity)
 # ---------------------------------------------------------------------------
 
 def q_token_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric Monge-Elkan token-set similarity over shared-word pairs."""
+    """Symmetric Monge-Elkan token-set similarity over shared-word pairs,
+    scored by the ``score_pairs`` kernel over the two clean names."""
     from .contract import _spark_prepped
     from .operators.blocking import shared_word_pairs
-    from .operators.pairs import token_set_similarity
+    from .operators.pairs import score_pairs
 
     prepped = _spark_prepped(spark, sf_dir)
-    pairs = shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
-    out = token_set_similarity(
-        pairs.select("name", "match"),
-        prepped.select("name", F.col("bag_clean").alias("bag")),
-        bag_col="bag",
-        out="token_sim",
+    clean = prepped.select("name", "clean_name")
+    pairs = (
+        shared_word_pairs(prepped, "bag_shared", max_block=1_000_000)
+        .select("name", "match")
+        .join(clean.withColumnsRenamed({"clean_name": "_clean_a"}), "name")
+        .join(clean.withColumnsRenamed({"name": "match", "clean_name": "_clean_b"}), "match")
     )
-    return out.where(F.col("token_sim").isNotNull()).select(
+    out = score_pairs(
+        pairs, [("token_sim", "monge_elkan_similarity", "_clean_a", "_clean_b")]
+    )
+    return out.where(~F.isnan("token_sim")).select(
         "name", "match", F.round("token_sim", 6).alias("token_sim")
     )
 

@@ -14,6 +14,9 @@ Semantics parity targets:
   human_cosine_similarity = 1 - distance, match_names.R:446-450).
 - ``jaro_winkler_similarity``: standard Winkler prefix bonus (p=0.1, max
   prefix 4) — an *additional* scorer channel beyond the reference.
+- ``monge_elkan_similarity``: symmetric Monge-Elkan over the cleaned names'
+  token bags with a Jaro base — the ``token_sim`` pre-screen feature, also
+  beyond the reference.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 import numpy as np
+import pandas as pd
 
 # Per-batch shared-encoding cache (see shared_encoding): when several
 # kernels score the same string columns (score_pairs runs 4 specs per
@@ -433,6 +437,64 @@ def jaro_winkler_similarity(
     else:
         prefix = np.zeros(len(a_arr), dtype=np.float64)
     return np.where(sim > boost_threshold, sim + prefix * p * (1.0 - sim), sim)
+
+
+def _bag_entries(s: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(row, token) of the distinct tokens of each string's bag, sorted by
+    row. A bag is ``split(s, " ")`` with empty tokens kept; the empty
+    string is the empty bag."""
+    rows = np.flatnonzero(s != "")
+    if not len(rows):
+        return rows, np.empty(0, dtype=object)
+    counts = np.char.count(s[rows].astype(str), " ") + 1
+    toks = np.array(" ".join(s[rows]).split(" "), dtype=object)
+    codes, uniq = pd.factorize(toks)
+    key = np.unique(np.repeat(rows, counts) * len(uniq) + codes)
+    return key // len(uniq), uniq[key % len(uniq)]
+
+
+def monge_elkan_similarity(a, b) -> np.ndarray:
+    """Symmetric Monge-Elkan similarity of two token bags with a Jaro base.
+
+    ME(A→B) is the mean over the distinct tokens of A of the best Jaro
+    similarity to any token of B; the result is least(ME(A→B), ME(B→A)),
+    NaN where either bag is empty (bags as in ``_bag_entries``). It tells
+    typo aliases (every token has a close counterpart → ~1) from pairs that
+    merely share one token (a common first name → ~0.7).
+
+    Batch-vectorized: one split over the batch, the within-row token cross
+    product by ``np.repeat``, ONE ``jaro_similarity`` call over all token
+    pairs, and the max-then-mean by ``reduceat`` / ``maximum.at``.
+    """
+    a = _as_str_array(a)
+    b = _as_str_array(b)
+    n = len(a)
+    out = np.full(n, np.nan)
+    ra, ta = _bag_entries(a)
+    rb, tb = _bag_entries(b)
+    na = np.bincount(ra, minlength=n)
+    nb = np.bincount(rb, minlength=n)
+    ok = (na > 0) & (nb > 0)
+    if not ok.any():
+        return out
+    ra, ta = ra[ok[ra]], ta[ok[ra]]
+    rb, tb = rb[ok[rb]], tb[ok[rb]]
+    # each A entry pairs with its row's B block, which starts at b_start
+    b_start = np.cumsum(nb * ok) - nb * ok
+    k = nb[ra]
+    a_block = np.cumsum(k) - k
+    ia = np.repeat(np.arange(len(ra)), k)
+    ib = np.arange(len(ia)) - np.repeat(a_block - b_start[ra], k)
+    sim = jaro_similarity(ta[ia], tb[ib])
+    best_a = np.maximum.reduceat(sim, a_block)
+    best_b = np.full(len(rb), -np.inf)
+    np.maximum.at(best_b, ib, sim)
+    rows = np.flatnonzero(ok)
+    # each row's entries are contiguous, so one reduceat sums them per row
+    me_ab = np.add.reduceat(best_a, np.cumsum(na[rows]) - na[rows]) / na[rows]
+    me_ba = np.add.reduceat(best_b, np.cumsum(nb[rows]) - nb[rows]) / nb[rows]
+    out[rows] = np.minimum(me_ab, me_ba)
+    return out
 
 
 def qgram_cosine_distance(a, b, q: int = 1, chunk: int | None = None) -> np.ndarray:

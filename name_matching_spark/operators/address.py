@@ -16,8 +16,9 @@ Semantics preserved:
 - non-PO scrub (:118-145): junk chars removed; rows starting with
   space/comma/dash/paren or containing N/A, ", ,", standalone NA, or "?"
   dropped.
-- matching (:180-233): group by coded address; addresses with a single
-  distinct name dropped; all C(n,2) canonical pairs within a group emitted.
+- matching (:180-233): group by coded address; all C(n,2) canonical pairs
+  within a group emitted (an address with a single distinct name yields
+  none), one row per pair: the smallest coded address the two share.
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import PO_NUM_REGEX, PO_REGEX
-from ..functions.normalize import canonical_pair
 
 
 def _squish(col):
@@ -112,22 +112,12 @@ def match_addresses(
             .withColumn("coded_address", F.coalesce("_cached", "coded_address"))
             .drop("_cached")
         )
+    # one self-join; name < match is already canonical, and a pair sharing
+    # several coded addresses keeps the smallest one
     named = coded.select("name", "coded_address").distinct()
-    multi = (
-        named.groupBy("coded_address")
-        .agg(F.countDistinct("name").alias("_n"))
-        .where(F.col("_n") > 1)
-        .select("coded_address")
-    )
-    named = named.join(multi, "coded_address")
-    a = named.select("coded_address", F.col("name").alias("_na"))
-    b = named.select("coded_address", F.col("name").alias("_nb"))
-    lo, hi = canonical_pair(F.col("_na"), F.col("_nb"))
     return (
-        a.join(b, "coded_address")
-        .where(F.col("_na") < F.col("_nb"))
-        .select(
-            lo.alias("name"), hi.alias("match"), F.col("coded_address").alias("address")
-        )
-        .dropDuplicates(["name", "match"])
+        named.join(named.withColumnRenamed("name", "match"), "coded_address")
+        .where(F.col("name") < F.col("match"))
+        .groupBy("name", "match")
+        .agg(F.min("coded_address").alias("address"))
     )

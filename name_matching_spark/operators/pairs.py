@@ -4,10 +4,14 @@ One `mapInPandas` pass computes every requested string metric for a batch of
 pairs — the kernels in functions/strings.py are numpy-vectorized across the
 batch, so Python-interpreter cost is O(batch count), not O(rows). This
 replaces the reference's per-pair loops (match_names.R:463-497 and the
-rowwise backfills at :729-792). Each task also pays a fixed worker set-up
-cost before its first batch; most of it was the worker re-reading every zip
-archive on its path (pyspark.zip, the Spark core jar), which
-``session.guard_zip_invalidation`` skips while an archive is unchanged.
+rowwise backfills at :729-792). Token-bag scores are kernels too:
+``monge_elkan_similarity`` crosses each pair's tokens inside the batch, so
+``token_sim`` needs no explode, cross join or aggregation in Spark.
+
+Each task also pays a fixed worker set-up cost before its first batch; most
+of it was the worker re-reading every zip archive on its path (pyspark.zip,
+the Spark core jar), which ``session.guard_zip_invalidation`` skips while
+an archive is unchanged.
 
 mapInPandas (not applyInPandas) on the already-joined pair table means no
 extra shuffle and no per-group memory blowup: Arrow batch size is capped in
@@ -30,6 +34,7 @@ _KERNELS = {
     "jaro_winkler_similarity": S.jaro_winkler_similarity,
     "unigram_cosine_distance": lambda a, b: S.qgram_cosine_distance(a, b, q=1),
     "trigram_cosine_distance": lambda a, b: S.qgram_cosine_distance(a, b, q=3),
+    "monge_elkan_similarity": S.monge_elkan_similarity,
 }
 
 
@@ -69,43 +74,3 @@ def score_pairs(
             yield pdf
 
     return df.mapInPandas(_score, schema=out_schema)
-
-
-def token_set_similarity(
-    pairs: DataFrame,
-    bags: DataFrame,
-    name_col: str = "name",
-    match_col: str = "match",
-    bag_col: str = "bag",
-    out: str = "token_sim",
-) -> DataFrame:
-    """Symmetric Monge-Elkan token-set similarity with a Jaro base.
-
-    ME(A→B) = mean over a∈A of max over b∈B of jaro(a, b);
-    out = least(ME(A→B), ME(B→A)). Distinguishes typo aliases (every token
-    has a close counterpart → ~1) from pairs that merely share one token
-    (e.g. a common first name → ~0.7). Set-oriented: explode both bags,
-    score the within-pair token cross product with the vectorized Jaro
-    kernel, aggregate max-then-mean — no per-row Python.
-
-    Output: ``pairs`` + ``out`` column (null when either bag is empty).
-    """
-    from pyspark.sql import functions as F
-
-    key = [name_col, match_col]
-    ta = (
-        pairs.select(*key)
-        .join(bags.select(F.col("name").alias(name_col), F.col(bag_col).alias("_ba")), name_col)
-        .select(*key, F.explode("_ba").alias("tok_a"))
-    )
-    tb = bags.select(F.col("name").alias(match_col), F.col(bag_col).alias("_bb"))
-    cross = ta.join(tb, match_col).select(*key, "tok_a", F.explode("_bb").alias("tok_b"))
-    scored = score_pairs(cross, [("_s", "jaro_similarity", "tok_a", "tok_b")])
-    best_a = scored.groupBy(*key, "tok_a").agg(F.max("_s").alias("_ba_best"))
-    me_ab = best_a.groupBy(*key).agg(F.avg("_ba_best").alias("_me_ab"))
-    best_b = scored.groupBy(*key, "tok_b").agg(F.max("_s").alias("_bb_best"))
-    me_ba = best_b.groupBy(*key).agg(F.avg("_bb_best").alias("_me_ba"))
-    me = me_ab.join(me_ba, key).select(
-        *key, F.least("_me_ab", "_me_ba").alias(out)
-    )
-    return pairs.join(me, key, "left")

@@ -26,8 +26,6 @@ loop.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -115,30 +113,14 @@ def importance_distance_udf(max_thr: float, min_thr: float, ratio: float):
     return pandas_udf(_dist, DoubleType())
 
 
-# above this many names, the resolve driver switches the p70/p90 computation
-# to approx_percentile: exact percentile buffers every value in a single
-# aggregation state, which is a memory bomb at 10^9+ distinct names, while
-# the sketch is O(accuracy) memory with ±1e-4 rank error — far inside the
-# heuristic p70/p90 decision noise (VERDICT r1 item 4 / ADVICE r1)
-APPROX_PERCENTILE_THRESHOLD = 10_000_000
-
-
-def count_percentiles(
-    name_counts: DataFrame, exact: bool = True, accuracy: int = 10_000
-) -> tuple[float, float]:
-    """(p70, p90) of the per-name counts. ``exact=True`` is the exact
-    interpolated percentile, same as R quantile type 7
-    (pre_screen_names.R:189-192) — keeps DuckDB-oracle parity. ``False``
-    uses the t-digest-style approx_percentile sketch for bounded memory at
-    scale."""
-    if exact:
-        p70_expr, p90_expr = "percentile(n, 0.7)", "percentile(n, 0.9)"
-    else:
-        p70_expr = f"approx_percentile(n, 0.7, {accuracy})"
-        p90_expr = f"approx_percentile(n, 0.9, {accuracy})"
+def count_percentiles(name_counts: DataFrame) -> tuple[float, float]:
+    """(p70, p90) of the per-name counts: the exact interpolated percentile,
+    same as R quantile type 7 (pre_screen_names.R:189-192), which keeps
+    DuckDB-oracle parity. Spark's ``percentile`` buffers a map from value to
+    count, so its memory is O(distinct counts), not O(names)."""
     row = name_counts.agg(
-        F.expr(p70_expr).alias("p70"),
-        F.expr(p90_expr).alias("p90"),
+        F.expr("percentile(n, 0.7)").alias("p70"),
+        F.expr("percentile(n, 0.9)").alias("p90"),
     ).collect()[0]
     return float(row["p70"]), float(row["p90"])
 
@@ -496,7 +478,6 @@ def pre_screen(
     prior_clusters: DataFrame | None = None,
     num_trees: int = 500,
     auto_accept: bool = False,
-    exact_percentiles: bool = True,
     name_parts: DataFrame | None = None,
 ) -> DataFrame:
     df = name_matches
@@ -538,7 +519,7 @@ def pre_screen(
     )
 
     # 4. importance distance (:189-198)
-    p70, p90 = count_percentiles(name_counts, exact=exact_percentiles)
+    p70, p90 = count_percentiles(name_counts)
     dist_udf = importance_distance_udf(p90, p70, IMPORTANCE_MIN_MAX_RATIO)
     df = df.withColumn(
         "importance_dist",

@@ -8,8 +8,9 @@ scores. Spark-first re-expression: ONE candidate pass.
   index, and one cap-and-split self-join (``pairs_from_index``) generates
   each candidate pair once, with the set of families that found it;
 - every score is computed once per candidate (SQL scores in bulk, the
-  Python kernels in one pass), and a pair is kept when any channel's own
-  rule holds — so there is no merge and no backfill;
+  Python kernels, the Monge-Elkan ``token_sim`` among them, in one pass),
+  and a pair is kept when any channel's own rule holds — so there is no
+  merge and no backfill;
 - names/bags are computed once and reused by every family.
 
 Channel → key family (``score_candidates`` has the rules):
@@ -50,7 +51,6 @@ from .operators.human import (
     name_parts,
     score_first_names,
 )
-from .operators.pairs import token_set_similarity
 from .operators.phonetic import with_metaphone_key
 from .operators.tfidf import paired_cosine, token_weights
 
@@ -121,10 +121,10 @@ def match_names(names: DataFrame) -> MatchNamesResult:
     plus token_sim.
     """
     # EAGER CHECKPOINT, not persist: prepped is embedded in every key
-    # family, the side joins and token_sim. A cached relation keeps its
-    # full analyzed subtree in each consumer's plan, and the resulting plan
-    # blow-up measured 2.5× e2e at sf0.1 (98 s vs 39 s); checkpoint
-    # truncation keeps every consumer's plan a flat scan.
+    # family and the side joins. A cached relation keeps its full analyzed
+    # subtree in each consumer's plan, and the resulting plan blow-up
+    # measured 2.5× e2e at sf0.1 (98 s vs 39 s); checkpoint truncation
+    # keeps every consumer's plan a flat scan.
     prepped = materialize(prepare_names(names), eager=True)
     parts = name_parts(prepped.select("name"))
     master = score_candidates(prepped, parts, jaro_index(prepped))
@@ -167,9 +167,10 @@ def score_candidates(
     ``tok:``, ``sw:`` and ``ln:`` keys join them in one index, and
     ``candidate_families`` yields each candidate once with its families.
     Every score is computed once per candidate: the SQL ones in bulk, the
-    four Python kernels (clean-name and raw-name Jaro, the two first-name
-    kernels) in one ``score_pairs`` pass. A candidate is kept when any
-    channel's own rule holds:
+    five Python kernels (clean-name and raw-name Jaro, the two first-name
+    kernels, the clean names' Monge-Elkan ``token_sim``) in one
+    ``score_pairs`` pass. A candidate is kept when any channel's own rule
+    holds:
 
     - it shares an ``sw:`` key;
     - it shares a ``tok:`` key and cosine ≥ COSINE_THRESHOLD;
@@ -183,7 +184,10 @@ def score_candidates(
     the paired tf-idf cosine (0.0 without a shared token). ``jw_distance``
     is the clean-name Jaro when the Jaro rule fired, else the raw-name
     Jaro (:786-792). The human columns are null unless the pair shares an
-    ``ln:`` key.
+    ``ln:`` key. ``token_sim`` (an extension beyond the reference's
+    features: the pre-screen feature that separates typo aliases from
+    shared-first-name coincidences) is null where either clean name is
+    empty.
     """
     # ONE tf-idf weights table: its (name, token) rows are the tok: keys
     # and it scores every candidate (deviation from the reference, which
@@ -220,10 +224,11 @@ def score_candidates(
         [
             ("_jw_clean", "jaro_distance", "_clean_a", "_clean_b"),
             ("_jw_raw", "jaro_distance", "name", "match"),
+            ("_token_sim", "monge_elkan_similarity", "_clean_a", "_clean_b"),
         ],
     )
     jaro_hit = F.col("jaro") & (F.col("_jw_clean") <= JARO_THRESHOLD)
-    kept = scored.where(
+    return scored.where(
         (F.col("sw") > 0)
         | (F.col("tok") & (F.col("cosine_similarity") >= COSINE_THRESHOLD))
         | jaro_hit
@@ -240,17 +245,7 @@ def score_candidates(
         .otherwise(F.col("_jw_raw"))
         .alias("jw_distance"),
         *[F.when(F.col("ln"), F.col(c)).alias(c) for c in HUMAN_COLUMNS],
-    )
-    # token_sim reads the kept table twice (its pair list and the join
-    # back): one checkpoint runs the candidate pass and its Python kernels
-    # once.
-    master = materialize(kept, eager=True)
-    # token_sim: symmetric Monge-Elkan over cleaned bags (extension beyond
-    # the reference's feature set — the RF feature that separates typo
-    # aliases from shared-first-name coincidences; see pairs.py)
-    return token_set_similarity(
-        master, prepped.select("name", F.col("bag_clean").alias("bag")),
-        bag_col="bag", out="token_sim",
+        F.when(~F.isnan("_token_sim"), F.col("_token_sim")).alias("token_sim"),
     )
 
 

@@ -79,6 +79,21 @@ def test_match_addresses_pairs_and_single_name_drop(spark):
     assert all(r["address"] == "500 ENERGY PLAZA, HOUSTON, TX" for r in rows)
 
 
+
+def test_match_addresses_one_row_per_pair(spark):
+    # a pair sharing two coded addresses is one row, with the smaller
+    # address, whatever order the rows arrive in
+    rows = [
+        ("ACME OIL", "9 Zeta Rd"),
+        ("ACME OIL CO", "9 ZETA RD"),
+        ("ACME OIL", "1 Alpha St"),
+        ("ACME OIL CO", "1 ALPHA ST"),
+    ]
+    for order in (rows, rows[::-1]):
+        df = spark.createDataFrame(order, ["name", "address"]).repartition(3)
+        got = [tuple(r) for r in match_addresses(df).collect()]
+        assert got == [("ACME OIL", "ACME OIL CO", "1 ALPHA ST")]
+
 def test_code_addresses_cache_wins(spark):
     df = spark.createDataFrame(
         [("A", "123 Main St"), ("B", "9 New Rd")], ["name", "address"]

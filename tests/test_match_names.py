@@ -112,6 +112,9 @@ def test_channel_rules(spark):
         assert r["human_cosine_similarity"] == (
             None if hcos is None else pytest.approx(hcos, abs=1e-12)), pair
         assert r["initials_match"] is init, pair
+        # token_sim: Monge-Elkan over the two cleaned bags
+        me = S.monge_elkan_similarity(*([" ".join(CLEAN_BAGS[n])] for n in pair))[0]
+        assert r["token_sim"] == pytest.approx(me, abs=1e-12), pair
 
 
 def _join_nodes(plan: str):
@@ -127,6 +130,20 @@ def _join_nodes(plan: str):
     return out
 
 
+def _plans_since(spark, action):
+    """The physical plan description of every SQL execution ``action``
+    runs, checkpoints included."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsCount()
+    action()
+    execs = store.executionsList()
+    return [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).executionId() >= first
+    ]
+
+
 def test_one_candidate_self_join(spark):
     # every SQL execution match_names runs, checkpoints included: the only
     # pair-generating join (an equi-join with a pair-order condition on
@@ -135,17 +152,11 @@ def test_one_candidate_self_join(spark):
     import re
 
     names = spark.createDataFrame([(n,) for n in UNIVERSE], "name string")
-    store = spark._jsparkSession.sharedState().statusStore()
-    first = store.executionsCount()
-    match_names(names).master.collect()
-    execs = store.executionsList()
     joins = set()
-    for i in range(execs.size()):
-        e = execs.apply(i)
-        if e.executionId() >= first:
-            # the AQE description lists the final and the initial plan:
-            # one join appears in both with the same attribute ids
-            joins |= set(_join_nodes(e.physicalPlanDescription()))
+    for plan in _plans_since(spark, lambda: match_names(names).master.collect()):
+        # the AQE description lists the final and the initial plan: one
+        # join appears in both with the same attribute ids
+        joins |= set(_join_nodes(plan))
 
     def bare(keys):
         return {re.sub(r"#\d+L?", "", k) for k in keys}
@@ -155,6 +166,22 @@ def test_one_candidate_self_join(spark):
     assert len(task_key_joins) == 1, task_key_joins
     assert [bare(k) for k, _ in pair_joins] == [{"task_key"}], pair_joins
     assert not [k for k, _ in joins if bare(k) & {"last_name", "_id"}]
+
+
+def test_one_python_pass(spark):
+    # every Python kernel of match_names, the Monge-Elkan token_sim
+    # included, runs in the one score_pairs pass: one SQL execution plans
+    # a MapInPandas, and its final plan holds one such node
+    import re
+
+    names = spark.createDataFrame([(n,) for n in UNIVERSE], "name string")
+    plans = [
+        p for p in _plans_since(spark, lambda: match_names(names).master.collect())
+        if "MapInPandas" in p
+    ]
+    assert len(plans) == 1, len(plans)
+    final = plans[0].split("== Initial Plan ==")[0]
+    assert len(re.findall(r"- MapInPandas \(\d+\)", final)) == 1, final
 
 
 def test_token_weights_join_once(spark):

@@ -17,6 +17,7 @@ from name_matching_spark.functions.strings import (
     jaro_distance,
     jaro_similarity,
     jaro_winkler_similarity,
+    monge_elkan_similarity,
     qgram_cosine_distance,
 )
 
@@ -225,6 +226,54 @@ def test_jaro_winkler_boost_threshold():
     ]
     assert np.allclose(got, want, atol=1e-9)
 
+
+
+def _monge_elkan_reference(a, b):
+    """Scalar symmetric Monge-Elkan over split(" ") bags: least of the two
+    directions' mean (over distinct tokens) of the best Jaro; NaN for an
+    empty clean name."""
+    bag_a, bag_b = (s.split(" ") if s else [] for s in (a, b))
+    if not bag_a or not bag_b:
+        return math.nan
+
+    def me(xs, ys):
+        best = [max(float(jaro_similarity([x], [y])[0]) for y in ys) for x in set(xs)]
+        return sum(best) / len(best)
+
+    return min(me(bag_a, bag_b), me(bag_b, bag_a))
+
+
+def test_monge_elkan_against_scalar_reference():
+    cases = [
+        ("ACME OIL", "ACME OIL CO"),          # asymmetric bags
+        ("SMITH SMITH JONES", "SMYTH"),        # duplicate tokens, 3×1
+        ("SMYTH", "SMITH SMITH JONES"),
+        ("ACME", "ACNE OIL GAS CO"),           # 1×N
+        ("", "ACME"),                          # empty clean name
+        ("ACME", ""),
+        ("", ""),
+        ("ACME  OIL", "ACME OIL"),             # "" token from a double space
+        ("A  ", "  "),
+        ("KRONVALD", "KRONVALT"),
+    ]
+    # a random batch whose token cross products exceed one kernel chunk
+    rng = random.Random(7)
+    vocab = ["ACME", "ACNE", "OIL", "GAS", "CO", "SMITH", "SMYTH", "A", ""]
+    for _ in range(2000):
+        cases.append(tuple(
+            " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 5)))
+            for _ in range(2)
+        ))
+    got = monge_elkan_similarity([a for a, _ in cases], [b for _, b in cases])
+    want = np.array([_monge_elkan_reference(a, b) for a, b in cases])
+    assert np.array_equal(np.isnan(got), np.isnan(want))
+    assert np.allclose(got, want, atol=1e-12, equal_nan=True)
+    assert math.isnan(got[4]) and math.isnan(got[5]) and math.isnan(got[6])
+    # the duplicate SMITH counts once: ME(A→B) is the mean over {SMITH,
+    # JONES}, not over three tokens; the measure is symmetric
+    j_smith, j_jones = jaro_similarity(["SMITH", "JONES"], ["SMYTH", "SMYTH"])
+    assert got[1] == pytest.approx((j_smith + j_jones) / 2, abs=1e-12)
+    assert got[1] == got[2]
 
 def test_udf_task_skips_rereading_unchanged_zips(spark):
     # PySpark's worker calls importlib.invalidate_caches() at the start of
